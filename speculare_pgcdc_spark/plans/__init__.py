@@ -12,6 +12,7 @@ from speculare_pgcdc_spark.plans.lints import (  # noqa: F401
     broadcast_hash_join_count,
     exchange_count,
     has_python_eval,
+    optimized_plan_string,
     plan_string,
     pushed_filters,
     read_schemas,

@@ -15,6 +15,13 @@ def plan_string(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def optimized_plan_string(df: DataFrame) -> str:
+    """Optimized logical plan: names the relation each leaf reads
+    (LocalRelation: rows held in the plan itself; LogicalRDD: a
+    parallelized RDD whose rows come from Python)."""
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
 def pushed_filters(df: DataFrame) -> str:
     """Concatenated PushedFilters content across the plan's file scans
     (raw text; assert with substring checks — filter expressions contain

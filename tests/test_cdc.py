@@ -139,6 +139,10 @@ def test_route_fans_out_to_multiple_subscribers(spark):
     # insert -> subs 1 and 2; delete -> sub 3 only (filtered sub 2 cannot
     # match a delete); sub 4 wrong table
     assert got == [1, 2, 3]
+    # an empty registry keeps the typed columns and routes nothing
+    empty = subscriptions_df(spark, [], TABLES)
+    assert empty.dtypes == subs.dtypes and len(empty.dtypes) == 6
+    assert route(changes, empty).count() == 0
 
 
 def test_filter_predicate_null_semantics(spark):

@@ -912,6 +912,7 @@ def test_fanout_partitions_matches_driver_path(spark, tmp_path):
         (1, 10, 0, "s1-a"),
         (2, 10, 0, "s2-a"),
         (1, 20, 1, "s1-c"),
+        (1, None, 0, "s1-null"),  # null seq sorts first, as in Spark
         (1, 20, 0, "s1-b"),
         (3, 10, 0, "s3-a"),
     ]
@@ -940,7 +941,7 @@ def test_fanout_partitions_matches_driver_path(spark, tmp_path):
         exe = read_outbox(exe_dir, sub)
         assert drv == exe, f"sub {sub}: driver {drv} != executor {exe}"
     # and the order is WAL order, not shuffle order
-    assert read_outbox(drv_dir, 1) == ["s1-a", "s1-b", "s1-c"]
+    assert read_outbox(drv_dir, 1) == ["s1-null", "s1-a", "s1-b", "s1-c"]
 
 
 def test_fanout_modes_through_streaming_query(spark, tmp_path):
@@ -1080,25 +1081,33 @@ def test_fanout_partitions_tie_order_deterministic(spark, tmp_path):
     """Rows tying on (seq, chg_idx) — e.g. a seq-less file feed — must
     still deliver in a deterministic order in partitions mode, so a
     crash-replay rewrites an idempotent batch file with IDENTICAL line
-    order (consumers may have tailed the first write)."""
+    order (consumers may have tailed the first write). The driver and
+    auto paths break the tie the same way (change_json)."""
     from speculare_pgcdc_spark.streaming.fanout import (
+        fanout_auto,
+        fanout_batch,
         fanout_partitions,
         idempotent_outbox_deliver,
         read_outbox,
     )
 
     rows = [(1, 0, 0, f"payload-{i:02d}") for i in (5, 1, 9, 3, 7)]
+    rows += [(2, 0, 0, f"p2-{i:02d}") for i in (4, 8, 2)]
     outs = []
-    for attempt in range(2):
+    for attempt, fan in enumerate(
+        (fanout_partitions, fanout_partitions, fanout_batch, fanout_auto)
+    ):
         routed = spark.createDataFrame(
             rows, "sub_id int, seq bigint, chg_idx int, change_json string"
         ).repartition(7)  # scramble physical order differently per run
         out_dir = str(tmp_path / f"o{attempt}")
-        fanout_partitions(
-            routed, idempotent_outbox_deliver(out_dir), batch_id=1
-        )
-        outs.append(read_outbox(out_dir, 1))
-    assert outs[0] == outs[1] == sorted(p for _, _, _, p in rows)
+        fan(routed, idempotent_outbox_deliver(out_dir), batch_id=1)
+        outs.append((read_outbox(out_dir, 1), read_outbox(out_dir, 2)))
+    assert all(o == outs[0] for o in outs), outs
+    assert outs[0] == (
+        sorted(p for s, _, _, p in rows if s == 1),
+        sorted(p for s, _, _, p in rows if s == 2),
+    )
 
 
 def test_transform_with_state_running_count(spark, tmp_path):
@@ -1216,6 +1225,57 @@ def test_fanout_auto_selects_path_by_batch_size(spark, tmp_path, monkeypatch):
         == fo.read_outbox(out_big, 1)
         == ["a", "c"]
     )
+
+
+def test_fanout_auto_small_batch_evaluates_routing_once(spark, tmp_path):
+    """A small routed microbatch is evaluated ONCE in auto mode: one
+    bounded Arrow collect both sizes and delivers the batch — no
+    count pass, no groupBy shuffle. The subscriptions frame is a
+    LocalRelation, so the routing join's broadcast side holds no
+    Python rows; Spark still collects it through one JVM-only job
+    (BroadcastExchangeExec builds the relation from an RDD). Adaptive
+    execution fills the batch's cache in its own job and runs the
+    collect over the cache in another, so the batch runs three
+    single-stage jobs in all."""
+    from speculare_pgcdc_spark.plans import optimized_plan_string
+    from speculare_pgcdc_spark.streaming.fanout import fanout_auto
+
+    subs = subscriptions_df(
+        spark, [(1, "insert:events_a"), (2, "*:events_a")], FEED_TABLES
+    )
+    plan = optimized_plan_string(subs)
+    assert plan.startswith("LocalRelation") and "LogicalRDD" not in plan
+
+    feed = str(tmp_path / "feed" / "f1.json")
+    _write_jsonl(
+        feed,
+        [
+            _wal2json_line("insert", "events_a", ["id"], [i])
+            for i in range(4)
+        ],
+    )
+    changes = parse_wal2json(
+        spark.read.text(feed).withColumnRenamed("value", "payload")
+    ).withColumnRenamed("table", "table_name")
+    routed = route(changes, subs)
+    assert routed.rdd.getNumPartitions() == 1
+
+    got = {}
+    sc = spark.sparkContext
+    group = "fanout-auto-small-batch"
+    sc.setJobGroup(group, "fanout_auto over a small batch")
+    try:
+        fanout_auto(routed, lambda sub, payloads: got.update({sub: payloads}))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # job events reach the status store through the async listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    assert len(jobs) == 3, jobs
+    # single-stage jobs: no shuffle anywhere on the small-batch path
+    assert all(len(tracker.getJobInfo(j).stageIds) == 1 for j in jobs)
+    assert sorted(got) == [1, 2] and got[1] == got[2] and len(got[1]) == 4
 
 
 def test_fanout_default_mode_is_auto():
@@ -1635,6 +1695,59 @@ def test_engine_watch_reports_cdc_metrics_in_progress(spark, tmp_path):
     assert sum(m["n_changes"] for m in metrics) == 2
     assert sum(m["n_inserts"] for m in metrics) == 1
     assert sum(m["n_updates"] for m in metrics) == 1
+
+
+def test_engine_watch_cdc_metrics_exact_on_overflowing_batch(
+    spark, tmp_path, monkeypatch
+):
+    """A batch over AUTO_DRIVER_MAX_ROWS takes the executor path after
+    the sizing collect; the routed batch must still be evaluated once,
+    or the observe() counters count each change once per read."""
+    import json as _json
+
+    from speculare_pgcdc_spark.engine import Engine
+    from speculare_pgcdc_spark.streaming import fanout
+    from speculare_pgcdc_spark.streaming.metrics import CDC_METRICS
+
+    monkeypatch.setattr(fanout, "AUTO_DRIVER_MAX_ROWS", 1)
+    feed_dir = str(tmp_path / "feed")
+    os.makedirs(feed_dir, exist_ok=True)
+    changes = [
+        {"kind": "insert", "table": "events_a",
+         "columnnames": ["id"], "columnvalues": [str(i)]}
+        for i in range(3)
+    ] + [
+        {"kind": "update", "table": "events_a",
+         "columnnames": ["id"], "columnvalues": ["9"]},
+    ]
+    with open(os.path.join(feed_dir, "f0.jsonl"), "w") as f:
+        f.write(_json.dumps({"change": changes}) + "\n")
+
+    out = tmp_path / "out"
+    eng = Engine(spark=spark, tables=["events_a"])
+    eng.subscribe(1, "insert,update:events_a")
+    eng.subscribe(2, "insert:events_a")
+    q = eng.watch(
+        feed_dir, str(out), str(tmp_path / "ckpt"), available_now=True
+    )
+    try:
+        q.awaitTermination(120)
+    finally:
+        q.stop()
+    metrics = [
+        p["observedMetrics"][CDC_METRICS]
+        for p in (q.recentProgress or [])
+        if p.get("observedMetrics", {}).get(CDC_METRICS)
+    ]
+    assert metrics, "watch progress carried no cdc_metrics"
+    assert sum(m["n_changes"] for m in metrics) == 4
+    assert sum(m["n_inserts"] for m in metrics) == 3
+    assert sum(m["n_updates"] for m in metrics) == 1
+    delivered = {
+        sub: len((out / sub / "outbox.jsonl").read_text().splitlines())
+        for sub in ("1", "2")
+    }
+    assert delivered == {"1": 4, "2": 3}
 
 
 def test_streaming_cusum_matches_python_fold(spark, tmp_path):
