@@ -22,52 +22,16 @@ PLAN is the part that carries over.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from speculare_pgcdc_spark.catalog import eval_once
-
-#: partition-column name of the banded snapshot layout (a RESERVED
-#: name: user columns may not collide). Not underscore-prefixed —
-#: Spark's partition discovery skips `_`/`.`-prefixed directories, so
-#: `band=<i>` it is; the scalar `_band_width` marker file IS
-#: underscore-prefixed precisely so readers ignore it.
-BAND_COL = "band"
-
-
-def _swap_recover(d: str) -> None:
-    """Recover a dir-swap consumer's directory after a crash: a missing
-    live dir with a surviving ``.old`` means the crash hit between the
-    two renames — restore; a surviving ``.old`` NEXT TO the live dir is
-    post-swap garbage — drop it."""
-    old = f"{d}.old"
-    if not os.path.exists(d) and os.path.exists(old):
-        os.rename(old, d)
-    elif os.path.exists(old):
-        shutil.rmtree(old)
-
-
-def _swap_commit(d: str, batch_id: int) -> None:
-    """Atomically replace dir ``d`` with the batch's staged tmp dir."""
-    _swap_commit_tmp(d, f"{d}.b{batch_id}.tmp")
-
-
-def _swap_commit_tmp(d: str, tmp: str) -> None:
-    """The swap core, keyed on an explicit staged dir. Tolerates an
-    ABSENT live dir (the first-batch case of a from-scratch consumer,
-    e.g. SCD2 with no seeded state) — this is the ONE canonical swap
-    implementation; scd2.py delegates here instead of carrying its own
-    copy (round-14 advice)."""
-    old = f"{d}.old"
-    if os.path.exists(old):
-        shutil.rmtree(old)
-    if os.path.exists(d):
-        os.rename(d, old)
-    os.rename(tmp, d)
-    if os.path.exists(old):
-        shutil.rmtree(old)
+from speculare_pgcdc_spark.cdc.commit import (
+    BAND_COL,
+    band_dir,
+    start_consumer,
+)
 
 
 def _change_key(key_col: str, from_cols: bool = False):
@@ -367,9 +331,8 @@ def start_apply_query(
     """Maintain a parquet snapshot from the live change stream: each
     microbatch reads the current snapshot, applies the batch
     (:func:`apply_changes`), and atomically replaces it — the
-    materialized-table consumer of watch()'s dataflow. foreachBatch +
-    checkpointed offsets give at-least-once application; apply is
-    idempotent per batch (latest-change-per-key), so replays converge.
+    materialized-table consumer of watch()'s dataflow. Commit and
+    replay follow :mod:`~speculare_pgcdc_spark.cdc.commit`.
 
     The full-overwrite is correct-but-local: a durable deployment
     swaps this writer for a table format with row-level merge; the
@@ -377,26 +340,17 @@ def start_apply_query(
     spark = changes_stream.sparkSession
     ordered = [key_col, *[c for c in columns if c != key_col]]
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        # crash between _swap_commit's renames leaves only .old (no
-        # live snapshot): _swap_recover restores it — the checkpoint
-        # replays the batch and apply is idempotent, so converging
-        # from the pre-batch state is correct.
-        _swap_recover(snapshot_dir)
+    def plan(batch_df: DataFrame, batch) -> None:
         base = spark.read.parquet(snapshot_dir)
         out = apply_changes(base, batch_df, key_col, columns, tables)
-        tmp = f"{snapshot_dir}.b{batch_id}.tmp"
-        out.select(*ordered).write.mode("overwrite").parquet(tmp)
-        _swap_commit(snapshot_dir, batch_id)
+        out.select(*ordered).write.mode("overwrite").parquet(
+            batch.staged(snapshot_dir)
+        )
 
-    writer = (
-        changes_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName(query_name)
+    return start_consumer(
+        changes_stream, plan, checkpoint_dir, query_name, available_now,
+        [snapshot_dir],
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def start_matview_query(
@@ -422,27 +376,12 @@ def start_matview_query(
     aggregate expressions (Column objects aren't reusable across
     microbatch plans, so the view definition is re-built per batch).
 
-    Recovery doctrine matches :func:`start_apply_query`: checkpointed
-    offsets give at-least-once batch delivery; apply is idempotent and
-    the view refresh recomputes from the post-apply snapshot, so a
-    replayed batch converges both artifacts. Commit ORDER is
-    load-bearing (round-12 advice): the VIEW swaps first, the snapshot
-    second. A crash between the swaps then replays the batch against
-    the PRE-batch snapshot — touched_groups still sees the OLD group
-    of every delete and group-moving update, and re-refreshing the
-    already-committed view recomputes those groups to the same values
-    (convergent). The old order (snapshot first) was wrong for exactly
-    those shapes: the replay computed touched_groups from the
-    POST-apply snapshot, where a deleted/moved row's old group is
-    unrecoverable, so its stale view row was carried forward
-    permanently.
+    Commit and replay follow :mod:`~speculare_pgcdc_spark.cdc.commit`.
     """
     spark = changes_stream.sparkSession
     ordered = [key_col, *[c for c in columns if c != key_col]]
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        _swap_recover(snapshot_dir)
-        _swap_recover(matview_dir)
+    def plan(batch_df: DataFrame, batch) -> None:
         base = spark.read.parquet(snapshot_dir)
         mv_old = spark.read.parquet(matview_dir)
         # ONE parse of the batch (eager, batch-key-bounded) shared by
@@ -457,30 +396,24 @@ def start_matview_query(
         mv_new = refresh_aggregates(
             mv_old, new_snapshot, groups, group_col, agg_cols_fn()
         )
-        # BOTH tmp writes land before either directory swaps — the
-        # view plan reads the PRE-swap snapshot (touched_groups'
-        # old-group join) and the pre-swap view, so swapping the
-        # snapshot first would pull files out from under a lazy scan
+        # BOTH stages land before either directory swaps — the view
+        # plan reads the PRE-swap snapshot (touched_groups' old-group
+        # join) and the pre-swap view, so swapping the snapshot first
+        # would pull files out from under a lazy scan
         new_snapshot.select(*ordered).write.mode("overwrite").parquet(
-            f"{snapshot_dir}.b{batch_id}.tmp"
+            batch.staged(snapshot_dir)
         )
         mv_new.select(*mv_old.columns).write.mode("overwrite").parquet(
-            f"{matview_dir}.b{batch_id}.tmp"
+            batch.staged(matview_dir)
         )
-        # view first, snapshot second — see the recovery-doctrine note
-        # in the docstring (a crash between the two must leave the
-        # PRE-batch snapshot so the replay can still derive old groups)
-        _swap_commit(matview_dir, batch_id)
-        _swap_commit(snapshot_dir, batch_id)
 
-    writer = (
-        changes_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName(query_name)
+    # view first, snapshot second: a crash between the two must leave
+    # the PRE-batch snapshot, so the replay can still derive the old
+    # groups (cdc.commit, "Order")
+    return start_consumer(
+        changes_stream, plan, checkpoint_dir, query_name, available_now,
+        [matview_dir, snapshot_dir],
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 # ---------------------------------------------------------------------------
@@ -502,8 +435,8 @@ def start_matview_query(
 #
 # At warehouse scale this is exactly partition-confined MERGE: bands
 # map to table-format partitions, the per-band dir swap to a
-# partition-level commit. The local-parquet mechanics below keep the
-# same crash doctrine as the single-dir swap, one band at a time.
+# partition-level commit (cdc.commit swaps the touched bands one at a
+# time).
 # ---------------------------------------------------------------------------
 
 
@@ -598,55 +531,30 @@ def read_banded_snapshot(spark: SparkSession, root: str) -> DataFrame:
     return spark.read.parquet(root).drop(BAND_COL)
 
 
-def _recover_bands(root: str) -> None:
-    """Per-band crash recovery, same doctrine as :func:`_swap_recover`
-    but scoped to ``band=<i>`` subdirs; leftover batch tmp roots are
-    incomplete (or fully-drained) stages — the replay regenerates
-    them, so they are dropped."""
-    # match on the BASENAME: with a relative root (e.g. 'state') the
-    # joined path is './state.b5.tmp' which never startswith
-    # 'state.b', silently leaking abandoned batch tmp roots forever
-    # (round-14 advice fix, pinned by test_recover_bands_relative_root)
-    parent = os.path.dirname(root) or "."
-    base = os.path.basename(root)
-    for entry in os.listdir(parent):
-        if entry.startswith(f"{base}.b") and entry.endswith(".tmp"):
-            shutil.rmtree(os.path.join(parent, entry))
-    if not os.path.isdir(root):
-        return
-    for entry in os.listdir(root):
-        if entry.endswith(".old"):
-            live = os.path.join(root, entry[: -len(".old")])
-            stale = os.path.join(root, entry)
-            if not os.path.exists(live):
-                os.rename(stale, live)
-            else:
-                shutil.rmtree(stale)
+def read_bands(
+    spark: SparkSession, root: str, bands: list[int]
+) -> DataFrame | None:
+    """The rows of the live dirs among ``bands`` (band column dropped),
+    or None when none of them is live. Reads ONLY those dirs:
+    partition discovery over the full root lists every band, the
+    dominant fixed cost once bands number in the hundreds
+    (SCD2_BAND_PROBE_r13); basePath keeps the band partition column
+    semantics identical."""
+    live = [
+        p for p in (band_dir(root, b) for b in bands) if os.path.isdir(p)
+    ]
+    if not live:
+        return None
+    return (
+        spark.read.option("basePath", root).parquet(*live).drop(BAND_COL)
+    )
 
 
-def _commit_bands(root: str, tmp: str, bands: list[int]) -> None:
-    """Swap each touched band dir atomically: a staged ``band=<i>``
-    under ``tmp`` replaces the live one; a touched band ABSENT from
-    ``tmp`` had every row deleted — the live dir is removed. Each band
-    follows the rename/.old doctrine independently, so a crash leaves
-    some bands pre-batch and some post-batch — safe, because the apply
-    is idempotent per band and the view committed FIRST (see
-    :func:`start_matview_query_banded`)."""
-    for b in bands:
-        live = os.path.join(root, f"{BAND_COL}={b}")
-        staged = os.path.join(tmp, f"{BAND_COL}={b}")
-        old = f"{live}.old"
-        if os.path.exists(staged):
-            if os.path.exists(live):
-                os.rename(live, old)
-                os.rename(staged, live)
-                shutil.rmtree(old)
-            else:
-                os.rename(staged, live)
-        elif os.path.exists(live):
-            os.rename(live, old)
-            shutil.rmtree(old)
-    shutil.rmtree(tmp, ignore_errors=True)
+def touched_bands(df: DataFrame, band) -> list[int]:
+    """The distinct values of the ``band`` column expression, sorted."""
+    return sorted(
+        r[0] for r in df.select(band.alias("_b")).distinct().collect()
+    )
 
 
 def seed_band_partials(
@@ -794,18 +702,9 @@ def start_matview_query_banded(
       (IVM_SCALE_PROBE_r13: the scan-refresh mode's residual growth
       is exactly the view scan this mode removes).
 
-    Recovery doctrine: the view commits FIRST, then partials (if
-    any), then bands swap one at a time. A crash mid-band-commit
-    replays the batch against a MIXED snapshot — already-swapped
-    bands re-apply as no-ops (latest-per-key apply is idempotent),
-    not-yet-swapped bands apply normally, so the snapshot converges;
-    the old group of a delete/move in an already-swapped band is no
-    longer derivable, but that group's view row was already committed
-    correct and the refresh carries it forward untouched (scan mode) /
-    its partial was already committed recomputed (partial mode, any
-    commit order converges since partials rebuild from new_t). The
-    view-first order is load-bearing for exactly that case (the
-    round-12 advice on the unbanded consumer).
+    Commit and replay follow :mod:`~speculare_pgcdc_spark.cdc.commit`:
+    the view commits first, then the partials, then the touched bands
+    one at a time.
     """
     if (merge_cols_fn is None) != (partials_dir is None):
         raise ValueError(
@@ -831,11 +730,7 @@ def start_matview_query_banded(
             )
         return spark.read.parquet(path_root)
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        _recover_bands(snapshot_dir)
-        _swap_recover(matview_dir)
-        if partials_dir is not None:
-            _swap_recover(partials_dir)
+    def plan(batch_df: DataFrame, batch) -> list[int] | None:
         # scan-refresh mode needs the whole snapshot (untouched bands
         # feed the view re-aggregate); partial mode never does, and
         # building the frame costs a full-root partition discovery
@@ -847,33 +742,14 @@ def start_matview_query_banded(
         lat = latest_changes(
             batch_df, key_col, key_t, tables
         ).localCheckpoint(eager=True)
-        bands = sorted(
-            r[0]
-            for r in lat.select(band_of(key_col, width).alias("b"))
-            .distinct()
-            .collect()
-        )
+        bands = touched_bands(lat, band_of(key_col, width))
         if not bands:
-            return
-        live_paths = [
-            os.path.join(snapshot_dir, f"{BAND_COL}={b}")
-            for b in bands
-            if os.path.isdir(
-                os.path.join(snapshot_dir, f"{BAND_COL}={b}")
-            )
-        ]
+            return None
         if partials_dir is not None:
-            # partial mode never scans untouched bands, so the base
-            # read targets ONLY the touched band dirs — full-root
-            # partition discovery lists every band and becomes the
-            # dominant fixed cost once bands number in the hundreds
-            base_t = (
-                spark.read.option("basePath", snapshot_dir)
-                .parquet(*live_paths)
-                .drop(BAND_COL)
-                if live_paths
-                else spark.createDataFrame([], schema_str)
-            )
+            # partial mode never scans untouched bands
+            base_t = read_bands(spark, snapshot_dir, bands)
+            if base_t is None:
+                base_t = spark.createDataFrame([], schema_str)
         else:
             base_t = snap.filter(
                 F.col(BAND_COL).isin(bands)
@@ -907,6 +783,9 @@ def start_matview_query_banded(
             mv_new = parts_new.groupBy(group_col).agg(
                 *merge_cols_fn()
             )
+            parts_new.coalesce(1).write.mode("overwrite").parquet(
+                batch.staged(partials_dir)
+            )
         else:
             untouched = snap.filter(
                 ~F.col(BAND_COL).isin(bands)
@@ -918,30 +797,18 @@ def start_matview_query_banded(
             mv_new = refresh_aggregates(
                 mv_old, full_new, groups, group_col, agg_cols_fn()
             )
-            parts_new = None
-        tmp = f"{snapshot_dir}.b{batch_id}.tmp"
         (
             new_t.write.partitionBy(BAND_COL)
             .mode("overwrite")
-            .parquet(tmp)
+            .parquet(batch.staged(snapshot_dir))
         )
         mv_new.select(*mv_old.columns).write.mode("overwrite").parquet(
-            f"{matview_dir}.b{batch_id}.tmp"
+            batch.staged(matview_dir)
         )
-        if parts_new is not None:
-            parts_new.coalesce(1).write.mode("overwrite").parquet(
-                f"{partials_dir}.b{batch_id}.tmp"
-            )
-        _swap_commit(matview_dir, batch_id)
-        if parts_new is not None:
-            _swap_commit(partials_dir, batch_id)
-        _commit_bands(snapshot_dir, tmp, bands)
+        return bands
 
-    writer = (
-        changes_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName(query_name)
+    return start_consumer(
+        changes_stream, plan, checkpoint_dir, query_name, available_now,
+        [matview_dir, *([partials_dir] if partials_dir else [])],
+        band_root=snapshot_dir,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

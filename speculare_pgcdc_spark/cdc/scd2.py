@@ -50,8 +50,19 @@ which changes durability mechanics, not the per-batch plan.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from speculare_pgcdc_spark.cdc.apply import (
+    BAND_COL,
+    band_of,
+    read_band_width,
+    read_bands,
+    touched_bands,
+)
+from speculare_pgcdc_spark.cdc.commit import start_consumer
 
 #: SCD2 public state schema (q281's output shape). The stored state
 #: additionally carries ``_tie`` (each version's rank tie key) so the
@@ -216,27 +227,6 @@ def _scd2_apply_rows(
     )
 
 
-def _recover_state(state_dir: str) -> None:
-    """Crash recovery for the swapped state dir — thin module-level
-    seam over apply.py's canonical :func:`~.apply._swap_recover`
-    (round-14 advice: ONE swap/recovery implementation, not two copies
-    to keep in sync)."""
-    from speculare_pgcdc_spark.cdc.apply import _swap_recover
-
-    _swap_recover(state_dir)
-
-
-def _finalize_swap(state_dir: str, tmp: str) -> None:
-    """Atomically promote the staged state dir (module-level so the
-    crash-injection tests can intercept the exact post-swap /
-    pre-checkpoint window the idempotency marker exists for).
-    Delegates to apply.py's :func:`~.apply._swap_commit_tmp`, which
-    tolerates the absent-live-dir first-batch case."""
-    from speculare_pgcdc_spark.cdc.apply import _swap_commit_tmp
-
-    _swap_commit_tmp(state_dir, tmp)
-
-
 def start_scd2_query(
     changes_stream: DataFrame,
     state_dir: str,
@@ -253,63 +243,31 @@ def start_scd2_query(
 
     Each microbatch reads the prior state parquet (None on the very
     first batch — an absent dir), runs :func:`scd2_apply`, and swaps
-    the dir atomically (tmp write -> rename).
-
-    Replay idempotency (round-12 advice): unlike the snapshot apply,
-    ``scd2_apply`` is NOT idempotent — re-merging a batch into the
-    POST-merge state re-enters every row beside the version it already
-    created (same valid_from/_tie), duplicating versions and closing
-    the real open slice. foreachBatch is at-least-once, and a crash
-    after the state-dir swap but before Spark records the batch in its
-    commit log replays the batch against exactly that post-merge
-    state. The guard: each swapped state dir carries the batch id that
-    produced it in an ``_applied_batch_id`` marker file (written into
-    the tmp dir BEFORE the rename, so marker and data commit in the
-    same atomic swap; parquet readers ignore underscore-prefixed
-    files, the ``_SUCCESS`` convention). A replayed batch whose id
-    matches the live state's marker is a no-op. Crashes BEFORE the
-    swap replay against the pre-batch state (marker = previous batch)
-    and merge normally.
+    the dir atomically. ``scd2_apply`` is not idempotent, so a replay
+    must not re-merge a committed batch: commit and replay follow
+    :mod:`~speculare_pgcdc_spark.cdc.commit`.
 
     ``validate=True`` forwards the ordering-precondition check, turning
     a strictly-late batch into a raised error instead of silent
     divergence from the one-shot build.
     """
-    import os
-
     spark = changes_stream.sparkSession
 
-    def _applied_batch_id() -> int | None:
-        marker = os.path.join(state_dir, "_applied_batch_id")
-        if os.path.exists(marker):
-            with open(marker) as f:
-                return int(f.read().strip())
-        return None
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        _recover_state(state_dir)
-        if os.path.exists(state_dir) and _applied_batch_id() == batch_id:
-            return  # crash landed after the swap: batch already merged
+    def plan(batch_df: DataFrame, batch) -> None:
         prev = (
             spark.read.parquet(state_dir)
             if os.path.exists(state_dir)
             else None
         )
         out = scd2_apply(prev, batch_df, validate=validate)
-        tmp = f"{state_dir}.b{batch_id}.tmp"
-        out.select(*STORED_COLS).write.mode("overwrite").parquet(tmp)
-        with open(os.path.join(tmp, "_applied_batch_id"), "w") as f:
-            f.write(str(batch_id))
-        _finalize_swap(state_dir, tmp)
+        out.select(*STORED_COLS).write.mode("overwrite").parquet(
+            batch.staged(state_dir)
+        )
 
-    writer = (
-        changes_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName(query_name)
+    return start_consumer(
+        changes_stream, plan, checkpoint_dir, query_name, available_now,
+        [state_dir],
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def start_scd2_query_banded(
@@ -329,43 +287,14 @@ def start_scd2_query_banded(
     per-batch cost grows with history — this one's tracks the batch's
     key locality.
 
-    Replay protection is BAND-grained: ``scd2_apply`` is not
-    idempotent (see :func:`start_scd2_query`), and the per-band swaps
-    are not atomic as a set, so a single root-level marker would
-    either re-merge already-swapped bands (duplicating versions) or
-    skip un-swapped ones. Each staged band dir instead carries its own
-    ``_applied_batch_id`` marker, committed atomically WITH that
-    band's rename; a replayed batch drops the bands already marked
-    with its id and re-merges only the rest from their pre-batch
-    state. Keys never cross bands (band = f(o_custkey)), so per-band
-    skip is exact.
+    Replay protection is band-grained (see
+    :mod:`~speculare_pgcdc_spark.cdc.commit`): a replayed batch merges
+    only the bands it has not swapped yet.
     """
-    import os
-
-    from pyspark.sql import functions as F
-
-    from speculare_pgcdc_spark.cdc.apply import (
-        BAND_COL,
-        _commit_bands,
-        _recover_bands,
-        band_of,
-        read_band_width,
-    )
-
     spark = changes_stream.sparkSession
     width = read_band_width(state_dir)
 
-    def _band_marker(b: int) -> int | None:
-        marker = os.path.join(
-            state_dir, f"{BAND_COL}={b}", "_applied_batch_id"
-        )
-        if os.path.exists(marker):
-            with open(marker) as f:
-                return int(f.read().strip())
-        return None
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        _recover_bands(state_dir)
+    def plan(batch_df: DataFrame, batch) -> list[int] | None:
         # ONE parse of the batch, checkpointed: band discovery and the
         # merge input both read this frame (round-14 advice — the
         # latest_changes single-parse doctrine; previously the raw
@@ -379,59 +308,25 @@ def start_scd2_query_banded(
             .withColumn("_band", band_of("o_custkey", width))
             .localCheckpoint(eager=True)
         )
-        all_bands = sorted(
-            r[0] for r in rows.select("_band").distinct().collect()
+        bands = batch.pending(
+            state_dir, touched_bands(rows, F.col("_band"))
         )
-        # bands already swapped by a crashed run of THIS batch are
-        # post-merge: re-merging them would duplicate versions
-        bands = [b for b in all_bands if _band_marker(b) != batch_id]
         if not bands:
-            return
-        live = [
-            b for b in bands
-            if os.path.isdir(os.path.join(state_dir, f"{BAND_COL}={b}"))
-        ]
-        if live:
-            # targeted read of ONLY the touched band dirs: partition
-            # discovery over the full root lists every band (the
-            # dominant fixed cost once bands number in the hundreds
-            # - SCD2_BAND_PROBE_r13); basePath keeps the band
-            # partition column semantics identical
-            prev = (
-                spark.read.option("basePath", state_dir)
-                .parquet(*[
-                    os.path.join(state_dir, f"{BAND_COL}={b}")
-                    for b in live
-                ])
-                .drop(BAND_COL)
-            )
-        else:  # first batch / all-new key bands
-            prev = None
+            return None
+        prev = read_bands(spark, state_dir, bands)
         rel = rows.filter(F.col("_band").isin(bands)).drop("_band")
         out = _scd2_apply_rows(prev, rel, validate=validate)
-        tmp = f"{state_dir}.b{batch_id}.tmp"
         (
             out.select(*STORED_COLS)
             .withColumn(BAND_COL, band_of("o_custkey", width))
             .repartition(max(len(bands), 1), F.col(BAND_COL))
             .write.partitionBy(BAND_COL)
             .mode("overwrite")
-            .parquet(tmp)
+            .parquet(batch.staged(state_dir))
         )
-        for b in bands:
-            staged = os.path.join(tmp, f"{BAND_COL}={b}")
-            if os.path.isdir(staged):
-                with open(
-                    os.path.join(staged, "_applied_batch_id"), "w"
-                ) as f:
-                    f.write(str(batch_id))
-        _commit_bands(state_dir, tmp, bands)
+        return bands
 
-    writer = (
-        changes_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName(query_name)
+    return start_consumer(
+        changes_stream, plan, checkpoint_dir, query_name, available_now,
+        [], band_root=state_dir,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

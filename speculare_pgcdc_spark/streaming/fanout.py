@@ -281,6 +281,7 @@ def start_fanout_query(
     process everything committed so far in rate-limited microbatches,
     then terminate — the scheduled-backfill shape; the checkpoint makes
     consecutive drains resume where the last one stopped."""
+    from speculare_pgcdc_spark.cdc.commit import start_foreach_batch
     from speculare_pgcdc_spark.cdc.pipeline import route
 
     fans = {
@@ -297,13 +298,8 @@ def start_fanout_query(
         routed = route(batch_df, subs)
         fan(routed, deliver, batch_id)
 
-    writer = (
-        changes_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName(query_name)
+    return start_foreach_batch(
+        changes_stream, process, checkpoint_dir, query_name, available_now
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 

@@ -724,7 +724,7 @@ def test_recover_bands_relative_root_cleans_stale_tmp(tmp_path, monkeypatch):
     must clean them for relative and absolute roots alike."""
     import os
 
-    from speculare_pgcdc_spark.cdc.apply import _recover_bands
+    from speculare_pgcdc_spark.cdc.commit import recover as _recover_bands
 
     monkeypatch.chdir(tmp_path)
     os.makedirs("state/band=0")

@@ -1889,57 +1889,6 @@ def test_fanout_auto_flips_paths_mid_stream(spark, tmp_path, monkeypatch):
     assert ids.index(0) < ids.index(1) and ids.index(2) < ids.index(9)
 
 
-def test_streaming_cdc_apply_recovers_from_crashed_swap(
-    spark, tmp_path
-):
-    """Round-6 review: a crash BETWEEN the snapshot swap's two renames
-    leaves only <snap>.old on disk; the next batch must restore it and
-    proceed (checkpoint replay + idempotent apply converge), never
-    PATH_NOT_FOUND forever."""
-    from speculare_pgcdc_spark.cdc.apply import start_apply_query
-    from speculare_pgcdc_spark.cdc.pipeline import parse_wal2json
-
-    feed_dir = str(tmp_path / "feed")
-    snap = str(tmp_path / "snapshot")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(feed_dir)
-    cols = {"id": "bigint", "name": "string"}
-
-    spark.createDataFrame(
-        [(1, "one"), (2, "two")], "id bigint, name string"
-    ).write.parquet(snap)
-    # simulate the mid-swap crash: live snapshot renamed away, new one
-    # never arrived
-    os.rename(snap, f"{snap}.old")
-    assert not os.path.exists(snap)
-
-    msg = {
-        "change": [
-            {
-                "kind": "insert",
-                "table": "t",
-                "columnnames": ["id", "name"],
-                "columnvalues": [3, "three"],
-            }
-        ]
-    }
-    with open(f"{feed_dir}/f0.json", "w") as f:
-        f.write(json.dumps(msg) + "\n")
-
-    stream = parse_wal2json(
-        file_change_feed(spark, feed_dir)
-    ).withColumn("table_name", F.col("table"))
-    q = start_apply_query(
-        stream, snap, ckpt, "id", cols, available_now=True
-    )
-    assert q.awaitTermination(120)
-    got = {
-        r["id"]: r["name"] for r in spark.read.parquet(snap).collect()
-    }
-    assert got == {1: "one", 2: "two", 3: "three"}
-    assert not os.path.exists(f"{snap}.old")
-
-
 def test_streaming_ewma_multi_chunk_batch_folds_in_order(
     spark, tmp_path
 ):
@@ -2787,10 +2736,8 @@ def test_start_scd2_query_swaps_state_in_place(spark, sf_dir, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# Round-13: banded (partition-confined) IVM + the two crash-window
-# fixes from the round-12 advice. All three consumers share the
-# at-least-once foreachBatch model; these tests pin the exact crash
-# windows the recovery doctrines claim to cover.
+# Round-13: banded (partition-confined) IVM and the crash matrix of
+# the consumers' shared commit protocol.
 # ---------------------------------------------------------------------------
 
 
@@ -2896,258 +2843,371 @@ def test_streaming_matview_banded_confined_rewrite(spark, tmp_path):
     assert got_mv == {"a": (2, 31), "b": (1, 55), "c": (2, 999)}, got_mv
 
 
-def test_matview_commit_order_crash_between_commits(
-    spark, tmp_path, monkeypatch
-):
-    """Round-12 advice pin (apply.py): crash AFTER the matview commit
-    but BEFORE the snapshot commit, then replay. The view must
-    converge — in particular the OLD group of a delete and of a
-    group-moving update must disappear, which is exactly what the old
-    snapshot-first commit order lost forever."""
-    from speculare_pgcdc_spark.cdc import apply as apply_mod
-    from speculare_pgcdc_spark.cdc.apply import start_matview_query
+# ---------------------------------------------------------------------------
+# The commit protocol (cdc/commit.py) under crashes. Every stateful
+# consumer runs one batch with a crash injected after k of its n dir
+# swaps (k = n: after every swap, before Spark's commit log) and once
+# between the two renames of its last swap; the restart must converge
+# to the crash-free state.
+# ---------------------------------------------------------------------------
 
-    feed_dir = str(tmp_path / "feedc")
-    snap = str(tmp_path / "snapc")
-    mv = str(tmp_path / "mvc")
-    ckpt = str(tmp_path / "ckptc")
-    os.makedirs(feed_dir)
-    cols = {"id": "bigint", "grp": "string", "v": "bigint"}
-
-    base = spark.createDataFrame(
-        [(1, "a", 10), (2, "b", 20), (3, "c", 30)],
-        "id bigint, grp string, v bigint",
-    )
-    base.write.parquet(snap)
-
-    def aggs():
-        return [
-            F.count(F.lit(1)).cast("bigint").alias("n"),
-            F.sum("v").cast("bigint").alias("sv"),
-        ]
-
-    base.groupBy("grp").agg(*aggs()).write.parquet(mv)
-
-    # one batch: delete id1 (old group 'a') + move id2 'b' -> 'd'
-    with open(f"{feed_dir}/f0.json", "w") as f:
-        f.write(json.dumps(_mv_chg("delete", 1)) + "\n")
-        f.write(json.dumps(_mv_chg("update", 2, "d", 20)) + "\n")
-
-    real_commit = apply_mod._swap_commit
-
-    def crash_on_snapshot(d, batch_id):
-        if d == snap:
-            raise RuntimeError("injected crash between commits")
-        real_commit(d, batch_id)
-
-    monkeypatch.setattr(apply_mod, "_swap_commit", crash_on_snapshot)
-    q = start_matview_query(
-        _mv_stream(spark, feed_dir), snap, mv, ckpt, "id", cols,
-        "grp", aggs, available_now=True,
-    )
-    with pytest.raises(Exception, match="injected crash"):
-        q.processAllAvailable()
-    q.stop()
-
-    # the crash window: view is post-batch, snapshot still pre-batch
-    assert {r["id"] for r in spark.read.parquet(snap).collect()} == \
-        {1, 2, 3}
-    monkeypatch.setattr(apply_mod, "_swap_commit", real_commit)
-
-    q = start_matview_query(
-        _mv_stream(spark, feed_dir), snap, mv, ckpt, "id", cols,
-        "grp", aggs, available_now=True,
-    )
-    q.processAllAvailable()
-    q.stop()
-
-    got_mv = {
-        r["grp"]: (r["n"], r["sv"])
-        for r in spark.read.parquet(mv).collect()
-    }
-    assert got_mv == {"c": (1, 30), "d": (1, 20)}, got_mv
-    recomputed = {
-        r["grp"]: (r["n"], r["sv"])
-        for r in spark.read.parquet(snap)
-        .groupBy("grp").agg(*aggs()).collect()
-    }
-    assert got_mv == recomputed
+_MV_COLS = {"id": "bigint", "grp": "string", "v": "bigint"}
+# 32 bands over ids 1..100 -> width 4: ids 1-3 band 0, 4-7 band 1,
+# id 100 band 25 (no batch touches it)
+_MV_SEED = [(1, "a", 10), (2, "a", 20), (3, "b", 30), (4, "c", 40),
+            (100, "c", 400)]
+_MV_BATCHES = [
+    # bands 0 and 1; a delete and a group move lose their OLD group
+    # unless the view commits before the snapshot
+    [_mv_chg("delete", 1), _mv_chg("update", 2, "d", 20),
+     _mv_chg("update", 4, "c", 44), _mv_chg("insert", 5, "b", 50)],
+    [_mv_chg("delete", 3), _mv_chg("update", 5, "d", 55),
+     _mv_chg("insert", 6, "a", 60)],
+]
+_ORDERS_SCHEMA = (
+    "o_orderkey bigint, o_custkey bigint, o_orderdate date, "
+    "o_orderstatus string, o_totalprice double"
+)
+# band width 4 over o_custkey: 7 -> band 1, 9 -> band 2, 2 -> band 0
+_SCD2_SEED = [(10, 7, _dt.date(2023, 12, 1), "O", 9.0),
+              (11, 9, _dt.date(2023, 12, 15), "O", 29.0)]
+_SCD2_BATCHES = [
+    [(1, 7, _dt.date(2024, 1, 1), "O", 10.0),
+     (2, 7, _dt.date(2024, 2, 1), "O", 11.0),
+     (3, 9, _dt.date(2024, 1, 15), "O", 30.0)],
+    [(4, 7, _dt.date(2024, 3, 1), "F", 12.0),
+     (5, 9, _dt.date(2024, 2, 15), "F", 31.0),
+     (6, 2, _dt.date(2024, 3, 5), "O", 5.0)],
+]
 
 
-def test_banded_matview_partial_band_commit_converges(
-    spark, tmp_path, monkeypatch
-):
-    """Banded consumer crash doctrine: view committed, then only SOME
-    touched bands swapped before the crash. The replay applies the
-    batch against the mixed snapshot — already-swapped bands re-apply
-    as no-ops — and both artifacts converge."""
-    from speculare_pgcdc_spark.cdc import apply as apply_mod
-    from speculare_pgcdc_spark.cdc.apply import (
-        read_banded_snapshot,
-        start_matview_query_banded,
-        write_banded_snapshot,
-    )
-
-    feed_dir = str(tmp_path / "feedd")
-    snap = str(tmp_path / "snapd")
-    mv = str(tmp_path / "mvd")
-    ckpt = str(tmp_path / "ckptd")
-    os.makedirs(feed_dir)
-    cols = {"id": "bigint", "grp": "string", "v": "bigint"}
-
-    base = spark.createDataFrame(
-        [(1, "a", 10), (2, "a", 20), (4, "c", 40), (100, "c", 400)],
-        "id bigint, grp string, v bigint",
-    )
-    write_banded_snapshot(base, snap, "id", n_bands=32)  # width 4
-
-    def aggs():
-        return [
-            F.count(F.lit(1)).cast("bigint").alias("n"),
-            F.sum("v").cast("bigint").alias("sv"),
-        ]
-
-    base.groupBy("grp").agg(*aggs()).write.parquet(mv)
-
-    # one batch touching bands 0 (delete id1) and 1 (update id4)
-    with open(f"{feed_dir}/f0.json", "w") as f:
-        f.write(json.dumps(_mv_chg("delete", 1)) + "\n")
-        f.write(json.dumps(_mv_chg("update", 4, "c", 44)) + "\n")
-
-    real_bands = apply_mod._commit_bands
-
-    def partial_commit(root, tmp, bands):
-        real_bands(root, tmp, bands[:1])  # band 0 lands, tmp dropped
-        raise RuntimeError("injected crash mid-band-commit")
-
-    monkeypatch.setattr(apply_mod, "_commit_bands", partial_commit)
-    q = start_matview_query_banded(
-        _mv_stream(spark, feed_dir), snap, mv, ckpt, "id", cols,
-        "grp", aggs, available_now=True,
-    )
-    with pytest.raises(Exception, match="injected crash"):
-        q.processAllAvailable()
-    q.stop()
-
-    mixed = {r["id"] for r in read_banded_snapshot(spark, snap).collect()}
-    assert mixed == {2, 4, 100}  # band 0 post-batch, band 1 pre-batch
-    monkeypatch.setattr(apply_mod, "_commit_bands", real_bands)
-
-    q = start_matview_query_banded(
-        _mv_stream(spark, feed_dir), snap, mv, ckpt, "id", cols,
-        "grp", aggs, available_now=True,
-    )
-    q.processAllAvailable()
-    q.stop()
-
-    got_snap = {
-        (r["id"], r["grp"], r["v"])
-        for r in read_banded_snapshot(spark, snap).collect()
-    }
-    assert got_snap == {(2, "a", 20), (4, "c", 44), (100, "c", 400)}
-    got_mv = {
-        r["grp"]: (r["n"], r["sv"])
-        for r in spark.read.parquet(mv).collect()
-    }
-    assert got_mv == {"a": (1, 20), "c": (2, 444)}, got_mv
+def _mv_aggs():
+    return [
+        F.count(F.lit(1)).cast("bigint").alias("n"),
+        F.sum("v").cast("bigint").alias("sv"),
+    ]
 
 
-def test_scd2_replay_after_swap_is_noop(spark, tmp_path, monkeypatch):
-    """Round-12 advice pin (scd2.py): scd2_apply is NOT idempotent, so
-    a crash after the state swap but before the checkpoint commit used
-    to re-merge the batch into the POST-merge state on replay,
-    duplicating every version. The _applied_batch_id marker makes the
-    replayed batch a no-op; final state equals the one-shot build."""
-    import glob as _glob
-    import shutil as _shutil
+def _mv_merges():
+    return [
+        F.sum("n").cast("bigint").alias("n"),
+        F.sum("sv").cast("bigint").alias("sv"),
+    ]
 
-    from speculare_pgcdc_spark.cdc import scd2 as scd2_mod
-    from speculare_pgcdc_spark.cdc.scd2 import (
-        STATE_COLS,
-        scd2_apply,
-        start_scd2_query,
-    )
 
-    schema = (
-        "o_orderkey bigint, o_custkey bigint, o_orderdate date, "
-        "o_orderstatus string, o_totalprice double"
-    )
-    c0 = spark.createDataFrame(
-        [(1, 7, _dt.date(2024, 1, 1), "O", 10.0),
-         (2, 7, _dt.date(2024, 2, 1), "O", 11.0),
-         (3, 9, _dt.date(2024, 1, 15), "O", 30.0)],
-        schema,
-    )
-    c1 = spark.createDataFrame(
-        [(4, 7, _dt.date(2024, 3, 1), "F", 12.0),
-         (5, 9, _dt.date(2024, 2, 15), "F", 31.0)],
-        schema,
-    )
-    one_shot = {
-        tuple(r)
-        for r in scd2_apply(None, c0.unionByName(c1))
-        .select(*STATE_COLS).collect()
-    }
+def _rows(df, cols=None):
+    return frozenset(tuple(r) for r in df.select(*(cols or df.columns))
+                     .collect())
 
-    feed = tmp_path / "scd2r_feed"
-    os.makedirs(feed)
-    t0 = 1_700_000_000
-    for i, c in enumerate([c0, c1]):
-        tmp_out = str(tmp_path / f"scd2r_chunk{i}")
-        c.coalesce(1).write.parquet(tmp_out)
-        part = _glob.glob(f"{tmp_out}/part-*.parquet")[0]
-        dst = str(feed / f"{i:05d}.parquet")
-        _shutil.copy(part, dst)
-        os.utime(dst, (t0 + i, t0 + i))
 
-    state_dir = str(tmp_path / "scd2r_state")
-    ckpt = str(tmp_path / "scd2r_ck")
+class _Consumer:
+    """One stateful consumer over a state root: seed, feed, start,
+    read back, and the dirs batch 0 swaps, in commit order."""
 
-    real_swap = scd2_mod._finalize_swap
+    def __init__(self, kind, banded=False, partials=False):
+        self.kind, self.banded, self.partials = kind, banded, partials
+        self.scd2 = kind.startswith("scd2")
 
-    def swap_then_crash(sd, tmp):
-        real_swap(sd, tmp)
-        raise RuntimeError("injected crash after swap")
-
-    def drain():
-        src = (
-            spark.readStream.schema(c0.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(feed))
+    def seed(self, spark, root):
+        from speculare_pgcdc_spark.cdc.apply import (
+            seed_band_partials,
+            write_banded_snapshot,
         )
-        q = start_scd2_query(src, state_dir, ckpt, available_now=True)
+        from speculare_pgcdc_spark.cdc.scd2 import STORED_COLS, scd2_apply
+
+        if self.scd2:
+            state = scd2_apply(
+                None, spark.createDataFrame(_SCD2_SEED, _ORDERS_SCHEMA)
+            ).select(*STORED_COLS)
+            if self.banded:
+                write_banded_snapshot(state, f"{root}/scd2", "o_custkey",
+                                      band_width=4)
+            else:
+                state.write.parquet(f"{root}/scd2")
+            return
+        base = spark.createDataFrame(_MV_SEED, "id bigint, grp string, "
+                                     "v bigint")
+        if self.banded:
+            write_banded_snapshot(base, f"{root}/snap", "id", n_bands=32)
+        else:
+            base.write.parquet(f"{root}/snap")
+        if self.kind != "apply":
+            base.groupBy("grp").agg(*_mv_aggs()).write.parquet(
+                f"{root}/mv"
+            )
+        if self.partials:
+            seed_band_partials(spark, f"{root}/snap", "grp", _mv_aggs,
+                               f"{root}/parts")
+
+    def write_feed(self, feed_dir, batches):
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        os.makedirs(feed_dir)
+        for i, b in enumerate(batches):
+            if not self.scd2:
+                with open(f"{feed_dir}/f{i}.json", "w") as f:
+                    for m in _MV_BATCHES[b]:
+                        f.write(json.dumps(m) + "\n")
+                continue
+            cols = list(zip(*_SCD2_BATCHES[b]))
+            types = [pa.int64(), pa.int64(), pa.date32(), pa.string(),
+                     pa.float64()]
+            names = [c.split()[0] for c in _ORDERS_SCHEMA.split(", ")]
+            pq.write_table(
+                pa.table([pa.array(c, t) for c, t in zip(cols, types)],
+                         names=names),
+                f"{feed_dir}/f{i}.parquet",
+            )
+
+    def start(self, spark, root, feed_dir, ckpt):
+        from speculare_pgcdc_spark.cdc import apply, scd2
+
+        if self.scd2:
+            src = (
+                spark.readStream.schema(_ORDERS_SCHEMA)
+                .option("maxFilesPerTrigger", 1)
+                .parquet(feed_dir)
+            )
+            start = (scd2.start_scd2_query_banded if self.banded
+                     else scd2.start_scd2_query)
+            return start(src, f"{root}/scd2", ckpt, validate=True,
+                         available_now=True)
+        stream = _mv_stream(spark, feed_dir)
+        snap, mv = f"{root}/snap", f"{root}/mv"
+        if self.kind == "apply":
+            return apply.start_apply_query(
+                stream, snap, ckpt, "id", _MV_COLS, available_now=True
+            )
+        if not self.banded:
+            return apply.start_matview_query(
+                stream, snap, mv, ckpt, "id", _MV_COLS, "grp", _mv_aggs,
+                available_now=True,
+            )
+        extra = ({"merge_cols_fn": _mv_merges,
+                  "partials_dir": f"{root}/parts"} if self.partials else {})
+        return apply.start_matview_query_banded(
+            stream, snap, mv, ckpt, "id", _MV_COLS, "grp", _mv_aggs,
+            available_now=True, **extra,
+        )
+
+    def drain(self, spark, root, feed_dir, ckpt):
+        q = self.start(spark, root, feed_dir, ckpt)
         try:
             q.processAllAvailable()
         finally:
             q.stop()
 
-    # batch 0: state swaps, THEN the crash lands — Spark never records
-    # the batch as committed, so the restart must replay it
-    monkeypatch.setattr(scd2_mod, "_finalize_swap", swap_then_crash)
+    def units(self, root):
+        """The dirs batch 0 swaps, in commit order."""
+        if self.scd2:
+            return ([f"{root}/scd2/band=1", f"{root}/scd2/band=2"]
+                    if self.banded else [f"{root}/scd2"])
+        snaps = ([f"{root}/snap/band=0", f"{root}/snap/band=1"]
+                 if self.banded else [f"{root}/snap"])
+        head = [] if self.kind == "apply" else [f"{root}/mv"]
+        return head + ([f"{root}/parts"] if self.partials else []) + snaps
+
+    def state(self, spark, root):
+        from speculare_pgcdc_spark.cdc.apply import read_banded_snapshot
+        from speculare_pgcdc_spark.cdc.scd2 import STATE_COLS
+
+        if self.scd2:
+            st = spark.read.parquet(f"{root}/scd2")
+            return {"rows": _rows(st, STATE_COLS), "n": st.count()}
+        snap = (read_banded_snapshot(spark, f"{root}/snap") if self.banded
+                else spark.read.parquet(f"{root}/snap"))
+        out = {"snap": _rows(snap, ["id", "grp", "v"])}
+        if self.kind != "apply":
+            out["view"] = _rows(spark.read.parquet(f"{root}/mv"),
+                                ["grp", "n", "sv"])
+        if self.partials:
+            out["parts"] = _rows(spark.read.parquet(f"{root}/parts"),
+                                 ["band", "grp", "n", "sv"])
+        return out
+
+    def expected(self, spark, n_batches):
+        """The state after the first ``n_batches`` batches, computed
+        without the consumer: a Python fold (apply/matview) or the
+        one-shot SCD2 build."""
+        from speculare_pgcdc_spark.cdc.scd2 import STATE_COLS, scd2_apply
+
+        if self.scd2:
+            orders = _SCD2_SEED + [r for b in _SCD2_BATCHES[:n_batches]
+                                   for r in b]
+            one_shot = scd2_apply(
+                None, spark.createDataFrame(orders, _ORDERS_SCHEMA)
+            )
+            return {"rows": _rows(one_shot, STATE_COLS), "n": len(orders)}
+        snap = {i: (g, v) for i, g, v in _MV_SEED}
+        for msgs in _MV_BATCHES[:n_batches]:
+            for m in msgs:
+                c = m["change"][0]
+                if c["kind"] == "delete":
+                    snap.pop(c["oldkeys"]["keyvalues"][0], None)
+                else:
+                    i, g, v = c["columnvalues"]
+                    snap[i] = (g, v)
+        out = {"snap": frozenset((i, g, v) for i, (g, v) in snap.items())}
+
+        def agg(key):
+            acc = {}
+            for i, (g, v) in snap.items():
+                n, sv = acc.get(key(i, g), (0, 0))
+                acc[key(i, g)] = (n + 1, sv + v)
+            return acc
+
+        if self.kind != "apply":
+            out["view"] = frozenset(
+                (g, n, sv) for g, (n, sv) in agg(lambda i, g: g).items()
+            )
+        if self.partials:
+            out["parts"] = frozenset(
+                (*bg, n, sv)
+                for bg, (n, sv) in agg(lambda i, g: (i // 4, g)).items()
+            )
+        return out
+
+
+_CONSUMERS = {
+    "apply": _Consumer("apply"),
+    "matview": _Consumer("matview"),
+    "matview_banded": _Consumer("matview", banded=True),
+    "matview_partials": _Consumer("matview", banded=True, partials=True),
+    "scd2": _Consumer("scd2"),
+    "scd2_banded": _Consumer("scd2", banded=True),
+}
+_CRASH_FREE: dict = {}
+
+
+def _crash_free(spark, tmp_path, monkeypatch, name):
+    """The crash-free state after batch 0 (one run per consumer per
+    pytest process), checked against the consumer-free expectation, and the
+    order the run swapped its dirs in."""
+    if name not in _CRASH_FREE:
+        from speculare_pgcdc_spark.cdc import commit
+
+        c = _CONSUMERS[name]
+        root = str(tmp_path / "crash_free")
+        c.seed(spark, root)
+        c.write_feed(f"{root}_feed", [0])
+        real, order = commit.swap, []
+
+        def spy(live, stage):
+            order.append(live)
+            real(live, stage)
+
+        monkeypatch.setattr(commit, "swap", spy)
+        c.drain(spark, root, f"{root}_feed", f"{root}_ck")
+        monkeypatch.setattr(commit, "swap", real)
+        assert order == c.units(root)  # the view commits first
+        state = c.state(spark, root)
+        assert state == c.expected(spark, 1)
+        _CRASH_FREE[name] = state
+    return _CRASH_FREE[name]
+
+
+@pytest.mark.parametrize(
+    "name,point",
+    [
+        (name, point)
+        for name, n in [("apply", 1), ("matview", 2),
+                        ("matview_banded", 3), ("matview_partials", 4),
+                        ("scd2", 1), ("scd2_banded", 2)]
+        for point in [*range(n + 1), "mid"]
+    ],
+)
+def test_commit_crash_matrix(spark, tmp_path, monkeypatch, name, point):
+    """Crash batch 0 of a consumer after ``point`` of its dir swaps
+    (or between the two renames of its last swap, "mid"), restart on
+    the same checkpoint, and require the crash-free state: snapshot,
+    view, partials or SCD2 state, with one SCD2 row per order. The
+    window before the restart is pinned too: the swapped dirs carry
+    the batch's marker, the rest do not."""
+    from speculare_pgcdc_spark.cdc import commit
+    from speculare_pgcdc_spark.cdc.apply import read_banded_snapshot
+
+    want = _crash_free(spark, tmp_path, monkeypatch, name)
+    c = _CONSUMERS[name]
+    root, feed, ck = (str(tmp_path / d) for d in ("s", "feed", "ck"))
+    c.seed(spark, root)
+    c.write_feed(feed, [0])
+    units = c.units(root)
+    untouched = f"{root}/snap/band=25"
+    before = (sorted((e.name, e.stat().st_mtime) for e in
+                     os.scandir(untouched))
+              if os.path.isdir(untouched) else None)
+
+    real, done = commit.swap, []
+
+    def crashing_swap(live, stage):
+        if point == "mid" and live == units[-1]:
+            os.rename(live, f"{live}.old")
+            raise RuntimeError("injected crash mid-rename")
+        if point == 0:
+            raise RuntimeError("injected crash before the first swap")
+        real(live, stage)
+        done.append(live)
+        if len(done) == point:
+            raise RuntimeError("injected crash after a swap")
+
+    monkeypatch.setattr(commit, "swap", crashing_swap)
     with pytest.raises(Exception, match="injected crash"):
-        drain()
-    assert os.path.exists(os.path.join(state_dir, "_applied_batch_id"))
+        c.drain(spark, root, feed, ck)
+    monkeypatch.setattr(commit, "swap", real)
 
-    monkeypatch.setattr(scd2_mod, "_finalize_swap", real_swap)
-    drain()  # replays batch 0 (no-op via marker), then batch 1
+    tag = f"{commit.query_id(ck)}:0"
+    swapped = len(units) - 1 if point == "mid" else point
+    for i, d in enumerate(units):
+        marker = os.path.join(d, commit.MARKER)
+        if i < swapped:
+            with open(marker) as f:
+                assert f.read() == tag, d
+        else:
+            assert not os.path.exists(marker), d
+    if point == "mid":
+        assert not os.path.exists(units[-1])
+        assert os.path.isdir(f"{units[-1]}.old")
+    if name == "matview_banded" and point == 2:
+        # the mixed-band window: band 0 post-batch, band 1 pre-batch
+        got = {r["id"] for r in
+               read_banded_snapshot(spark, f"{root}/snap").collect()}
+        assert got == {2, 3, 4, 100}
 
-    got = {
-        tuple(r)
-        for r in spark.read.parquet(state_dir)
-        .select(*STATE_COLS).collect()
-    }
-    assert got == one_shot
-    # no duplicated versions: one row per order
-    assert spark.read.parquet(state_dir).count() == 5
+    c.drain(spark, root, feed, ck)
+    assert c.state(spark, root) == want
+    for d in {os.path.dirname(u) for u in units} | set(units):
+        if os.path.isdir(d):
+            assert not [e for e in os.listdir(d)
+                        if e.endswith((".old", ".tmp"))], d
+    if before is not None:  # the band no batch touched kept its files
+        assert sorted((e.name, e.stat().st_mtime) for e in
+                      os.scandir(untouched)) == before
 
 
-def test_banded_matview_partials_mode(spark, tmp_path, monkeypatch):
+@pytest.mark.parametrize(
+    "name", ["apply", "matview", "matview_banded", "scd2", "scd2_banded"]
+)
+def test_fresh_checkpoint_over_existing_state_lands(spark, tmp_path, name):
+    """A fresh checkpoint restarts batch ids at 0. Its batches over
+    state another checkpoint already advanced must still apply: the
+    replay marker names the query as well as the batch."""
+    c = _CONSUMERS[name]
+    root = str(tmp_path / "s")
+    c.seed(spark, root)
+    for i in (0, 1):
+        feed = str(tmp_path / f"feed{i}")
+        c.write_feed(feed, [i])
+        c.drain(spark, root, feed, str(tmp_path / f"ck{i}"))
+    assert c.state(spark, root) == c.expected(spark, 2)
+
+
+def test_banded_matview_partials_mode(spark, tmp_path):
     """Band-partial maintenance (round-13): the view is merged from
     per-(band, group) partials, touched bands' partials rebuilt from
     the new band content — no snapshot-scale scan. End state equals a
-    full recompute (including after an injected mid-band-commit
-    crash + replay), untouched bands keep their physical files."""
-    from speculare_pgcdc_spark.cdc import apply as apply_mod
+    full recompute, untouched bands keep their physical files (its
+    crash replay is in test_commit_crash_matrix)."""
     from speculare_pgcdc_spark.cdc.apply import (
         read_banded_snapshot,
         seed_band_partials,
@@ -3200,32 +3260,11 @@ def test_banded_matview_partials_mode(spark, tmp_path, monkeypatch):
         for p in os.listdir(untouched_band)
     }
 
-    # inject a crash after the FIRST band of the first processed
-    # batch commits, then let the replay converge everything
-    real_bands = apply_mod._commit_bands
-    crashed = []
-
-    def partial_commit(root, tmp, bands):
-        if not crashed:
-            crashed.append(True)
-            real_bands(root, tmp, bands[:1])
-            raise RuntimeError("injected crash mid-band-commit")
-        real_bands(root, tmp, bands)
-
-    monkeypatch.setattr(apply_mod, "_commit_bands", partial_commit)
-
-    def drain():
-        return start_matview_query_banded(
-            _mv_stream(spark, feed_dir), snap, mv, ckpt, "id", cols,
-            "grp", aggs, available_now=True,
-            merge_cols_fn=merges, partials_dir=parts,
-        )
-
-    q = drain()
-    with pytest.raises(Exception, match="injected crash"):
-        q.processAllAvailable()
-    q.stop()
-    q = drain()
+    q = start_matview_query_banded(
+        _mv_stream(spark, feed_dir), snap, mv, ckpt, "id", cols,
+        "grp", aggs, available_now=True,
+        merge_cols_fn=merges, partials_dir=parts,
+    )
     q.processAllAvailable()
     q.stop()
 
@@ -3267,21 +3306,14 @@ def test_banded_matview_partials_mode(spark, tmp_path, monkeypatch):
     assert got_parts == want_parts
 
 
-def test_scd2_banded_state_parity_and_partial_commit(
-    spark, sf_dir, tmp_path, monkeypatch
-):
+def test_scd2_banded_state_parity(spark, sf_dir, tmp_path):
     """start_scd2_query_banded (round-13): the key-banded SCD2 state
-    converges to the one-shot q281 build over the full history, only
-    the bands containing a batch's keys are rewritten, and a crash
-    that commits SOME bands (with their per-band _applied_batch_id
-    markers) replays to the same parity — the marker skips re-merging
-    the already-swapped bands, whose re-merge would duplicate
-    versions because scd2_apply is not idempotent."""
+    converges to the one-shot q281 build over the full history (its
+    crash replay is in test_commit_crash_matrix)."""
     import glob as _glob
     import shutil as _shutil
 
     from speculare_pgcdc_spark.catalog import table as t
-    from speculare_pgcdc_spark.cdc import apply as apply_mod
     from speculare_pgcdc_spark.cdc.apply import write_banded_snapshot
     from speculare_pgcdc_spark.cdc.scd2 import (
         STATE_COLS,
@@ -3334,36 +3366,18 @@ def test_scd2_banded_state_parity_and_partial_commit(
         band_width=max(1, int(max_ck) // 8 + 1),
     )
 
-    real_bands = apply_mod._commit_bands
-    crashed = []
-
-    def partial_commit(root, tmp, bands):
-        if not crashed and len(bands) > 1:
-            crashed.append(True)
-            real_bands(root, tmp, bands[: len(bands) // 2])
-            raise RuntimeError("injected crash mid-band-commit")
-        real_bands(root, tmp, bands)
-
-    monkeypatch.setattr(apply_mod, "_commit_bands", partial_commit)
-
-    def drain():
-        src = (
-            spark.readStream.schema(orders.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(feed))
-        )
-        q = start_scd2_query_banded(
-            src, state_dir, ckpt, validate=True, available_now=True
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-    with pytest.raises(Exception, match="injected crash"):
-        drain()
-    # crash window: some bands carry batch 0, some are still empty
-    drain()  # replay batch 0 (marked bands skipped), then batch 1
+    src = (
+        spark.readStream.schema(orders.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(feed))
+    )
+    q = start_scd2_query_banded(
+        src, state_dir, ckpt, validate=True, available_now=True
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
 
     got = {
         tuple(r)
