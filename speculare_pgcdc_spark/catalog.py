@@ -152,7 +152,7 @@ def eval_once(df: DataFrame, *cols) -> DataFrame:
     n) above the tokenize) and REVERTED it there — copying the full
     token array through the barrier cost as much as the tokenize it
     saved (q343 per-round ratio median 1.17, rest at the noise
-    floor; scripts/ab_evalonce.py). It pays when the projection
+    floor; OPTIMIZATION_r14.md batch 6). It pays when the projection
     BUILDS something from a more expensive walk (cdc.apply's
     latest_changes key/row-map build from variant walks) or when the
     substituted predicate re-runs a full JSON parse (the v2 wal2json

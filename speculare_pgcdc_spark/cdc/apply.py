@@ -9,8 +9,8 @@ an insert/update comes from its row map; a delete carries no columns
 is extracted from the raw payload (``change_json``), which both parse
 branches preserve verbatim.
 
-Scale shape: latest-change-per-key is ONE hash aggregation
-(max_by over the (seq, chg_idx) WAL order — no window, no sort), the
+Scale shape: latest-change-per-key is one aggregation
+(max_by over the (seq, chg_idx) WAL order — no window, no join), the
 merge is one equi-join on the key. With the base bucketed by key
 (sources.write_bucketed) the join side is co-located and the whole
 apply is a single shuffle of the (small) change batch. The snapshot
@@ -81,23 +81,42 @@ def _change_key(key_col: str, from_cols: bool = False):
     )
 
 
-def _keyed_changes(
+def latest_changes(
     changes: DataFrame,
     key_col: str,
-    key_t: str,
-    tables: list[str] | None,
+    key_t: str = "string",
+    tables: list[str] | None = None,
 ) -> DataFrame:
-    """The parsed batch at change grain, keyed and WAL-ordered:
-    ``key_col`` + ``_ord`` (decimal(32,0) packing of (seq, chg_idx) —
-    seq fits decimal(19,0) because it is a bigint and chg_idx fits
-    decimal(10,0) because it is a non-negative int, so
-    seq * 10^10 + chg_idx is an order-embedding of the (seq, chg_idx)
-    lexicographic WAL order into one numeric) + ``_chg`` (struct kind,
-    row_str). Packed rather than struct-typed because max over a
-    DECIMAL buffer is hash-aggregable while max/max_by over any
-    struct/map/string buffer plans as SortAggregate (UnsafeRow
-    mutability rule) — the r14 verdict's top remaining bottleneck on
-    the apply path."""
+    """Collapse a raw change batch to its per-key LATEST change in WAL
+    order: one row per changed key, columns ``key_col`` + ``_chg``
+    (struct kind, row_str). This frame — bounded by the batch's key
+    count, never the snapshot — is the single parse of the batch;
+    band discovery, the merge, and the touched-group derivation all
+    read it (checkpointed by the caller), so the expensive feed-parse
+    lineage runs ONCE per batch instead of once per consumer.
+
+    Contract:
+
+    - exactly one row per non-null key, by construction: one
+      ``groupBy(key)`` aggregate, nothing joined back;
+    - the winner is the change with the greatest ``(seq, chg_idx)``;
+    - a null ``seq`` orders FIRST (the struct itself is non-null, and
+      a null field sorts below any value) — the nulls-first order
+      ``streaming.fanout.fanout_batch`` delivers in — so a null-seq
+      change still applies when it is the key's only change;
+    - on a seq-less feed (``parse_wal2json`` without ``seq_col``: every
+      message at seq 0) two messages can tie on ``(seq, chg_idx)``;
+      the winner among tied changes is then unspecified, but it is
+      still ONE row.
+
+    Shape: ``max_by(_chg, struct(seq, chg_idx))``, which plans as a
+    SortAggregate (a struct/map buffer is not hash-aggregable). A
+    HashAggregate ``max`` over a packed decimal ordinal plus an
+    equality join-back was tried and reverted: it let tied positions
+    both survive the join, and it lost the interleaved A/B
+    (``AB_LATEST.json``, join-back / max_by per-round ratio median:
+    q96 1.23 and q97 1.04 at sf0.1, 1.12 and 1.07 at 10x, q96 1.10
+    at 100x)."""
     rel = changes if tables is None else changes.filter(
         F.col("table_name").isin(tables)
     )
@@ -105,11 +124,7 @@ def _keyed_changes(
         _change_key(key_col, "_dk_names" in changes.columns)
         .cast(key_t)
         .alias(key_col),
-        (
-            F.col("seq").cast("decimal(19,0)")
-            * F.lit(10_000_000_000).cast("decimal(11,0)")
-            + F.col("chg_idx").cast("decimal(10,0)")
-        ).alias("_ord"),
+        F.struct("seq", "chg_idx").alias("_ord"),
         F.struct("kind", "row_str").alias("_chg"),
     )
     # Generate barrier before the null-key guard (r14, guide §4.4's
@@ -120,50 +135,11 @@ def _keyed_changes(
     # filter and again in the projection. Behind catalog.eval_once the
     # row is evaluated exactly once and the guard tests a materialized
     # struct field instead.
-    return eval_once(keyed, key_col, "_ord", "_chg").filter(
+    keyed = eval_once(keyed, key_col, "_ord", "_chg").filter(
         F.col(key_col).isNotNull()
     )
-
-
-def latest_changes(
-    changes: DataFrame,
-    key_col: str,
-    key_t: str = "string",
-    tables: list[str] | None = None,
-) -> DataFrame:
-    """Collapse a raw change batch to its per-key LATEST change in WAL
-    order (seq, chg_idx): one row per changed key, columns
-    ``key_col`` + ``_chg`` (struct kind, row_str). This frame —
-    bounded by the batch's key count, never the snapshot — is the
-    single parse of the batch; band discovery, the merge, and the
-    touched-group derivation all read it (checkpointed by the
-    caller), so the expensive feed-parse lineage runs ONCE per batch
-    instead of once per consumer (round-13: the banded consumer's
-    extra passes were re-parsing the batch three times).
-
-    Shape (r15, the r14 verdict's top item): the old one-pass
-    ``max_by(_chg, _ord)`` planned as SortAggregate — the map-typed
-    ``_chg`` buffer is not hash-aggregable — i.e. a per-partition
-    sort of the FULL parsed batch (payload included) on the hottest
-    apply path. Now the decision is made on a lightweight proxy and
-    re-attached (guide §8): pin the parsed batch once
-    (localCheckpoint — also what keeps the parse at one run with two
-    consumers below), HashAggregate ``max(_ord)`` per key over just
-    (key, ord), and join the winners back on (key, ord) equality.
-    The payload is never sorted and never shuffled when AQE
-    broadcasts the tiny max-ord side. Correct because a WAL position
-    (seq, chg_idx) is unique per change — the join-back matches
-    exactly the one winning row per key. (A seq-less multi-message
-    feed can tie positions; those were already documented as
-    order-undefined — parse feeds carry seq.)"""
-    keyed = _keyed_changes(changes, key_col, key_t, tables).localCheckpoint(
-        eager=False
-    )
-    mx = keyed.groupBy(key_col).agg(F.max("_ord").alias("_max_ord"))
-    return (
-        keyed.join(mx, key_col)
-        .where(F.col("_ord") == F.col("_max_ord"))
-        .select(key_col, "_chg")
+    return keyed.groupBy(key_col).agg(
+        F.max_by("_chg", "_ord").alias("_chg")
     )
 
 

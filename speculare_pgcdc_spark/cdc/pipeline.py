@@ -90,9 +90,12 @@ def parse_wal2json(
     from ``seq_col``, e.g. the wal_poll source's ``lsn``; 0 when the
     feed has none) plus ``chg_idx`` (posexplode index within the
     message's change array) — and re-established at the fan-out sink by
-    sorting each subscriber's payload list on (seq, chg_idx). Order
-    scope: within a microbatch, and only as strong as ``seq`` (a
-    seq-less feed orders within each message only).
+    sorting each subscriber's payload list on (seq, chg_idx), nulls
+    first. Order scope: within a microbatch, and only as strong as
+    ``seq``: a seq-less feed orders within each message only, so two
+    messages can tie on (seq, chg_idx). Snapshot consumers
+    (cdc.apply.latest_changes) still keep exactly one change per key
+    on a tie, but which tied change wins is unspecified.
     """
     # try_parse_json: a malformed payload yields NULL and is dropped —
     # the reference logs the simd-json error and continues

@@ -257,7 +257,12 @@ class Engine:
         (cdc/apply.start_apply_query behind the facade) — the
         reference-consumer shape one step past fan-out: every real
         deployment's next stop after receiving changes is applying
-        them somewhere queryable."""
+        them somewhere queryable.
+
+        The file feed carries no WAL position (every message parses
+        at seq 0), so the snapshot keeps exactly one row per key, but
+        when two messages in one microbatch change the same key, which
+        one wins is unspecified (cdc/apply.latest_changes)."""
         from speculare_pgcdc_spark.cdc.apply import start_apply_query
         from speculare_pgcdc_spark.streaming.source import (
             file_change_feed,
@@ -290,7 +295,10 @@ class Engine:
     ):
         """Maintain snapshot + incrementally-refreshed aggregate view
         from the change feed (cdc/apply.start_matview_query behind the
-        facade — the q97 IVM consumer as a one-call streaming query)."""
+        facade — the q97 IVM consumer as a one-call streaming query).
+        Same per-key contract as :meth:`watch_snapshot`: one row per
+        key, the winner among same-batch messages on one key
+        unspecified (the file feed has no WAL position)."""
         from speculare_pgcdc_spark.cdc.apply import start_matview_query
         from speculare_pgcdc_spark.streaming.source import (
             file_change_feed,

@@ -5,6 +5,8 @@ Spark pipeline on tiny literal frames."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -351,6 +353,92 @@ def test_apply_changes_chg_idx_breaks_seq_ties(spark):
     assert rows == {1: "second"}
 
 
+def _msg_v2(id_, name):
+    return (
+        '{"action":"U","table":"t","columns":['
+        '{"name":"id","type":"bigint","value":%d},'
+        '{"name":"name","type":"text","value":"%s"}]}' % (id_, name)
+    )
+
+
+@pytest.mark.parametrize(
+    "fmt,seq_col,rows,allowed",
+    [
+        # seq-less v1: both messages sit at (seq 0, chg_idx 0)
+        (
+            "v1", None,
+            [(None, _msg("update", 1, "a")), (None, _msg("update", 1, "b"))],
+            {"a", "b"},
+        ),
+        # seq-less v2: one change per message, chg_idx always 0
+        (
+            "v2", None,
+            [(None, _msg_v2(1, "a")), (None, _msg_v2(1, "b"))],
+            {"a", "b"},
+        ),
+        # a NULL lsn is still a change: it must land
+        ("v1", "lsn", [(None, _msg("update", 1, "nul"))], {"nul"}),
+        # a NULL lsn orders first (fanout_batch's nulls-first order),
+        # so the real lsn wins
+        (
+            "v1", "lsn",
+            [(5, _msg("update", 1, "real")), (None, _msg("update", 1, "nul"))],
+            {"real"},
+        ),
+    ],
+    ids=["seqless_v1_tie", "seqless_v2_tie", "null_lsn", "null_vs_real_lsn"],
+)
+def test_latest_changes_one_row_per_key(spark, fmt, seq_col, rows, allowed):
+    """latest_changes yields exactly one row per key, and so does the
+    snapshot apply_changes builds from it: tied WAL positions (a
+    seq-less feed) collapse to one winner, and a null seq neither
+    drops the key nor beats a real position."""
+    from speculare_pgcdc_spark.cdc.apply import apply_changes, latest_changes
+
+    feed = spark.createDataFrame(rows, "lsn bigint, payload string")
+    changes = parse_wal2json(feed, seq_col=seq_col, fmt=fmt).withColumn(
+        "table_name", F.col("table")
+    )
+    lat = latest_changes(changes, "id", "bigint").collect()
+    assert [r["id"] for r in lat] == [1]
+    base = spark.createDataFrame(
+        [(1, "z"), (2, "y")], "id bigint, name string"
+    )
+    got = apply_changes(
+        base, changes, key_col="id",
+        columns={"id": "bigint", "name": "string"},
+    ).collect()
+    assert sorted(r["id"] for r in got) == [1, 2]
+    names = {r["id"]: r["name"] for r in got}
+    assert names[1] in allowed and names[2] == "y"
+
+
+def test_watch_snapshot_seqless_feed_one_row_per_key(spark, tmp_path):
+    """End to end over Engine.watch_snapshot: a one-file seq-less feed
+    (every message at seq 0) with two updates to one key leaves one
+    snapshot row for that key."""
+    from speculare_pgcdc_spark.engine import Engine
+
+    feed_dir = tmp_path / "feed"
+    snap = str(tmp_path / "snap")
+    feed_dir.mkdir()
+    spark.createDataFrame(
+        [(1, "z"), (2, "y")], "id bigint, name string"
+    ).write.parquet(snap)
+    (feed_dir / "f0.json").write_text(
+        _msg("update", 1, "a") + "\n" + _msg("update", 1, "b") + "\n"
+    )
+    q = Engine(spark, "/root/testdata/sf0.001").watch_snapshot(
+        str(feed_dir), snap, str(tmp_path / "ck"), "id",
+        {"id": "bigint", "name": "string"}, available_now=True,
+    )
+    q.awaitTermination(300)
+    q.stop()
+    got = spark.read.parquet(snap).collect()
+    assert sorted(r["id"] for r in got) == [1, 2]
+    assert {r["id"]: r["name"] for r in got}[1] in {"a", "b"}
+
+
 def test_apply_changes_table_scoped(spark):
     """tables=... restricts application; other tables' changes (and the
     unknown-chunk fallback names) leave the base untouched."""
@@ -606,29 +694,7 @@ def test_latest_changes_builds_row_map_once(spark):
     pushed below the keyed projection with the key expression
     substituted, re-building the full row_str map per row (once in
     the filter, once in the projection). Behind the eval_once barrier
-    the optimized plan holds exactly one map build."""
-    from speculare_pgcdc_spark.cdc.apply import _keyed_changes
-
-    feed = spark.createDataFrame(
-        [(1, INSERT_STR)], "lsn bigint, payload string"
-    )
-    changes = parse_wal2json(
-        feed, seq_col="lsn", delete_keys=True
-    ).withColumn("table_name", F.col("table"))
-    # lint the pre-checkpoint keyed frame (latest_changes itself pins
-    # it behind a localCheckpoint, which truncates the visible plan)
-    keyed = _keyed_changes(changes, "id", "string", TABLES)
-    plan = keyed._jdf.queryExecution().optimizedPlan().toString()
-    assert plan.count("map_from_arrays") == 1, plan
-
-
-def test_latest_changes_agg_is_hash_not_sort(spark):
-    """r15 (r14 verdict item 1): the per-key latest-change reduction
-    must plan as HashAggregate — the old max_by over the map-typed
-    _chg buffer planned as SortAggregate (per-partition sort of the
-    full parsed payload). The rewrite aggregates max over a packed
-    decimal (seq, chg_idx) order key and joins the winner back, so
-    the executed plan holds a HashAggregate and NO SortAggregate."""
+    the optimized plan of latest_changes holds exactly one map build."""
     from speculare_pgcdc_spark.cdc.apply import latest_changes
 
     feed = spark.createDataFrame(
@@ -637,10 +703,39 @@ def test_latest_changes_agg_is_hash_not_sort(spark):
     changes = parse_wal2json(
         feed, seq_col="lsn", delete_keys=True
     ).withColumn("table_name", F.col("table"))
+    lat = latest_changes(changes, "id", "string", TABLES)
+    plan = lat._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("map_from_arrays") == 1, plan
+
+
+def test_latest_changes_is_one_aggregate(spark):
+    """latest-per-key is ONE aggregate keyed on the key: one
+    partial/final aggregate pair, no join and no checkpoint. A join
+    back onto the change grain lets changes that tie on their WAL
+    position both survive; one group per key cannot. The feed is
+    built from Arrow so its scan is a LocalRelation, and any
+    ExistingRDD in the plan would be a checkpoint."""
+    import pyarrow as pa
+
+    from speculare_pgcdc_spark.cdc.apply import latest_changes
+
+    feed = spark.createDataFrame(
+        pa.table({"lsn": [1], "payload": [INSERT_STR]}),
+        "lsn bigint, payload string",
+    )
+    changes = parse_wal2json(
+        feed, seq_col="lsn", delete_keys=True
+    ).withColumn("table_name", F.col("table"))
     lat = latest_changes(changes, "id", tables=TABLES)
     plan = lat._jdf.queryExecution().executedPlan().toString()
-    assert "SortAggregate" not in plan, plan
-    assert "HashAggregate" in plan, plan
+    # SortAggregate prints key=[...], HashAggregate keys=[...]
+    aggs = re.findall(
+        r"Aggregate\(keys?=\[id#\d+\], functions=\[(\w+)", plan
+    )
+    assert aggs == ["max_by", "partial_max_by"], plan
+    assert "Join" not in plan, plan
+    assert "ExistingRDD" not in plan, plan
+    assert "LocalTableScan" in plan, plan
 
 
 def test_ensure_feed_hot_recovers_dropped_cache(spark, sf_dir):
