@@ -8,11 +8,13 @@ offset commits, delivery, everything the reference's forwarder loop
 pays (src/forwarder/mod.rs:79-93, single channel, ~79k ev/s in
 BASELINE.md).
 
-Per mode (driver-side fanout_batch vs executor-side
-fanout_partitions): N_RUNS availableNow drains of the same feed with
-fresh checkpoint/outbox each, reporting wall seconds, changes/s
-(pipeline grain, the BASELINE comparator), routed rows/s, and a
-delivery-integrity check (outbox line total == routed row count).
+Per trigger config: N_RUNS availableNow drains of the same feed with
+fresh checkpoint/outbox each, through Engine.watch as users run it
+(fanout_auto picks driver-side fanout_batch or executor-side
+fanout_partitions per microbatch by routed row count), reporting wall
+seconds, changes/s (pipeline grain, the BASELINE comparator), routed
+rows/s, how many microbatches took each path, and a delivery-integrity
+check (outbox line total == routed row count).
 
 Usage: python scripts/stream_e2e_bench.py [sf_dir] [--json out.json]
 """
@@ -42,6 +44,7 @@ from speculare_pgcdc_spark.cdc.pipeline import (  # noqa: E402
 )
 from speculare_pgcdc_spark.engine import Engine  # noqa: E402
 from speculare_pgcdc_spark.session import get_spark  # noqa: E402
+from speculare_pgcdc_spark.streaming import fanout  # noqa: E402
 from speculare_pgcdc_spark.streaming.fanout import (  # noqa: E402
     read_outbox,
 )
@@ -124,16 +127,27 @@ def main() -> None:
         "modes": {},
     }
 
-    for (fpt, label), mode in [
-        (cfg, m)
-        for cfg in DISPATCH_TRIGGER_CONFIGS
-        for m in ("driver", "partitions")
-    ]:
+    # count the path fanout_auto takes per microbatch: it calls both
+    # paths through the module globals
+    paths = {"driver": 0, "partitions": 0}
+
+    def counted(path, fn):
+        def run(*a, **k):
+            paths[path] += 1
+            return fn(*a, **k)
+        return run
+
+    fanout.fanout_batch = counted("driver", fanout.fanout_batch)
+    fanout.fanout_partitions = counted("partitions", fanout.fanout_partitions)
+
+    for fpt, label in DISPATCH_TRIGGER_CONFIGS:
         walls: list[float] = []
         integrity_ok = True
+        for k in paths:
+            paths[k] = 0
         for run in range(N_RUNS):
-            out_dir = os.path.join(work, f"out_{label}_{mode}_{run}")
-            ckpt = os.path.join(work, f"ckpt_{label}_{mode}_{run}")
+            out_dir = os.path.join(work, f"out_{label}_auto_{run}")
+            ckpt = os.path.join(work, f"ckpt_{label}_auto_{run}")
             t0 = time.perf_counter()
             q = eng.watch(
                 feed_dir,
@@ -143,7 +157,6 @@ def main() -> None:
                 max_files_per_trigger=fpt,
                 exactly_once=True,
                 available_now=True,
-                mode=mode,
             )
             try:
                 q.awaitTermination(600)
@@ -159,19 +172,21 @@ def main() -> None:
             shutil.rmtree(ckpt, ignore_errors=True)
         best = min(walls)
         med = sorted(walls)[len(walls) // 2]
-        report["modes"][f"{label}/{mode}"] = {
+        report["modes"][f"{label}/auto"] = {
             "wall_sec": [round(w, 2) for w in walls],
             "best_sec": round(best, 2),
             "median_sec": round(med, 2),
             "changes_per_s": round(n_changes / best),
             "changes_per_s_median": round(n_changes / med),
             "routed_per_s": round(n_routed / best),
+            # microbatches per path, summed over the N_RUNS drains
+            "batches_by_path": dict(paths),
             "delivery_integrity": integrity_ok,
         }
         print(
-            f"{label}/{mode}: best {best:.2f}s / med {med:.2f}s -> "
+            f"{label}/auto: best {best:.2f}s / med {med:.2f}s -> "
             f"{round(n_changes / best)} changes/s "
-            f"({round(n_routed / best)} routed/s), "
+            f"({round(n_routed / best)} routed/s), paths {paths}, "
             f"integrity={'ok' if integrity_ok else 'FAIL'}",
             flush=True,
         )

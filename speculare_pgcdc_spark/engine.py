@@ -152,6 +152,32 @@ class Engine:
         matching change). Oracle-checked via q35/q36."""
         return route(self._changes(payloads, lookup), self.subscriptions())
 
+    def _fanout(
+        self,
+        changes: DataFrame,
+        out_dir: str,
+        checkpoint_dir: str,
+        deliver: Optional[Callable],
+        exactly_once: bool,
+        available_now: bool,
+    ):
+        """The one sink wiring behind watch()/watch_db(): the caller's
+        adapter, else the idempotent (exactly_once) or append outbox
+        under ``out_dir``, fed by the live registry."""
+        if deliver is None:
+            deliver = (
+                idempotent_outbox_deliver(out_dir)
+                if exactly_once
+                else outbox_deliver(out_dir)
+            )
+        return start_fanout_query(
+            changes,
+            self.subscriptions,
+            deliver,
+            checkpoint_dir,
+            available_now=available_now,
+        )
+
     def watch(
         self,
         feed_dir: str,
@@ -162,11 +188,14 @@ class Engine:
         max_files_per_trigger: int = 1,
         exactly_once: bool = False,
         available_now: bool = False,
-        mode: str = "auto",
     ):
         """Start the streaming fan-out (EP2->EP3): change feed ->
         parse -> normalize -> route -> per-subscriber delivery, with
         at-least-once offsets in ``checkpoint_dir`` (LSN-ack analog).
+        ``deliver`` is a ``(sub_id, payloads, batch_id)`` adapter;
+        without one, changes land in the file outbox under ``out_dir``
+        (idempotent per batch with ``exactly_once``). Each microbatch
+        picks its delivery path by size (streaming.fanout.fanout_auto).
 
         Subscription semantics are LIVE: the registry is re-read at
         the top of every microbatch, so subscribe()/unsubscribe()
@@ -182,18 +211,9 @@ class Engine:
             file_change_feed(self.spark, feed_dir, max_files_per_trigger),
             lookup,
         )
-        return start_fanout_query(
-            stream,
-            self.subscriptions,
-            deliver
-            or (
-                idempotent_outbox_deliver(out_dir)
-                if exactly_once
-                else outbox_deliver(out_dir)
-            ),
-            checkpoint_dir,
-            available_now=available_now,
-            mode=mode,
+        return self._fanout(
+            stream, out_dir, checkpoint_dir, deliver, exactly_once,
+            available_now,
         )
 
     def watch_db(
@@ -205,7 +225,6 @@ class Engine:
         deliver: Optional[Callable] = None,
         exactly_once: bool = False,
         available_now: bool = False,
-        mode: str = "auto",
     ):
         """Like :meth:`watch`, but the feed is a database polled with a
         monotonic LSN cursor (streaming.wal_source — the R1-R7
@@ -216,29 +235,25 @@ class Engine:
         parse as the ``seq`` order key, so each subscriber's outbox is
         in WAL order within every microbatch (the reference's
         ordered-channel contract, forwarder/mod.rs:44). Subscription
-        changes apply live per microbatch, as in :meth:`watch`."""
+        changes apply live per microbatch, as in :meth:`watch`.
+
+        A drain (``available_now=True``) is ONE microbatch holding the
+        whole committed backlog: Spark's AvailableNow wrapper fixes its
+        target from a single ``latestOffset()`` call on this Python
+        source, so a per-poll row bound would end the drain early. A
+        continuous query polls at most 10,000 LSNs per microbatch."""
         from speculare_pgcdc_spark.streaming import wal_source
 
         wal_source.register(self.spark)
         opt = "url" if db_path.startswith("jdbc:") else "path"
-        src = (
-            self.spark.readStream.format("wal_poll")
-            .option(opt, db_path)
-            .load()
-            .select("lsn", "payload")
-        )
-        return start_fanout_query(
+        reader = self.spark.readStream.format("wal_poll").option(opt, db_path)
+        if available_now:
+            # int4 max: fits the slot backend's upto_nchanges and LIMIT
+            reader = reader.option("batchlimit", 2**31 - 1)
+        src = reader.load().select("lsn", "payload")
+        return self._fanout(
             self._changes(src, lookup, seq_col="lsn"),
-            self.subscriptions,
-            deliver
-            or (
-                idempotent_outbox_deliver(out_dir)
-                if exactly_once
-                else outbox_deliver(out_dir)
-            ),
-            checkpoint_dir,
-            available_now=available_now,
-            mode=mode,
+            out_dir, checkpoint_dir, deliver, exactly_once, available_now,
         )
 
     def watch_snapshot(
@@ -264,9 +279,6 @@ class Engine:
         when two messages in one microbatch change the same key, which
         one wins is unspecified (cdc/apply.latest_changes)."""
         from speculare_pgcdc_spark.cdc.apply import start_apply_query
-        from speculare_pgcdc_spark.streaming.source import (
-            file_change_feed,
-        )
 
         src = file_change_feed(
             self.spark, feed_dir,
@@ -300,9 +312,6 @@ class Engine:
         key, the winner among same-batch messages on one key
         unspecified (the file feed has no WAL position)."""
         from speculare_pgcdc_spark.cdc.apply import start_matview_query
-        from speculare_pgcdc_spark.streaming.source import (
-            file_change_feed,
-        )
 
         src = file_change_feed(
             self.spark, feed_dir,

@@ -1,6 +1,6 @@
 """WebSocket serving sidecar — the reference's front door
 (src/api/server.rs:18-66 + src/api/ws_handler.rs:28-143) realized as a
-stdlib-only asyncio server over the engine's outbox contract.
+stdlib asyncio server over the engine's outbox contract.
 
 Division of labor (BASELINE.json / SURVEY R21): Spark computes the
 routed per-subscriber change feed and writes each subscriber's outbox
@@ -8,9 +8,10 @@ routed per-subscriber change feed and writes each subscriber's outbox
 two meet at the filesystem: the sidecar registers the subscription in
 the Engine's live registry (applied on the watch query's next
 microbatch — api/ws_handler.rs live-forwarder semantics) and tails the
-subscriber's outbox, pushing each payload line as one text frame — the
-reference's exact per-client dataflow (forwarder -> mpsc channel ->
-websocket sink), with the outbox as the durable channel.
+subscriber's outbox (fanout.OutboxTailer), pushing each payload line as
+one text frame — the reference's exact per-client dataflow (forwarder
+-> mpsc channel -> websocket sink), with the outbox as the durable
+channel.
 
 Protocol behavior mirrored from the reference:
 
@@ -47,10 +48,11 @@ import asyncio
 import base64
 import hashlib
 import itertools
-import os
 import ssl as _ssl
 from typing import Callable, Optional
 from urllib.parse import parse_qs, urlsplit
+
+from speculare_pgcdc_spark.streaming.fanout import OutboxTailer
 
 _WS_GUID = "258EAFA5-E914-47DA-95CA-C5AB0DC85B11"
 
@@ -136,69 +138,15 @@ async def read_frame(
     return opcode, data
 
 
-class OutboxTailer:
-    """Incremental outbox reader: per-file byte offsets, so each poll
-    reads only APPENDED data instead of re-reading the whole outbox
-    (the previous read_lines-per-poll was O(total outbox) every 50 ms —
-    quadratic over a long-lived high-volume subscription). Understands
-    both delivery layouts (append-mode outbox.jsonl + per-batch files,
-    the fanout.read_outbox order) and only consumes complete lines, so
-    a half-appended line is left for the next poll. An idempotent
-    batch replay rewrites a file with identical bytes — the stored
-    offset already covers them, so replays emit nothing new."""
-
-    def __init__(self, out_dir: str, sub_id: int) -> None:
-        self.dir = os.path.join(out_dir, str(sub_id))
-        self._offsets: dict[str, int] = {}
-
-    @staticmethod
-    def _batch_no(name: str) -> int:
-        try:
-            return int(name.removeprefix("batch-").removesuffix(".jsonl"))
-        except ValueError:
-            return -1
-
-    def poll(self) -> list[str]:
-        if not os.path.isdir(self.dir):
-            return []
-        names = sorted(
-            (n for n in os.listdir(self.dir) if n.endswith(".jsonl")),
-            key=lambda n: (n != "outbox.jsonl", self._batch_no(n)),
-        )
-        out: list[str] = []
-        for n in names:
-            path = os.path.join(self.dir, n)
-            off = self._offsets.get(n, 0)
-            try:
-                size = os.path.getsize(path)
-            except OSError:
-                continue
-            if size <= off:
-                continue
-            with open(path, "rb") as f:
-                f.seek(off)
-                chunk = f.read(size - off)
-            last_nl = chunk.rfind(b"\n")
-            if last_nl < 0:
-                continue
-            self._offsets[n] = off + last_nl + 1
-            out.extend(
-                ln.decode("utf-8")
-                for ln in chunk[: last_nl + 1].split(b"\n")[:-1]
-                if ln.strip()
-            )
-        return out
-
-
 class WsSidecar:
     """Serve WebSocket subscriptions over a live registry + outbox dir.
 
     subscribe(sub_id, dsl) must raise ValueError-family (DslError) on a
     bad query — mapped to HTTP 400 exactly like the reference's
     ExplicitError; unsubscribe(sub_id) is called on disconnect.
-    read_lines(sub_id) returns ALL delivered payload lines so far (the
-    fanout.read_outbox contract); the tailer pushes the suffix beyond
-    what it already sent, polling every ``poll_interval`` seconds.
+    Each client's outbox under ``out_dir`` is read by a
+    fanout.OutboxTailer, which pushes only the lines appended since its
+    last poll, every ``poll_interval`` seconds.
     """
 
     def __init__(
@@ -206,7 +154,6 @@ class WsSidecar:
         out_dir: str,
         subscribe: Callable[[int, str], object],
         unsubscribe: Callable[[int], None],
-        read_lines: Optional[Callable[[int], list]] = None,
         poll_interval: float = 0.05,
         path: str = "/ws",
         auth_from_headers: Optional[Callable[[dict], object]] = None,
@@ -215,10 +162,6 @@ class WsSidecar:
         self.out_dir = out_dir
         self.subscribe = subscribe
         self.unsubscribe = unsubscribe
-        #: custom read_lines keeps the suffix-framing contract; with
-        #: None the default outbox layout gets the offset-tracking
-        #: OutboxTailer in _serve_client (no full-outbox re-read path)
-        self._custom_read_lines = read_lines
         self.poll_interval = poll_interval
         self.path = path
         #: ID_COUNTER analog — per sidecar, and ``id_taken`` lets the
@@ -418,18 +361,7 @@ class WsSidecar:
                 stop.set()
 
         recv = asyncio.create_task(recv_loop())
-        if self._custom_read_lines is not None:
-            sent = 0
-
-            def poll() -> list[str]:
-                nonlocal sent
-                lines = self._custom_read_lines(sub_id)
-                new = lines[sent:]
-                sent = max(sent, len(lines))
-                return new
-
-        else:
-            poll = OutboxTailer(self.out_dir, sub_id).poll
+        poll = OutboxTailer(self.out_dir, sub_id).poll
         try:
             while not stop.is_set():
                 for line in poll():

@@ -10,12 +10,13 @@ returns, so a crash mid-batch redelivers (duplicates possible, loss not)
 
 Delivery adapters are pluggable; the default writes JSON-lines per
 subscriber directory (an idempotent, replayable outbox a sidecar
-WebSocket server tails). Tests use an in-memory collector.
+WebSocket server tails). Tests use an in-memory collector. This module
+owns the outbox layout: the two writers, and :class:`OutboxTailer`,
+its one reader.
 """
 
 from __future__ import annotations
 
-import inspect
 import itertools
 import os
 from typing import Callable
@@ -23,24 +24,9 @@ from typing import Callable
 import pyarrow as pa
 from pyspark.sql import DataFrame
 
-#: rows handed to a delivery adapter: (sub_id, change_json, batch_id)
-Delivery = Callable[..., None]
-
-
-def _takes_batch(deliver: Delivery) -> bool:
-    # two-arg adapters (the original Delivery contract) keep working;
-    # only batch-aware adapters receive the batch_id. Decided by
-    # signature, not by retrying on TypeError — a retry would re-invoke
-    # (and double-deliver through) an adapter that raised for its own
-    # reasons.
-    try:
-        params = inspect.signature(deliver).parameters
-        return len(params) >= 3 or any(
-            p.kind == inspect.Parameter.VAR_POSITIONAL
-            for p in params.values()
-        )
-    except (TypeError, ValueError):
-        return True
+#: a delivery adapter: called once per (subscriber, microbatch) as
+#: ``deliver(sub_id, payloads, batch_id)``, payloads in WAL order
+Delivery = Callable[[int, list, int], None]
 
 
 #: ordering columns carried through the pipeline (cdc.pipeline
@@ -86,13 +72,8 @@ def fanout_batch(
         table.column("sub_id").to_pylist(),
         table.column("change_json").to_pylist(),
     )
-    takes_batch = _takes_batch(deliver)
     for sub_id, grp in itertools.groupby(rows, key=lambda r: r[0]):
-        payloads = [p for _, p in grp]
-        if takes_batch:
-            deliver(sub_id, payloads, batch_id)
-        else:
-            deliver(sub_id, payloads)
+        deliver(sub_id, [p for _, p in grp], batch_id)
 
 
 def fanout_partitions(
@@ -119,17 +100,12 @@ def fanout_partitions(
     # DIFFERENT line order than a consumer already tailed. fanout_batch
     # sorts its collected rows on the same key.
     parted = slim.repartition("sub_id").sortWithinPartitions(*slim.columns)
-    takes_batch = _takes_batch(deliver)
 
     def run(rows) -> None:
         for sub_id, grp in itertools.groupby(
             rows, key=lambda r: r["sub_id"]
         ):
-            payloads = [r["change_json"] for r in grp]
-            if takes_batch:
-                deliver(sub_id, payloads, batch_id)
-            else:
-                deliver(sub_id, payloads)
+            deliver(sub_id, [r["change_json"] for r in grp], batch_id)
 
     parted.foreachPartition(run)
 
@@ -220,29 +196,67 @@ def idempotent_outbox_deliver(out_dir: str) -> Delivery:
     return deliver
 
 
-def read_outbox(out_dir: str, sub_id: int) -> list[str]:
-    """All delivered payloads for a subscriber, across both adapters'
-    layouts, in batch order."""
-    d = os.path.join(out_dir, str(sub_id))
-    if not os.path.isdir(d):
-        return []
-    lines: list[str] = []
-    def batch_no(n: str) -> int:
+class OutboxTailer:
+    """Incremental outbox reader: per-file byte offsets, so each poll
+    reads only APPENDED data instead of re-reading the whole outbox
+    (a full re-read per poll is O(total outbox) every 50 ms —
+    quadratic over a long-lived high-volume subscription). Reads both
+    writers' layouts, ``outbox.jsonl`` first and then the
+    ``batch-<id>.jsonl`` files in numeric batch order, and only
+    consumes complete lines, so a half-appended line is left for the
+    next poll. An idempotent batch replay rewrites a file with
+    identical bytes — the stored offset already covers them, so
+    replays emit nothing new."""
+
+    def __init__(self, out_dir: str, sub_id: int) -> None:
+        self.dir = os.path.join(out_dir, str(sub_id))
+        self._offsets: dict[str, int] = {}
+
+    @staticmethod
+    def _batch_no(name: str) -> int:
         # numeric batch order: lexicographic puts batch-10 before
         # batch-2
         try:
-            return int(n.removeprefix("batch-").removesuffix(".jsonl"))
+            return int(name.removeprefix("batch-").removesuffix(".jsonl"))
         except ValueError:
             return -1
 
-    names = sorted(
-        (n for n in os.listdir(d) if n.endswith(".jsonl")),
-        key=lambda n: (n != "outbox.jsonl", batch_no(n)),
-    )
-    for n in names:
-        with open(os.path.join(d, n)) as f:
-            lines.extend(ln.rstrip("\n") for ln in f if ln.strip())
-    return lines
+    def poll(self) -> list[str]:
+        if not os.path.isdir(self.dir):
+            return []
+        names = sorted(
+            (n for n in os.listdir(self.dir) if n.endswith(".jsonl")),
+            key=lambda n: (n != "outbox.jsonl", self._batch_no(n)),
+        )
+        out: list[str] = []
+        for n in names:
+            path = os.path.join(self.dir, n)
+            off = self._offsets.get(n, 0)
+            try:
+                size = os.path.getsize(path)
+            except OSError:
+                continue
+            if size <= off:
+                continue
+            with open(path, "rb") as f:
+                f.seek(off)
+                chunk = f.read(size - off)
+            last_nl = chunk.rfind(b"\n")
+            if last_nl < 0:
+                continue
+            self._offsets[n] = off + last_nl + 1
+            out.extend(
+                ln.decode("utf-8")
+                for ln in chunk[: last_nl + 1].split(b"\n")[:-1]
+                if ln.strip()
+            )
+        return out
+
+
+def read_outbox(out_dir: str, sub_id: int) -> list[str]:
+    """All delivered payloads for a subscriber, across both adapters'
+    layouts, in batch order."""
+    return OutboxTailer(out_dir, sub_id).poll()
 
 
 def start_fanout_query(
@@ -252,7 +266,6 @@ def start_fanout_query(
     checkpoint_dir: str,
     query_name: str = "cdc-fanout",
     available_now: bool = False,
-    mode: str = "auto",
 ):
     """Wire the full streaming EP3: parse/normalize is upstream; here the
     stream-static routing join + foreachBatch fan-out, checkpointed.
@@ -268,14 +281,13 @@ def start_fanout_query(
     per-batch rebuild costs tens of ms, not the ~300 ms of a
     parallelized row list.
 
-    mode="auto" (default) sizes each microbatch and picks the path:
-    small batches funnel their routed rows through the driver in one
+    Every microbatch goes through :func:`fanout_auto`, which picks the
+    path from the batch's routed row count: up to
+    ``AUTO_DRIVER_MAX_ROWS`` rows funnel through the driver in one
     collect (fanout_batch — fine at reference-scale fan-out, where one
-    forwarder thread does the same), batches over
-    ``AUTO_DRIVER_MAX_ROWS`` deliver on the executors
-    (fanout_partitions — the large-fan-out path; the adapter must be
-    picklable and filesystem-shared). mode="driver" / mode="partitions"
-    pin one path unconditionally.
+    forwarder thread does the same), larger batches deliver on the
+    executors (fanout_partitions — the adapter must be picklable and
+    filesystem-shared).
 
     available_now=True runs in drain-and-stop mode (Trigger.AvailableNow):
     process everything committed so far in rate-limited microbatches,
@@ -284,22 +296,10 @@ def start_fanout_query(
     from speculare_pgcdc_spark.cdc.commit import start_foreach_batch
     from speculare_pgcdc_spark.cdc.pipeline import route
 
-    fans = {
-        "auto": fanout_auto,
-        "driver": fanout_batch,
-        "partitions": fanout_partitions,
-    }
-    if mode not in fans:
-        raise ValueError(f"unknown fan-out mode: {mode!r}")
-    fan = fans[mode]
-
     def process(batch_df: DataFrame, batch_id: int) -> None:
         subs = subscriptions() if callable(subscriptions) else subscriptions
-        routed = route(batch_df, subs)
-        fan(routed, deliver, batch_id)
+        fanout_auto(route(batch_df, subs), deliver, batch_id)
 
     return start_foreach_batch(
         changes_stream, process, checkpoint_dir, query_name, available_now
     )
-
-

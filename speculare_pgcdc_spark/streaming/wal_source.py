@@ -569,26 +569,19 @@ def _slot_backend_from_options(o: dict) -> "PostgresSlotWalBackend":
 
 def _backend_from_options(options: dict) -> WalBackend:
     name = options.get("backend")
-    if name is not None:
-        return BACKENDS[name](options)
-    if "url" in options:
-        # a slot option selects the relay-free slot-managed backend;
-        # wal_table keeps the relay-table backend
-        if "slot" in options:
-            return _slot_backend_from_options(options)
-        return PostgresWalBackend(
-            options["url"],
-            user=options.get("user"),
-            password=options.get("password"),
-            wal_table=options.get("wal_table", "wal"),
-            ack_table=options.get("ack_table", "wal_ack"),
-        )
-    if "path" in options:
-        return SqliteWalBackend(options["path"])
-    raise ValueError(
-        "wal_poll needs option 'path' (sqlite), 'url' (jdbc:postgresql)"
-        " or 'backend' (registered factory)"
-    )
+    if name is None:
+        if "url" in options:
+            # a slot option selects the relay-free slot-managed backend;
+            # wal_table keeps the relay-table backend
+            name = "postgres_slot" if "slot" in options else "postgres"
+        elif "path" in options:
+            name = "sqlite"
+        else:
+            raise ValueError(
+                "wal_poll needs option 'path' (sqlite), 'url'"
+                " (jdbc:postgresql) or 'backend' (registered factory)"
+            )
+    return BACKENDS[name](options)
 
 
 #: named backend factories (options dict -> WalBackend); tests register

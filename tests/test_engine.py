@@ -165,6 +165,43 @@ def test_end_to_end_watch_db(spark, tmp_path):
         assert len([ln for ln in f if ln.strip()]) == 2
 
 
+def test_watch_db_drain_delivers_whole_backlog(spark, sf_dir, tmp_path):
+    """One available_now drain of watch_db delivers every committed
+    change, not just the first 10,000 LSNs: Spark's AvailableNow
+    wrapper fixes its target from a single latestOffset() call on the
+    Python source, so the drain must not bound that poll."""
+    import sqlite3
+
+    from speculare_pgcdc_spark.streaming import wal_source
+    from speculare_pgcdc_spark.streaming.fanout import read_outbox
+
+    n = 10_050
+    db = str(tmp_path / "wal.sqlite")
+    wal_source.ensure_wal_tables(db)
+    con = sqlite3.connect(db)
+    con.executemany(
+        "INSERT INTO wal VALUES (?, ?)",
+        [
+            (lsn, json.dumps({"change": [{
+                "kind": "insert", "table": "events_a",
+                "columnnames": ["id"], "columnvalues": [lsn],
+            }]}))
+            for lsn in range(1, n + 1)
+        ],
+    )
+    con.commit()
+    con.close()
+    eng = Engine(spark, sf_dir, tables=FEED_TABLES)
+    eng.subscribe(7, "insert:events_a")
+    out_dir = str(tmp_path / "out")
+    q = eng.watch_db(db, out_dir, str(tmp_path / "ckpt"),
+                     lookup=lookup_df(spark), exactly_once=True,
+                     available_now=True)
+    assert q.awaitTermination(300)
+    got = [json.loads(p)["columnvalues"][0] for p in read_outbox(out_dir, 7)]
+    assert got == list(range(1, n + 1))
+
+
 def test_engine_watch_matview_facade(spark, tmp_path):
     """Round-12 facade: eng.watch_matview maintains snapshot + IVM
     view from a file feed in one call (the q97 consumer without

@@ -807,23 +807,6 @@ def test_read_outbox_numeric_batch_order(tmp_path):
     assert got == [f"payload-{b}" for b in range(12)]  # 10 after 9, not after 1
 
 
-def test_two_arg_delivery_adapters_still_work(spark, tmp_path):
-    """The original Delivery contract (sub_id, payloads) must not break
-    now that fanout threads batch_id to batch-aware adapters."""
-    from speculare_pgcdc_spark.streaming.fanout import fanout_batch
-
-    seen = []
-
-    def legacy_deliver(sub_id, payloads):
-        seen.append((sub_id, tuple(payloads)))
-
-    routed = spark.createDataFrame(
-        [(1, "a"), (1, "b")], "sub_id int, change_json string"
-    )
-    fanout_batch(routed, legacy_deliver, batch_id=3)
-    assert seen and seen[0][0] == 1 and sorted(seen[0][1]) == ["a", "b"]
-
-
 def test_wal_poll_duplicate_lsns_not_skipped(spark, tmp_path):
     """A batch limit cutting inside a run of equal LSNs must not strand
     the remaining duplicates behind the cursor."""
@@ -944,9 +927,11 @@ def test_fanout_partitions_matches_driver_path(spark, tmp_path):
     assert read_outbox(drv_dir, 1) == ["s1-null", "s1-a", "s1-b", "s1-c"]
 
 
-def test_fanout_modes_through_streaming_query(spark, tmp_path):
-    """start_fanout_query(mode='partitions') end-to-end: same routed
-    outbox contents as the driver mode over a real StreamingQuery."""
+def test_fanout_modes_through_streaming_query(spark, tmp_path, monkeypatch):
+    """Both fan-out paths end-to-end over a real StreamingQuery: the
+    executor path (forced by a zero AUTO_DRIVER_MAX_ROWS) delivers the
+    same routed outbox contents as the driver path."""
+    from speculare_pgcdc_spark.streaming import fanout
     from speculare_pgcdc_spark.streaming.fanout import (
         idempotent_outbox_deliver,
         read_outbox,
@@ -966,8 +951,9 @@ def test_fanout_modes_through_streaming_query(spark, tmp_path):
     subs = subscriptions_df(spark, [(1, "insert:events_a")], FEED_TABLES)
 
     outs = {}
-    for mode in ("driver", "partitions"):
-        out_dir = str(tmp_path / f"out_{mode}")
+    for path, max_rows in (("driver", 100_000), ("partitions", 0)):
+        monkeypatch.setattr(fanout, "AUTO_DRIVER_MAX_ROWS", max_rows)
+        out_dir = str(tmp_path / f"out_{path}")
         stream = normalize_hypertables(
             parse_wal2json(file_change_feed(spark, feed_dir)),
             lookup_df(spark),
@@ -976,29 +962,22 @@ def test_fanout_modes_through_streaming_query(spark, tmp_path):
             stream,
             subs,
             idempotent_outbox_deliver(out_dir),
-            str(tmp_path / f"ckpt_{mode}"),
+            str(tmp_path / f"ckpt_{path}"),
             available_now=True,
-            mode=mode,
         )
         assert q.awaitTermination(120)
-        outs[mode] = sorted(read_outbox(out_dir, 1))
+        outs[path] = sorted(read_outbox(out_dir, 1))
     assert outs["driver"] == outs["partitions"] and len(outs["driver"]) == 6
 
-    import pytest as _pytest
-    with _pytest.raises(ValueError, match="unknown fan-out mode"):
-        start_fanout_query(
-            stream, subs, idempotent_outbox_deliver(str(tmp_path / "x")),
-            str(tmp_path / "ckpt_x"), mode="bogus",
-        )
 
-
-def test_watch_db_outbox_in_wal_order(spark, tmp_path):
+def test_watch_db_outbox_in_wal_order(spark, tmp_path, monkeypatch):
     """ADVICE r1: per-subscriber delivery order. The wal_poll lsn rides
     through parse (seq) with the intra-message posexplode index
     (chg_idx); the outbox must list changes in (lsn, chg_idx) order even
-    though routing shuffles them."""
+    though routing shuffles them — on the driver path and on the
+    executor path (forced by a zero AUTO_DRIVER_MAX_ROWS)."""
     from speculare_pgcdc_spark.engine import Engine
-    from speculare_pgcdc_spark.streaming import wal_source
+    from speculare_pgcdc_spark.streaming import fanout, wal_source
     from speculare_pgcdc_spark.streaming.fanout import read_outbox
 
     db = str(tmp_path / "wal.sqlite")
@@ -1026,22 +1005,22 @@ def test_watch_db_outbox_in_wal_order(spark, tmp_path):
 
     eng = Engine(spark=spark, tables=["events_a", "events_b"])
     eng.subscribe(1, "insert:events_a")
-    for mode in ("driver", "partitions"):
-        out_dir = str(tmp_path / f"out_{mode}")
+    for path, max_rows in (("driver", 100_000), ("partitions", 0)):
+        monkeypatch.setattr(fanout, "AUTO_DRIVER_MAX_ROWS", max_rows)
+        out_dir = str(tmp_path / f"out_{path}")
         q = eng.watch_db(
             db,
             out_dir,
-            str(tmp_path / f"ckpt_{mode}"),
+            str(tmp_path / f"ckpt_{path}"),
             exactly_once=True,
             available_now=True,
-            mode=mode,
         )
         assert q.awaitTermination(120)
         got = [
             json.loads(p)["columnvalues"][0]
             for p in read_outbox(out_dir, 1)
         ]
-        assert got == [1, 2, 3, 4, 5, 6], f"{mode}: {got}"
+        assert got == [1, 2, 3, 4, 5, 6], f"{path}: {got}"
 
 
 def test_feedgen_escapes_special_content(spark):
@@ -1188,7 +1167,7 @@ def test_transform_with_state_running_count(spark, tmp_path):
 
 def test_fanout_auto_selects_path_by_batch_size(spark, tmp_path, monkeypatch):
     """Round-3 verdict #3: the default fan-out must not funnel large
-    batches through the driver. mode='auto' picks the driver path at or
+    batches through the driver. fanout_auto picks the driver path at or
     below AUTO_DRIVER_MAX_ROWS and the executor path above it, and both
     paths produce identical outboxes."""
     from speculare_pgcdc_spark.streaming import fanout as fo
@@ -1228,7 +1207,7 @@ def test_fanout_auto_selects_path_by_batch_size(spark, tmp_path, monkeypatch):
 
 
 def test_fanout_auto_small_batch_evaluates_routing_once(spark, tmp_path):
-    """A small routed microbatch is evaluated ONCE in auto mode: one
+    """A small routed microbatch is evaluated ONCE by fanout_auto: one
     bounded Arrow collect both sizes and delivers the batch — no
     count pass, no groupBy shuffle. The subscriptions frame is a
     LocalRelation, so the routing join's broadcast side holds no
@@ -1265,7 +1244,9 @@ def test_fanout_auto_small_batch_evaluates_routing_once(spark, tmp_path):
     group = "fanout-auto-small-batch"
     sc.setJobGroup(group, "fanout_auto over a small batch")
     try:
-        fanout_auto(routed, lambda sub, payloads: got.update({sub: payloads}))
+        fanout_auto(
+            routed, lambda sub, payloads, _b: got.update({sub: payloads})
+        )
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     # job events reach the status store through the async listener bus
@@ -1276,20 +1257,6 @@ def test_fanout_auto_small_batch_evaluates_routing_once(spark, tmp_path):
     # single-stage jobs: no shuffle anywhere on the small-batch path
     assert all(len(tracker.getJobInfo(j).stageIds) == 1 for j in jobs)
     assert sorted(got) == [1, 2] and got[1] == got[2] and len(got[1]) == 4
-
-
-def test_fanout_default_mode_is_auto():
-    """Pin the public defaults: Engine.watch / watch_db /
-    start_fanout_query all fan out in auto mode unless told otherwise."""
-    import inspect
-
-    from speculare_pgcdc_spark.engine import Engine
-    from speculare_pgcdc_spark.streaming.fanout import start_fanout_query
-
-    for fn in (Engine.watch, Engine.watch_db, start_fanout_query):
-        assert (
-            inspect.signature(fn).parameters["mode"].default == "auto"
-        ), fn.__qualname__
 
 
 def test_streaming_cdc_apply_maintains_snapshot(spark, tmp_path):
@@ -1824,7 +1791,7 @@ def test_streaming_cusum_matches_python_fold(spark, tmp_path):
 
 
 def test_fanout_auto_flips_paths_mid_stream(spark, tmp_path, monkeypatch):
-    """Chaos test (VERDICT r5 #8): mode='auto' must flip driver ->
+    """Chaos test (VERDICT r5 #8): fanout_auto must flip driver ->
     executor BETWEEN microbatches when a batch crosses
     AUTO_DRIVER_MAX_ROWS, and the outbox must stay complete and in
     WAL order across the flip."""
@@ -1875,7 +1842,6 @@ def test_fanout_auto_flips_paths_mid_stream(spark, tmp_path, monkeypatch):
         idempotent_outbox_deliver(out_dir),
         str(tmp_path / "ckpt_auto"),
         available_now=True,
-        mode="auto",
     )
     assert q.awaitTermination(120)
     # both paths ran, one per batch (file order = batch order)
@@ -1952,7 +1918,7 @@ def test_streaming_ewma_multi_chunk_batch_folds_in_order(
 def test_fanout_auto_flips_driver_to_executor_mid_stream(
     spark, tmp_path, monkeypatch
 ):
-    """Chaos: auto mode re-decides the delivery path PER BATCH, so one
+    """Chaos: fanout_auto re-decides the delivery path PER BATCH, so one
     running query can cross the AUTO_DRIVER_MAX_ROWS threshold
     mid-stream (small batch -> driver collect; burst batch ->
     executor-side foreachPartition) with no restart, no loss and no
@@ -2056,7 +2022,7 @@ def test_fanout_auto_mode_flips_mid_stream(spark, tmp_path, monkeypatch):
         lookup_df(spark),
     )
     q = start_fanout_query(
-        stream, subs, deliver, ckpt, query_name="auto-flip", mode="auto"
+        stream, subs, deliver, ckpt, query_name="auto-flip"
     )
     try:
         # batch 1: 3 routed rows <= 10 -> driver path
