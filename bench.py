@@ -483,10 +483,18 @@ def main() -> None:
     # line that survives any front-truncation. Parsers that read the
     # last JSON line get the headline; parsers that scan all lines get
     # the detail too.
+    # the host the numbers came from: the session's task slots
+    # (SPARK_GRAFT_CPUS, 32 by default) need not match the usable
+    # cores, and a total compares only where both are equal
+    host = {
+        "cpus": len(os.sched_getaffinity(0)),
+        "default_parallelism": spark.sparkContext.defaultParallelism,
+    }
     detail = {
                 "metric": "headline_suite_detail",
                 "value": total,
                 "unit": "sec",
+                **host,
                 "queries": timings,
                 "queries_median": medians,
                 "bench_runs": runs,
@@ -548,6 +556,7 @@ def main() -> None:
                 "metric": "headline_suite_total",
                 "value": total,
                 "unit": "sec",
+                **host,
                 "queries": {n: timings.get(n) for n in tier1},
                 # medians ride the compact line too so a truncated
                 # artifact still supports the min+median regression

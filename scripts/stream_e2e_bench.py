@@ -131,14 +131,16 @@ def main() -> None:
     # paths through the module globals
     paths = {"driver": 0, "partitions": 0}
 
-    def counted(path, fn):
+    def counted(tally, path, fn):
         def run(*a, **k):
-            paths[path] += 1
+            tally[path] += 1
             return fn(*a, **k)
         return run
 
-    fanout.fanout_batch = counted("driver", fanout.fanout_batch)
-    fanout.fanout_partitions = counted("partitions", fanout.fanout_partitions)
+    fanout.fanout_batch = counted(paths, "driver", fanout.fanout_batch)
+    fanout.fanout_partitions = counted(
+        paths, "partitions", fanout.fanout_partitions
+    )
 
     for fpt, label in DISPATCH_TRIGGER_CONFIGS:
         walls: list[float] = []
@@ -219,9 +221,17 @@ def main() -> None:
     base = cat_table(spark, sf_dir, "events").select(
         *[F.col(c).cast(t).alias(c) for c, t in ivm_cols.items()]
     )
+    # count the microbatches whose change set took the join path:
+    # stage_snapshot calls apply_latest (through the module global)
+    # only there; every other microbatch rode the plan as literals
+    from speculare_pgcdc_spark.cdc import apply as _apply
+
+    n_join = {"join": 0}
+    _apply.apply_latest = counted(n_join, "join", _apply.apply_latest)
     for fpt, label in TRIGGER_CONFIGS:
         walls = []
         integrity_ok = True
+        n_join["join"] = n_batches = 0
         for run in range(N_RUNS):
             snap = os.path.join(work, f"ivm_snap_{label}_{run}")
             mv = os.path.join(work, f"ivm_mv_{label}_{run}")
@@ -248,6 +258,9 @@ def main() -> None:
             finally:
                 q.stop()
             walls.append(time.perf_counter() - t0)
+            n_batches += sum(
+                1 for p in q.recentProgress if p["numInputRows"]
+            )
             got = {r["event_type"]: (r["n"], str(r["sv"])) for r in
                    spark.read.parquet(mv).collect()}
             full = {r["event_type"]: (r["n"], str(r["sv"])) for r in
@@ -265,11 +278,15 @@ def main() -> None:
             "median_sec": round(med, 2),
             "changes_per_s": round(n_changes / best),
             "changes_per_s_median": round(n_changes / med),
+            # microbatches per snapshot-stage path, over the N_RUNS
+            "batches_by_path": {"literal": n_batches - n_join["join"],
+                                **n_join},
             "view_integrity": integrity_ok,
         }
         print(
             f"{label}/ivm_matview: best {best:.2f}s / med {med:.2f}s "
             f"-> {round(n_changes / best)} changes/s, "
+            f"join-path batches {n_join['join']}/{n_batches}, "
             f"integrity={'ok' if integrity_ok else 'FAIL'}",
             flush=True,
         )

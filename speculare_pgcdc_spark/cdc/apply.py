@@ -10,10 +10,14 @@ is extracted from the raw payload (``change_json``), which both parse
 branches preserve verbatim.
 
 Scale shape: latest-change-per-key is one aggregation
-(max_by over the (seq, chg_idx) WAL order — no window, no join), the
-merge is one equi-join on the key. With the base bucketed by key
-(sources.write_bucketed) the join side is co-located and the whole
-apply is a single shuffle of the (small) change batch. The snapshot
+(max_by over the (seq, chg_idx) WAL order — no window, no join). The
+merge is planned by the size of the change set
+(:func:`stage_snapshot`): up to ``LOOKUP_INLINE_MAX_ROWS`` changed
+keys ride the plan as literals (an InSet of keys and a LocalRelation
+of upserts: no join, no exchange); a larger set is one equi-join on
+the key. With the base bucketed by key (sources.write_bucketed) the
+join side is co-located and the whole apply is a single shuffle of
+the (small) change batch. The snapshot
 OVERWRITE in :func:`start_apply_query` is the local-parquet stand-in
 for a real table format's row-level MERGE (Delta/Iceberg) — the apply
 PLAN is the part that carries over.
@@ -21,12 +25,15 @@ PLAN is the part that carries over.
 
 from __future__ import annotations
 
+import datetime
+import decimal
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from speculare_pgcdc_spark.catalog import eval_once
+from speculare_pgcdc_spark.cdc import pipeline
 from speculare_pgcdc_spark.cdc.commit import (
     BAND_COL,
     band_dir,
@@ -143,6 +150,34 @@ def latest_changes(
     )
 
 
+def _ordered(key_col: str, columns: dict[str, str]) -> list[str]:
+    return [key_col, *[c for c in columns if c != key_col]]
+
+
+def _q(col: str) -> str:
+    """``col`` as a quoted SQL identifier."""
+    return "`" + col.replace("`", "``") + "`"
+
+
+def _typed_sql(key_col: str, columns: dict[str, str]) -> list[str]:
+    """The snapshot's columns and types as SQL: one ``selectExpr`` is
+    parsed and analyzed once, where a Column per cast parses each type
+    string in its own JVM call (~40 ms per plan for seven columns)."""
+    return [
+        f"CAST({_q(c)} AS {columns.get(c, 'string')}) AS {_q(c)}"
+        for c in _ordered(key_col, columns)
+    ]
+
+
+def _upsert_cols(key_col: str, columns: dict[str, str]) -> list:
+    """An upsert's typed value columns, read from its row map."""
+    return [
+        F.try_element_at("_chg.row_str", F.lit(c)).cast(t).alias(c)
+        for c, t in columns.items()
+        if c != key_col
+    ]
+
+
 def apply_latest(
     base: DataFrame,
     latest: DataFrame,
@@ -152,20 +187,12 @@ def apply_latest(
     """Merge a :func:`latest_changes` frame into ``base``: upserts
     replace the row, deletes remove it, untouched keys pass through;
     one equi-join on the key."""
-    ordered = [key_col, *[c for c in columns if c != key_col]]
     upserts = latest.filter(F.col("_chg.kind") != "delete").select(
-        F.col(key_col),
-        *[
-            F.try_element_at("_chg.row_str", F.lit(c))
-            .cast(t)
-            .alias(c)
-            for c, t in columns.items()
-            if c != key_col
-        ],
+        F.col(key_col), *_upsert_cols(key_col, columns)
     )
-    survivors = base.select(
-        *[F.col(c).cast(columns.get(c, "string")).alias(c) for c in ordered]
-    ).join(latest.select(key_col), key_col, "left_anti")
+    survivors = base.selectExpr(*_typed_sql(key_col, columns)).join(
+        latest.select(key_col), key_col, "left_anti"
+    )
     return survivors.unionByName(upserts)
 
 
@@ -264,15 +291,22 @@ def touched_groups_latest(
 def refresh_aggregates(
     matview: DataFrame,
     new_snapshot: DataFrame,
-    groups: DataFrame,
+    groups: DataFrame | Column,
     group_col: str,
     agg_cols: list,
 ) -> DataFrame:
     """Incremental materialized-view maintenance (IVM): re-aggregate
     ONLY the groups a batch touched, carry every other matview row
     forward untouched. ``groups`` is the one-column frame from
-    :func:`touched_groups`; ``agg_cols`` the aliased aggregate
-    expressions (the view definition).
+    :func:`touched_groups`, or a never-NULL boolean predicate over
+    ``group_col`` that holds on exactly the touched groups
+    (:func:`in_groups`: a change set small enough to ride the plan as
+    literals, so neither side is joined); ``agg_cols`` the aliased
+    aggregate expressions (the view definition).
+
+    Group matching is null-safe: a NULL group is refreshed like any
+    other when a batch touches it (an ``=`` join never matches NULL,
+    so its stale view row was carried forward for good).
 
     Why partial recompute instead of +/- deltas: wal2json deletes (and
     update-old-images) carry no value columns without REPLICA IDENTITY
@@ -284,14 +318,196 @@ def refresh_aggregates(
     broadcast semi/anti joins never shuffle the snapshot or the view.
     A group whose last row was deleted drops out of both sides, i.e.
     the view row disappears, matching a full recompute."""
-    g = F.broadcast(groups)
-    recomputed = (
-        new_snapshot.join(g, group_col, "left_semi")
-        .groupBy(group_col)
-        .agg(*agg_cols)
+    if isinstance(groups, DataFrame):
+        g = F.broadcast(groups.select(F.col(group_col).alias("_touched")))
+        hit = F.col(group_col).eqNullSafe(F.col("_touched"))
+        recomputed = new_snapshot.join(g, hit, "left_semi")
+        kept = matview.join(g, hit, "left_anti")
+    else:
+        recomputed = new_snapshot.filter(groups)
+        kept = matview.filter(~groups)
+    return kept.unionByName(recomputed.groupBy(group_col).agg(*agg_cols))
+
+
+def _sql_literal(v) -> str | None:
+    """``v`` as a Spark SQL literal; None for a type with none here."""
+    if isinstance(v, bool):
+        return "TRUE" if v else "FALSE"
+    if isinstance(v, int):
+        return str(v)
+    if isinstance(v, str):
+        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    if isinstance(v, float):  # repr round-trips; NaN/inf cast too
+        return f"CAST('{v!r}' AS DOUBLE)"
+    if isinstance(v, decimal.Decimal):
+        return f"{v:f}BD"
+    if isinstance(v, datetime.datetime):
+        kind = "TIMESTAMP_NTZ" if v.tzinfo is None else "TIMESTAMP"
+        return f"{kind}'{v.isoformat(sep=' ')}'"
+    if isinstance(v, datetime.date):
+        return f"DATE'{v.isoformat()}'"
+    return None
+
+
+def in_set(expr: str, values) -> str | None:
+    """SQL for ``expr IN values`` as a never-NULL predicate (a NULL
+    ``expr`` is not in the set; NULL values are ignored), or None when
+    a value has no SQL literal. The set is SQL text, parsed in one JVM
+    call: ``Column.isin`` makes one py4j literal per value, ~110 ms
+    per 300 keys, more than the job the set saves. Beyond
+    ``spark.sql.optimizer.inSetConversionThreshold`` (10) values the
+    optimizer turns it into one ``InSet`` hash lookup."""
+    lits = {_sql_literal(v) for v in values if v is not None}
+    if None in lits:
+        return None
+    if not lits:
+        return "FALSE"
+    return f"coalesce({expr} IN ({', '.join(sorted(lits))}), FALSE)"
+
+
+def in_groups(group_col: str, values, has_null: bool) -> Column:
+    """:func:`refresh_aggregates`' predicate for a touched-group set:
+    ``values`` plus the NULL group when ``has_null``."""
+    sql = in_set(_q(group_col), values)
+    hit = (
+        F.expr(sql) if sql is not None
+        else F.coalesce(
+            F.col(group_col).isin([v for v in values if v is not None]),
+            F.lit(False),
+        )
     )
-    kept = matview.join(g, group_col, "left_anti")
-    return kept.unionByName(recomputed)
+    return hit | F.col(group_col).isNull() if has_null else hit
+
+
+def stage_snapshot(
+    base: DataFrame,
+    changes: DataFrame,
+    key_col: str,
+    columns: dict[str, str],
+    tables: list[str] | None = None,
+    group_col: str | None = None,
+):
+    """Plan the new snapshot of one change batch by the size of its
+    change set. Returns ``(snapshot, touched)``: write ``snapshot``
+    (key_col + ``columns``, in that order, typed); AFTER the write,
+    ``touched()`` gives the ``group_col`` groups the batch touched, in
+    the form :func:`refresh_aggregates` takes (``touched`` is None
+    without ``group_col``).
+
+    The batch is parsed and aggregated ONCE (:func:`latest_changes`),
+    and one bounded Arrow collect of at most
+    ``LOOKUP_INLINE_MAX_ROWS + 1`` typed rows (the
+    :func:`~speculare_pgcdc_spark.cdc.pipeline.normalize_hypertables`
+    bound between a literal in the plan and a broadcast join) both
+    sizes the change set and, when it fits, IS the change set:
+
+    * **Small** (at most the bound): the changed keys enter the plan
+      as an ``InSet`` literal (:func:`in_set`) and the upserts as a
+      LocalRelation; the snapshot is ``base`` minus the changed keys
+      plus the upserts, with no join and no exchange. One
+      ``observe()`` on the written plan collects the OLD groups of the
+      changed keys as it scans ``base``, so the touched groups cost
+      no join and no job either.
+    * **Large**: the :func:`apply_latest` anti-join against the
+      checkpointed latest frame, and :func:`touched_groups_latest`.
+
+    The latest frame is checkpointed lazily: adaptive execution runs
+    its aggregate's shuffle as the checkpoint is planned, and the
+    bounded collect reads every partition, so it fills the checkpoint
+    too: two jobs, and the large path reads the batch from the
+    checkpoint. The union is coalesced to the number of ``base``'s
+    files, so the snapshot keeps its file count: the upserts'
+    partitions would otherwise add files to it every batch."""
+    import pyarrow.compute as pc
+
+    spark = base.sparkSession
+    key_t = columns.get(key_col, "string")
+    ordered = _ordered(key_col, columns)
+    n_out = _n_files(base)
+    latest = latest_changes(changes, key_col, key_t, tables).localCheckpoint(
+        eager=False
+    )
+    rows = (
+        latest.select(
+            key_col,
+            (F.col("_chg.kind") == "delete").alias("_del"),
+            *_upsert_cols(key_col, columns),
+        )
+        .limit(pipeline.LOOKUP_INLINE_MAX_ROWS + 1)
+        .toArrow()
+    )
+    small = rows.num_rows <= pipeline.LOOKUP_INLINE_MAX_ROWS
+    changed = small and in_set(
+        f"CAST({_q(key_col)} AS {key_t})", rows.column(key_col).to_pylist()
+    )
+    if not changed:  # too many keys, or a key with no SQL literal
+        snapshot = apply_latest(base, latest, key_col, columns)
+        touched = None if group_col is None else (
+            lambda: touched_groups_latest(base, latest, key_col, group_col)
+        )
+        return snapshot.coalesce(n_out), touched
+    ups = rows.filter(pc.invert(rows.column("_del"))).select(ordered)
+    upserts = spark.createDataFrame(
+        ups, ", ".join(f"{_q(c)} {columns.get(c, key_t)}" for c in ordered)
+    )
+    cur = base.selectExpr(
+        *_typed_sql(key_col, columns), f"{changed} AS _changed"
+    )
+    if group_col is not None:
+        obs = Observation()
+        g, hit = F.col(group_col), F.col("_changed")
+        cur = cur.observe(
+            obs,
+            F.collect_set(F.when(hit, g)).alias("groups"),
+            F.max(hit & g.isNull()).alias("has_null"),
+        )
+    snapshot = (
+        cur.filter(~F.col("_changed"))
+        .drop("_changed")
+        .unionByName(upserts)
+        .coalesce(n_out)
+    )
+    if group_col is None:
+        return snapshot, None
+
+    def touched() -> Column:
+        old = obs.get
+        new = ups.column(group_col).to_pylist()
+        return in_groups(
+            group_col,
+            [*old["groups"], *new],
+            bool(old["has_null"]) or None in new,
+        )
+
+    return snapshot, touched
+
+
+def _n_files(df: DataFrame) -> int:
+    """The files a dir frame reads (at least 1): a stage coalesced to
+    its dir's count keeps the dir from gaining files every batch."""
+    return max(1, len(df.inputFiles()))
+
+
+class _Dirs:
+    """A consumer's reads of its own dirs, with no schema inference
+    per batch: a dir's schema is inferred at its first read in the
+    query run (one job; crash recovery has run by then, so a dir
+    caught mid-swap is back in place), then taken from the frame the
+    consumer last staged there."""
+
+    def __init__(self, spark: SparkSession):
+        self.spark = spark
+        self.schemas: dict = {}
+
+    def read(self, d: str, path: str | None = None) -> DataFrame:
+        """Dir ``d``, or its stage at ``path``."""
+        if d not in self.schemas:
+            self.schemas[d] = self.spark.read.parquet(d).schema
+        return self.spark.read.schema(self.schemas[d]).parquet(path or d)
+
+    def stage(self, df: DataFrame, d: str, batch) -> None:
+        df.write.mode("overwrite").parquet(batch.staged(d))
+        self.schemas[d] = df.schema
 
 
 def start_apply_query(
@@ -306,22 +522,25 @@ def start_apply_query(
 ):
     """Maintain a parquet snapshot from the live change stream: each
     microbatch reads the current snapshot, applies the batch
-    (:func:`apply_changes`), and atomically replaces it — the
+    (:func:`stage_snapshot`), and atomically replaces it — the
     materialized-table consumer of watch()'s dataflow. Commit and
     replay follow :mod:`~speculare_pgcdc_spark.cdc.commit`.
+
+    A batch of at most ``LOOKUP_INLINE_MAX_ROWS`` changed keys runs
+    three Spark jobs: the latest-per-key shuffle, the bounded collect,
+    and the snapshot write (no join, no schema inference). A larger
+    one keeps the anti-join, whose key set would not fit in the plan.
 
     The full-overwrite is correct-but-local: a durable deployment
     swaps this writer for a table format with row-level merge; the
     upstream plan is unchanged."""
-    spark = changes_stream.sparkSession
-    ordered = [key_col, *[c for c in columns if c != key_col]]
+    dirs = _Dirs(changes_stream.sparkSession)
 
     def plan(batch_df: DataFrame, batch) -> None:
-        base = spark.read.parquet(snapshot_dir)
-        out = apply_changes(base, batch_df, key_col, columns, tables)
-        out.select(*ordered).write.mode("overwrite").parquet(
-            batch.staged(snapshot_dir)
+        snapshot, _ = stage_snapshot(
+            dirs.read(snapshot_dir), batch_df, key_col, columns, tables
         )
+        dirs.stage(snapshot, snapshot_dir, batch)
 
     return start_consumer(
         changes_stream, plan, checkpoint_dir, query_name, available_now,
@@ -344,43 +563,51 @@ def start_matview_query(
 ):
     """Maintain a parquet snapshot AND an incrementally-refreshed
     aggregate view from the live change stream — the streaming twin of
-    q97's batch IVM (touched_groups + refresh_aggregates per
-    microbatch, only touched groups recomputed, every other view row
-    carried forward).
+    q97's batch IVM (only touched groups recomputed, every other view
+    row carried forward).
 
     ``agg_cols_fn`` is a zero-arg callable returning the aliased
     aggregate expressions (Column objects aren't reusable across
     microbatch plans, so the view definition is re-built per batch).
 
+    Per batch, :func:`stage_snapshot` writes the snapshot stage, and
+    the view stage re-aggregates the touched groups of the staged
+    snapshot (read back, never re-planned). A batch of at most
+    ``LOOKUP_INLINE_MAX_ROWS`` changed keys runs four Spark jobs on a
+    one-file snapshot: the latest-per-key shuffle, the bounded
+    collect, the snapshot write and the view write (five on a
+    multi-file snapshot, whose view aggregate shuffles). Its changed
+    keys and touched groups ride the plan as literals, because at
+    these sizes a job costs more than the data it moves: with
+    broadcast joins in both stages the batch ran 12 to 14 jobs. A
+    larger batch keeps the joins: its key set would not fit in the
+    plan.
+
     Commit and replay follow :mod:`~speculare_pgcdc_spark.cdc.commit`.
     """
-    spark = changes_stream.sparkSession
-    ordered = [key_col, *[c for c in columns if c != key_col]]
+    dirs = _Dirs(changes_stream.sparkSession)
 
     def plan(batch_df: DataFrame, batch) -> None:
-        base = spark.read.parquet(snapshot_dir)
-        mv_old = spark.read.parquet(matview_dir)
-        # ONE parse of the batch (eager, batch-key-bounded) shared by
-        # the merge and the group derivation
-        lat = latest_changes(
-            batch_df, key_col, columns.get(key_col, "string"), tables
-        ).localCheckpoint(eager=True)
-        new_snapshot = apply_latest(
-            base, lat, key_col, columns
-        ).localCheckpoint(eager=True)
-        groups = touched_groups_latest(base, lat, key_col, group_col)
+        snapshot, touched = stage_snapshot(
+            dirs.read(snapshot_dir), batch_df, key_col, columns, tables,
+            group_col,
+        )
+        # BOTH stages land before either directory swaps — the large
+        # path's touched groups read the PRE-swap snapshot
+        dirs.stage(snapshot, snapshot_dir, batch)
+        staged = dirs.read(snapshot_dir, batch.staged(snapshot_dir))
+        # read in at most one partition per file: a snapshot staged as
+        # one file is then one partition, and the view's aggregate
+        # needs no exchange (one job fewer)
+        staged = staged.coalesce(_n_files(staged))
+        mv_old = dirs.read(matview_dir)
         mv_new = refresh_aggregates(
-            mv_old, new_snapshot, groups, group_col, agg_cols_fn()
+            mv_old, staged, touched(), group_col, agg_cols_fn()
         )
-        # BOTH stages land before either directory swaps — the view
-        # plan reads the PRE-swap snapshot (touched_groups' old-group
-        # join) and the pre-swap view, so swapping the snapshot first
-        # would pull files out from under a lazy scan
-        new_snapshot.select(*ordered).write.mode("overwrite").parquet(
-            batch.staged(snapshot_dir)
-        )
-        mv_new.select(*mv_old.columns).write.mode("overwrite").parquet(
-            batch.staged(matview_dir)
+        dirs.stage(
+            mv_new.select(*mv_old.columns).coalesce(_n_files(mv_old)),
+            matview_dir,
+            batch,
         )
 
     # view first, snapshot second: a crash between the two must leave
@@ -692,7 +919,7 @@ def start_matview_query_banded(
         _validate_mergeable(
             spark, snapshot_dir, group_col, agg_cols_fn, merge_cols_fn
         )
-    ordered = [key_col, *[c for c in columns if c != key_col]]
+    ordered = _ordered(key_col, columns)
     key_t = columns.get(key_col, "bigint")
     width = read_band_width(snapshot_dir)
     schema_str = ", ".join(f"{c} {columns[c]}" for c in ordered)

@@ -158,6 +158,11 @@ class Batch:
             )
 
 
+def job_tag(query_name: str, batch_id: int) -> str:
+    """The tag on every Spark job of a consumer's batch."""
+    return f"{query_name}:batch-{batch_id}"
+
+
 def query_id(checkpoint_dir: str) -> str:
     with open(os.path.join(checkpoint_dir, "metadata")) as f:
         return json.loads(f.readline())["id"]
@@ -192,8 +197,15 @@ def start_consumer(
     its plain unit dirs in commit order; ``band_root`` its band set,
     which commits last. ``plan(batch_df, batch)`` stages every unit it
     changes under ``batch.staged(d)`` and returns the bands it touched
-    (None when it has no band set or staged nothing)."""
+    (None when it has no band set or staged nothing).
+
+    Every Spark job of a batch carries the job tag :func:`job_tag`
+    names for the query and the batch, so a batch's jobs can be
+    counted and timed; the tag is removed after the batch. A tag, not
+    a job group: the stream runs its batches in its own run-id group,
+    through which ``query.stop()`` cancels a running batch."""
     units = [*dirs, *([band_root] if band_root else [])]
+    sc = stream.sparkSession.sparkContext
     qid = None
 
     def process(batch_df, batch_id: int) -> None:
@@ -204,7 +216,12 @@ def start_consumer(
             recover(d)
         if band_root is None and all(batch.applied(d) for d in dirs):
             return
-        batch.commit(dirs, band_root, plan(batch_df, batch))
+        tag = job_tag(query_name, batch_id)
+        sc.addJobTag(tag)
+        try:
+            batch.commit(dirs, band_root, plan(batch_df, batch))
+        finally:
+            sc.removeJobTag(tag)
         for d in units:  # stages of units this batch had already swapped
             shutil.rmtree(batch.staged(d), ignore_errors=True)
 

@@ -3168,6 +3168,262 @@ def test_fresh_checkpoint_over_existing_state_lands(spark, tmp_path, name):
     assert c.state(spark, root) == c.expected(spark, 2)
 
 
+def _large_path(monkeypatch):
+    """Send every non-empty batch down the consumers' join path."""
+    from speculare_pgcdc_spark.cdc import pipeline
+
+    monkeypatch.setattr(pipeline, "LOOKUP_INLINE_MAX_ROWS", 0)
+
+
+@pytest.mark.parametrize(
+    "name,point",
+    [
+        (name, point)
+        for name, n in [("apply", 1), ("matview", 2)]
+        for point in [*range(n + 1), "mid"]
+    ],
+)
+def test_commit_crash_matrix_large_path(
+    spark, tmp_path, monkeypatch, name, point
+):
+    """The unbanded consumers' crash matrix on the path a change set
+    too large to ride the plan as literals takes."""
+    _large_path(monkeypatch)
+    test_commit_crash_matrix(spark, tmp_path, monkeypatch, name, point)
+
+
+@pytest.mark.parametrize("name", ["apply", "matview"])
+def test_fresh_checkpoint_over_existing_state_lands_large_path(
+    spark, tmp_path, monkeypatch, name
+):
+    _large_path(monkeypatch)
+    test_fresh_checkpoint_over_existing_state_lands(spark, tmp_path, name)
+
+
+def test_streaming_matview_incremental_refresh_large_path(
+    spark, tmp_path, monkeypatch
+):
+    _large_path(monkeypatch)
+    test_streaming_matview_incremental_refresh(spark, tmp_path)
+
+
+def _write_batches(feed_dir, batches):
+    """One feed file per batch. The file source orders files by their
+    millisecond mtime, so each file gets its own second: files written
+    within one millisecond would be taken in an arbitrary order."""
+    os.makedirs(feed_dir)
+    for i, msgs in enumerate(batches):
+        path = f"{feed_dir}/f{i:03d}.json"
+        with open(path, "w") as f:
+            for m in msgs:
+                f.write(json.dumps(m) + "\n")
+        os.utime(path, (1_700_000_000 + i, 1_700_000_000 + i))
+
+
+def _view(spark, path):
+    return {
+        (r["grp"], r["n"], r["sv"])
+        for r in spark.read.parquet(path).collect()
+    }
+
+
+def _recomputed_view(spark, snap):
+    return {
+        (r["grp"], r["n"], r["sv"])
+        for r in spark.read.parquet(snap).groupBy("grp")
+        .agg(*_mv_aggs()).collect()
+    }
+
+
+@pytest.mark.parametrize("path", ["small", "large"])
+def test_matview_refreshes_the_null_group(spark, tmp_path, monkeypatch, path):
+    """A NULL group is a group: a batch that changes a row of it, or
+    moves a row into it, refreshes its view row on both paths. An
+    ``=`` match on the group never matched NULL, so the stale row
+    (NULL, 1, 10) was carried forward for good."""
+    from speculare_pgcdc_spark.cdc.apply import start_matview_query
+
+    if path == "large":
+        _large_path(monkeypatch)
+    snap, mv, ck, feed = (str(tmp_path / d) for d in
+                          ("snap", "mv", "ck", "feed"))
+    base = spark.createDataFrame(
+        [(1, None, 10), (2, "a", 20)], "id bigint, grp string, v bigint"
+    )
+    base.write.parquet(snap)
+    base.groupBy("grp").agg(*_mv_aggs()).write.parquet(mv)
+    _write_batches(feed, [[_mv_chg("update", 1, None, 99),
+                           _mv_chg("insert", 3, None, 1)]])
+    q = start_matview_query(_mv_stream(spark, feed), snap, mv, ck, "id",
+                            _MV_COLS, "grp", _mv_aggs, available_now=True)
+    q.awaitTermination()
+    assert _view(spark, mv) == {(None, 2, 100), ("a", 1, 20)}
+    assert _view(spark, mv) == _recomputed_view(spark, snap)
+
+
+def _batch_jobs(spark, query_name, batch_id):
+    """The ids of the Spark jobs one consumer batch ran."""
+    from speculare_pgcdc_spark.cdc.commit import job_tag
+
+    jsc = spark.sparkContext._jsc.sc()
+    # job events reach the status store through the async listener bus
+    jsc.listenerBus().waitUntilEmpty()
+    return list(
+        jsc.statusTracker().getJobIdsForTag(job_tag(query_name, batch_id))
+    )
+
+
+# 15 changed keys per batch: past the 10 values at which the optimizer
+# turns an IN list into an InSet
+_JOB_BATCHES = [
+    [_mv_chg("update", i, "d", 100 + i) for i in range(1, 11)]
+    + [_mv_chg("delete", 11), _mv_chg("delete", 12)]
+    + [_mv_chg("insert", i, "a", i) for i in (41, 42, 43)],
+    [_mv_chg("update", i, None, i) for i in range(13, 23)]
+    + [_mv_chg("delete", i) for i in (1, 41)]
+    + [_mv_chg("insert", i, "e", i) for i in (44, 45, 46)],
+]
+
+
+def _job_seed(spark, root):
+    base = spark.createDataFrame(
+        [(i, "abc"[i % 3], i) for i in range(1, 41)],
+        "id bigint, grp string, v bigint",
+    )
+    # one file each, the perfbench seed's layout
+    base.coalesce(1).write.parquet(f"{root}/snap")
+    base.groupBy("grp").agg(*_mv_aggs()).coalesce(1).write.parquet(
+        f"{root}/mv"
+    )
+
+
+def test_matview_small_batch_runs_four_jobs(spark, tmp_path):
+    """A small matview batch runs four Spark jobs, counted by the job
+    tag cdc.commit gives each batch: the latest-per-key shuffle, the
+    bounded collect of the change set, the snapshot write, and the
+    view write. The view's aggregate needs no shuffle of its own: the
+    one-file snapshot stage is read back as one partition. The first
+    batch of a query run also infers the two dirs' schemas (one job
+    each); later batches read with the schema they staged. It was 12
+    jobs per batch with the joins, 14 with the hypertable lookup."""
+    from speculare_pgcdc_spark.cdc.apply import start_matview_query
+
+    root = str(tmp_path)
+    _job_seed(spark, root)
+    _write_batches(f"{root}/feed", _JOB_BATCHES)
+    q = start_matview_query(
+        _mv_stream(spark, f"{root}/feed"), f"{root}/snap", f"{root}/mv",
+        f"{root}/ck", "id", _MV_COLS, "grp", _mv_aggs,
+        query_name="mv-job-count", available_now=True,
+    )
+    q.awaitTermination()
+    assert len(_batch_jobs(spark, "mv-job-count", 0)) == 6
+    assert len(_batch_jobs(spark, "mv-job-count", 1)) == 4
+    assert _view(spark, f"{root}/mv") == _recomputed_view(
+        spark, f"{root}/snap"
+    )
+    assert spark.read.parquet(f"{root}/snap").count() == 42
+
+
+def test_apply_small_batch_runs_three_jobs(spark, tmp_path):
+    """start_apply_query shares the matview's snapshot stage: a small
+    batch runs the latest-per-key shuffle, the bounded collect and the
+    snapshot write, with no join and no schema inference after the
+    query run's first batch."""
+    from speculare_pgcdc_spark.cdc.apply import start_apply_query
+
+    root = str(tmp_path)
+    _job_seed(spark, root)
+    _write_batches(f"{root}/feed", _JOB_BATCHES)
+    q = start_apply_query(
+        _mv_stream(spark, f"{root}/feed"), f"{root}/snap", f"{root}/ck",
+        "id", _MV_COLS, query_name="apply-job-count", available_now=True,
+    )
+    q.awaitTermination()
+    assert len(_batch_jobs(spark, "apply-job-count", 0)) == 4
+    assert len(_batch_jobs(spark, "apply-job-count", 1)) == 3
+    got = {tuple(r) for r in spark.read.parquet(f"{root}/snap").collect()}
+    assert (2, "d", 102) in got and (13, None, 13) in got
+    assert 1 not in {r[0] for r in got} and len(got) == 42
+
+
+def test_stage_snapshot_small_batch_plan(spark, tmp_path):
+    """The small path's snapshot stage is a scan plus a LocalRelation:
+    no join, no exchange, and the changed keys as ONE InSet, which
+    both drops the old rows and feeds the observe() that reports the
+    old groups of the changed keys once the stage is written."""
+    from speculare_pgcdc_spark.cdc.apply import stage_snapshot
+    from speculare_pgcdc_spark.plans import (
+        optimized_plan_string,
+        plan_string,
+    )
+
+    _job_seed(spark, str(tmp_path))
+    base = spark.read.parquet(str(tmp_path / "snap"))
+    changes = parse_wal2json(
+        spark.createDataFrame(
+            [(json.dumps(m),) for m in _JOB_BATCHES[0]], "payload string"
+        )
+    ).withColumn("table_name", F.col("table"))
+    snapshot, touched = stage_snapshot(
+        base, changes, "id", _MV_COLS, group_col="grp"
+    )
+    physical = plan_string(snapshot)
+    assert "Join" not in physical and "Exchange" not in physical
+    assert optimized_plan_string(snapshot).count(" INSET ") == 1
+    snapshot.write.parquet(str(tmp_path / "out"))
+    got = {tuple(r) for r in spark.read.parquet(
+        str(tmp_path / "out")).collect()}
+    assert len(got) == 41 and (5, "d", 105) in got and (42, "a", 42) in got
+    # old groups a/b/c (updated and deleted keys), new groups d and a;
+    # no NULL group touched
+    groups = spark.createDataFrame(
+        [(g,) for g in ["a", "b", "c", "d", "e", None]], "grp string"
+    )
+    hit = {r[0] for r in groups.filter(touched()).collect()}
+    assert hit == {"a", "b", "c", "d"}
+
+
+def test_matview_file_counts_stay_bounded(spark, tmp_path):
+    """The snapshot and the view keep their file counts over 20
+    batches: the upserts' LocalRelation and the view's recomputed
+    groups are coalesced into the dir's own count instead of adding
+    files every batch."""
+    from speculare_pgcdc_spark.cdc.apply import start_matview_query
+
+    root = str(tmp_path)
+    base = spark.createDataFrame(
+        [(i, "abc"[i % 3], i) for i in range(1, 61)],
+        "id bigint, grp string, v bigint",
+    )
+    base.repartition(2).write.parquet(f"{root}/snap")
+    # 'c' is never touched, so the view's kept rows are never empty
+    base.groupBy("grp").agg(*_mv_aggs()).repartition(2).write.parquet(
+        f"{root}/mv"
+    )
+
+    def files(d):
+        return len([f for f in os.listdir(d) if f.endswith(".parquet")])
+
+    seeded = files(f"{root}/snap"), files(f"{root}/mv")
+    _write_batches(f"{root}/feed", [
+        [_mv_chg("update", 1 + 3 * (b % 20), "a", b),
+         _mv_chg("insert", 100 + b, "b", b)]
+        for b in range(20)
+    ])
+    q = start_matview_query(
+        _mv_stream(spark, f"{root}/feed"), f"{root}/snap", f"{root}/mv",
+        f"{root}/ck", "id", _MV_COLS, "grp", _mv_aggs, available_now=True,
+    )
+    q.awaitTermination()
+    assert len(q.recentProgress) >= 20
+    assert files(f"{root}/snap") <= seeded[0]
+    assert files(f"{root}/mv") <= seeded[1]
+    assert _view(spark, f"{root}/mv") == _recomputed_view(
+        spark, f"{root}/snap"
+    )
+
+
 def test_banded_matview_partials_mode(spark, tmp_path):
     """Band-partial maintenance (round-13): the view is merged from
     per-(band, group) partials, touched bands' partials rebuilt from
