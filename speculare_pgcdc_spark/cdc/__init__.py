@@ -2,8 +2,8 @@
 
 source (jsonl / stream) -> parse (variant) -> explode(change) ->
 normalize (typed + lenient row maps) -> hypertable-name normalize
-(broadcast lookup) -> subscription routing (broadcast join) -> fan-out
-sink (streaming.fanout).
+(literal map lookup) -> subscription routing (literal registry) ->
+fan-out sink (streaming.fanout).
 """
 
 from speculare_pgcdc_spark.cdc.pipeline import (  # noqa: F401

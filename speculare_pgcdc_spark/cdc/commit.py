@@ -159,7 +159,7 @@ class Batch:
 
 
 def job_tag(query_name: str, batch_id: int) -> str:
-    """The tag on every Spark job of a consumer's batch."""
+    """The tag on every Spark job of a ``foreachBatch`` query's batch."""
     return f"{query_name}:batch-{batch_id}"
 
 
@@ -173,9 +173,25 @@ def start_foreach_batch(
     available_now: bool = False,
 ):
     """The package's one ``foreachBatch`` writer: checkpointed, named,
-    and in drain-and-stop mode (Trigger.AvailableNow) when asked."""
+    and in drain-and-stop mode (Trigger.AvailableNow) when asked.
+
+    Every Spark job of a batch carries the job tag :func:`job_tag`
+    names for the query and the batch, so a batch's jobs can be
+    counted and timed; the tag is removed after the batch. A tag, not
+    a job group: the stream runs its batches in its own run-id group,
+    through which ``query.stop()`` cancels a running batch."""
+    sc = stream.sparkSession.sparkContext
+
+    def tagged(batch_df, batch_id: int) -> None:
+        tag = job_tag(query_name, batch_id)
+        sc.addJobTag(tag)
+        try:
+            process(batch_df, batch_id)
+        finally:
+            sc.removeJobTag(tag)
+
     writer = (
-        stream.writeStream.foreachBatch(process)
+        stream.writeStream.foreachBatch(tagged)
         .option("checkpointLocation", checkpoint_dir)
         .queryName(query_name)
     )
@@ -197,15 +213,8 @@ def start_consumer(
     its plain unit dirs in commit order; ``band_root`` its band set,
     which commits last. ``plan(batch_df, batch)`` stages every unit it
     changes under ``batch.staged(d)`` and returns the bands it touched
-    (None when it has no band set or staged nothing).
-
-    Every Spark job of a batch carries the job tag :func:`job_tag`
-    names for the query and the batch, so a batch's jobs can be
-    counted and timed; the tag is removed after the batch. A tag, not
-    a job group: the stream runs its batches in its own run-id group,
-    through which ``query.stop()`` cancels a running batch."""
+    (None when it has no band set or staged nothing)."""
     units = [*dirs, *([band_root] if band_root else [])]
-    sc = stream.sparkSession.sparkContext
     qid = None
 
     def process(batch_df, batch_id: int) -> None:
@@ -216,12 +225,7 @@ def start_consumer(
             recover(d)
         if band_root is None and all(batch.applied(d) for d in dirs):
             return
-        tag = job_tag(query_name, batch_id)
-        sc.addJobTag(tag)
-        try:
-            batch.commit(dirs, band_root, plan(batch_df, batch))
-        finally:
-            sc.removeJobTag(tag)
+        batch.commit(dirs, band_root, plan(batch_df, batch))
         for d in units:  # stages of units this batch had already swapped
             shutil.rmtree(batch.staged(d), ignore_errors=True)
 

@@ -12,11 +12,15 @@ VariantType (Spark 4) is the load-bearing choice: it preserves per-cell
 JSON types columnar-natively, which is what lets the engine pin the
 reference's "eq/in match only string-typed cells" quirk
 (src/utils/specific_filter.rs:36-46) without a Python UDF. Everything
-below is JVM-side expressions — at 100 TB this pipeline is a single
-narrow stage until the (broadcast) routing join.
+below is JVM-side expressions, and the hypertable lookup and the
+routing registry ride the plan as literals: at 100 TB this pipeline is
+a single narrow stage (catalogs or registries over
+LOOKUP_INLINE_MAX_ROWS fall back to a broadcast join).
 """
 
 from __future__ import annotations
+
+import json
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -24,6 +28,7 @@ from pyspark.sql.types import (
     ArrayType,
     IntegerType,
     LongType,
+    MapType,
     StringType,
     StructField,
     StructType,
@@ -397,12 +402,11 @@ def subscriptions_df(spark, subs, tables):
     exactly like the reference returns HTTP 400.
 
     The frame is built from a pyarrow.Table, which Spark plans as a
-    LocalRelation: the rows live in the JVM-side plan, and the routing
-    join's broadcast reads them without a Python round trip. A row
-    list would be a parallelized LogicalRDD; start_fanout_query
-    rebuilds this frame every microbatch, and building + collecting
-    it took ~300 ms from a list against tens of ms from Arrow (4-core
-    local session).
+    LocalRelation: the rows live in the JVM-side plan, and route()
+    collects them without running a Spark job. A row list would be a
+    parallelized LogicalRDD; start_fanout_query rebuilds this frame
+    every microbatch, and building + collecting it took ~300 ms from
+    a list against tens of ms from Arrow (4-core local session).
     """
     import pyarrow as pa
 
@@ -439,45 +443,103 @@ def _kind_bit():
     )
 
 
+def _kind_ok(flag):
+    return _kind_bit().bitwiseAND(flag) != 0
+
+
+def _filter_ok(col, op, vals):
+    """The generic eq/in filter of one subscription over ``row_typed``.
+    A NULL cell (absent column, non-string cell, delete) drops the
+    match."""
+    cell = F.try_element_at(F.col("row_typed"), col)
+    return (
+        F.when(col.isNull(), F.lit(True))
+        .when(op == "eq", cell == F.try_element_at(vals, F.lit(1)))
+        .when(op == "in", F.array_contains(vals, cell))
+        .otherwise(F.lit(False))
+    )
+
+
+#: one subscription as routing reads it; the registry literal maps each
+#: table to an array of these
+_SUB_FIELDS = [
+    f for f in SUBSCRIPTIONS_SCHEMA.fields if f.name != "change_table"
+]
+_REGISTRY_TYPE = MapType(StringType(), ArrayType(StructType(_SUB_FIELDS)))
+
+
 def route(changes: DataFrame, subscriptions: DataFrame) -> DataFrame:
     """Routing + per-subscription filtering (R13 + R14; forwarder
     mod.rs:105-127 and send_message :44-72).
 
     ``subscriptions`` columns: sub_id, change_table, change_flag,
     filter_col (nullable), filter_op ('eq'|'in', nullable), filter_vals
-    (array<string>, nullable). It is the engine's ServerState: the
-    reference's three HashMap<table, HashSet<id>> indexes become ONE
-    broadcast hash join on table name + bitmask residual + generic
-    filter residual — all JVM-side.
+    (array<string>, nullable). It is the engine's ServerState. The
+    reference's three HashMap<table, HashSet<id>> indexes become one
+    lookup, the same model-to-data move as normalize_hypertables: the
+    registry is collected at plan-build time (subscriptions_df builds
+    a LocalRelation, so the collect runs no Spark job) and rides the
+    plan as ONE literal map of table -> array of subscriptions. Each
+    change looks up its table, keeps the subscriptions whose kind mask
+    and filter match, and explodes one row per match: no join, no
+    exchange, one narrow stage. The literal is one JSON string parsed
+    by ``from_json`` (constant-folded at optimization), so filter
+    values, which come from WebSocket clients, are data and never SQL
+    text, and building it costs one JVM call however many
+    subscriptions there are. Registries over LOOKUP_INLINE_MAX_ROWS
+    keep the broadcast hash join on table name, so the plan never
+    embeds an unbounded literal.
 
-    Returns one row per (change, matching subscription).
+    Returns one row per (change, matching subscription): the change's
+    columns plus ``sub_id``.
     """
-    subs = F.broadcast(
-        subscriptions.select(
-            "sub_id",
-            F.col("change_table").alias("_s_table"),
-            F.col("change_flag").alias("_s_flag"),
-            F.col("filter_col").alias("_s_col"),
-            F.col("filter_op").alias("_s_op"),
-            F.col("filter_vals").alias("_s_vals"),
+    names = [f.name for f in _SUB_FIELDS]
+    rows = (
+        subscriptions.select("change_table", *names)
+        .limit(LOOKUP_INLINE_MAX_ROWS + 1)
+        .collect()
+    )
+    if len(rows) > LOOKUP_INLINE_MAX_ROWS:
+        subs = F.broadcast(
+            subscriptions.select(
+                "sub_id",
+                F.col("change_table").alias("_s_table"),
+                F.col("change_flag").alias("_s_flag"),
+                F.col("filter_col").alias("_s_col"),
+                F.col("filter_op").alias("_s_op"),
+                F.col("filter_vals").alias("_s_vals"),
+            )
         )
-    )
-    cell = F.try_element_at(F.col("row_typed"), F.col("_s_col"))
-    filter_ok = (
-        F.when(F.col("_s_col").isNull(), F.lit(True))
-        .when(
-            F.col("_s_op") == "eq",
-            cell == F.try_element_at(F.col("_s_vals"), F.lit(1)),
+        cond = (F.col("table_name") == F.col("_s_table")) & _kind_ok(
+            F.col("_s_flag")
         )
-        .when(F.col("_s_op") == "in", F.array_contains("_s_vals", cell))
-        .otherwise(F.lit(False))
+        return (
+            changes.join(subs, cond, "inner")
+            .filter(_filter_ok(F.col("_s_col"), F.col("_s_op"),
+                               F.col("_s_vals")))
+            .drop("_s_table", "_s_flag", "_s_col", "_s_op", "_s_vals")
+        )
+    registry: dict[str, list] = {}
+    for r in rows:
+        if r["change_table"] is not None:  # a join never matches NULL
+            registry.setdefault(r["change_table"], []).append(
+                {n: r[n] for n in names}
+            )
+    # FAILFAST: a registry that does not parse must fail the plan, not
+    # silently route nothing
+    literal = F.from_json(
+        F.lit(json.dumps(registry)), _REGISTRY_TYPE, {"mode": "FAILFAST"}
     )
-    cond = (
-        (F.col("table_name") == F.col("_s_table"))
-        & (_kind_bit().bitwiseAND(F.col("_s_flag")) != 0)
-    )
-    return (
-        changes.join(subs, cond, "inner")
-        .filter(filter_ok)
-        .drop("_s_table", "_s_flag", "_s_col", "_s_op", "_s_vals")
+    subs = F.try_element_at(literal, F.col("table_name"))
+
+    def matches(s):
+        return _kind_ok(s["change_flag"]) & _filter_ok(
+            s["filter_col"], s["filter_op"], s["filter_vals"]
+        )
+
+    return changes.select(
+        "*",
+        F.explode(
+            F.transform(F.filter(subs, matches), lambda s: s["sub_id"])
+        ).alias("sub_id"),
     )

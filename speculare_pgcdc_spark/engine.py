@@ -112,8 +112,8 @@ class Engine:
         self._subs.pop(sub_id, None)
 
     def subscriptions(self) -> DataFrame:
-        """The registry as the broadcast static side of the routing
-        join (ServerState analog, ws_utils.rs:23-29)."""
+        """The registry as the subscriptions frame route() inlines into
+        the routing plan (ServerState analog, ws_utils.rs:23-29)."""
         return subscriptions_df(
             self.spark, list(self._subs.items()), self.tables
         )

@@ -78,7 +78,8 @@ def q35(spark: SparkSession, sf: str) -> DataFrame:
     """,
     doc="C2 subscription DSL compile + route (R13-R16): "
     "'insert,update:events_a:event_type.in.click,view' parsed per "
-    "query.rs:10-85, joined as a broadcast subscriptions frame. The "
+    "query.rs:10-85, routed through the subscriptions frame inlined "
+    "as one literal registry (no join). The "
     "oracle derives the same rows from events arithmetic (hypertable "
     "chunks of idx 1 normalize to events_a; unknown idx 9 keeps its "
     "chunk name and thus never matches).",

@@ -25,7 +25,7 @@ Protocol behavior mirrored from the reference:
   Engine.subscribe so a WS connect can never overwrite them.
 - client disconnect (close frame / EOF) unsubscribes it
   (ws_handler.rs ws_disconnected analog); with the live registry the
-  routing join stops matching it on the next microbatch.
+  next microbatch's routing no longer matches it.
 - TLS (the reference's rustls path, server.rs:45-58): pass an
   ``ssl.SSLContext`` to :meth:`WsSidecar.start` / cert+key paths to
   :func:`run_sidecar_forever` for ``wss://``.

@@ -5,6 +5,7 @@ Spark pipeline on tiny literal frames."""
 
 from __future__ import annotations
 
+import json
 import re
 
 import pytest
@@ -145,6 +146,98 @@ def test_route_fans_out_to_multiple_subscribers(spark):
     empty = subscriptions_df(spark, [], TABLES)
     assert empty.dtypes == subs.dtypes and len(empty.dtypes) == 6
     assert route(changes, empty).count() == 0
+
+
+def _routed_both_ways(changes, subs, monkeypatch):
+    """(sub_id, change_json) pairs routed through the literal registry
+    and through the broadcast join (the path of registries over
+    LOOKUP_INLINE_MAX_ROWS), each checked to have planned its path (an
+    empty registry's join plans as an empty relation)."""
+    from speculare_pgcdc_spark.cdc import pipeline as pl
+    from speculare_pgcdc_spark.plans import plan_string
+
+    out = []
+    # a bound of -1 sends even an empty registry to the join
+    for bound in (pl.LOOKUP_INLINE_MAX_ROWS, -1):
+        monkeypatch.setattr(pl, "LOOKUP_INLINE_MAX_ROWS", bound)
+        routed = route(changes, subs).select("sub_id", "change_json")
+        literal = "explode(transform(filter(" in plan_string(routed)
+        assert literal == (bound >= 0)
+        rows = [tuple(r) for r in routed.collect()]
+        assert len(rows) == len(set(rows))
+        out.append(set(rows))
+    monkeypatch.undo()
+    return out
+
+
+def test_route_literal_matches_join_on_live_subs(spark, monkeypatch):
+    """The literal registry routes exactly as the broadcast join over
+    every subscription shape of the perfbench serving set: table-only,
+    kind masks, eq/in on string cells, numeric cells that never match,
+    the unknown chunk, filtered deletes; and both agree with the plain
+    Python oracle."""
+    from perfbench import gen, oracle
+
+    log = gen.make_log(seed=7, n_txns=150, shape="fanout", rate=250.0)
+    payloads = spark.createDataFrame(log.rows(), "lsn bigint, payload string")
+    lookup = spark.createDataFrame(gen.HYPER_LOOKUP,
+                                   "idx int, table_name string")
+    changes = normalize_hypertables(
+        parse_wal2json(payloads, seq_col="lsn"), lookup)
+    subs = subscriptions_df(spark, list(enumerate(gen.LIVE_SUBS)),
+                            gen.CATALOG)
+    literal, join = _routed_both_ways(changes, subs, monkeypatch)
+    assert literal == join
+    got = {d: set() for d in gen.LIVE_SUBS}
+    for sub_id, line in literal:
+        got[gen.LIVE_SUBS[sub_id]].add(oracle.change_id(line))
+    want = oracle.expected_deliveries(log, gen.LIVE_SUBS)
+    assert got == {d: set(ids) for d, ids in want.items()}
+    # every shape is exercised: something matches, something does not
+    assert all(want[d] for d in ("*:events_a", "delete:events_a",
+                                 f"*:{gen.UNKNOWN_CHUNK}"))
+    assert not want["delete:events_b:region.eq.eu"]
+
+
+def test_route_literal_filter_values_are_data(spark, monkeypatch):
+    """Filter values come from WebSocket clients: quotes, backslashes
+    and dots match literally on both paths, and a value shaped like
+    SQL matches only itself."""
+    values = ["it's", "a\\b", 'say "hi"', "v1.2.3", "' OR '1'='1", "x"]
+    payloads = [
+        json.dumps({"change": [{
+            "kind": "insert", "table": "test_table0",
+            "columnnames": ["id", "name"], "columnvalues": [i, v],
+        }]})
+        for i, v in enumerate(values)
+    ]
+    changes = _changes(spark, *payloads).withColumn(
+        "table_name", F.col("table"))
+    dsls = [
+        "insert:test_table0:name.eq.it's",
+        "insert:test_table0:name.in.a\\b,say \"hi\"",
+        "insert:test_table0:name.eq.v1.2.3",
+        "insert:test_table0:name.eq.' OR '1'='1",
+        "insert:test_table0:name.eq.v1",
+        "*:test_table0",
+    ]
+    subs = subscriptions_df(spark, list(enumerate(dsls)), TABLES)
+    literal, join = _routed_both_ways(changes, subs, monkeypatch)
+    assert literal == join
+    got = sorted(
+        (sub_id, json.loads(line)["columnvalues"][1])
+        for sub_id, line in literal if sub_id != 5
+    )
+    assert got == [(0, "it's"), (1, "a\\b"), (1, 'say "hi"'),
+                   (2, "v1.2.3"), (3, "' OR '1'='1")]
+    assert sum(sub_id == 5 for sub_id, _ in literal) == len(values)
+
+
+def test_route_empty_registry_both_paths(spark, monkeypatch):
+    changes = _changes(spark, INSERT_STR, DELETE_MSG).withColumn(
+        "table_name", F.col("table"))
+    empty = subscriptions_df(spark, [], TABLES)
+    assert _routed_both_ways(changes, empty, monkeypatch) == [set(), set()]
 
 
 def test_filter_predicate_null_semantics(spark):

@@ -1210,12 +1210,10 @@ def test_fanout_auto_small_batch_evaluates_routing_once(spark, tmp_path):
     """A small routed microbatch is evaluated ONCE by fanout_auto: one
     bounded Arrow collect both sizes and delivers the batch — no
     count pass, no groupBy shuffle. The subscriptions frame is a
-    LocalRelation, so the routing join's broadcast side holds no
-    Python rows; Spark still collects it through one JVM-only job
-    (BroadcastExchangeExec builds the relation from an RDD). Adaptive
-    execution fills the batch's cache in its own job and runs the
-    collect over the cache in another, so the batch runs three
-    single-stage jobs in all."""
+    LocalRelation, so route collects it without a job and inlines it
+    as a literal: no join, no broadcast. The persist's cache fills
+    inside the collect's own job, so the batch runs one single-stage
+    job."""
     from speculare_pgcdc_spark.plans import optimized_plan_string
     from speculare_pgcdc_spark.streaming.fanout import fanout_auto
 
@@ -1253,7 +1251,7 @@ def test_fanout_auto_small_batch_evaluates_routing_once(spark, tmp_path):
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     tracker = sc.statusTracker()
     jobs = tracker.getJobIdsForGroup(group)
-    assert len(jobs) == 3, jobs
+    assert len(jobs) == 1, jobs
     # single-stage jobs: no shuffle anywhere on the small-batch path
     assert all(len(tracker.getJobInfo(j).stageIds) == 1 for j in jobs)
     assert sorted(got) == [1, 2] and got[1] == got[2] and len(got[1]) == 4
@@ -1272,7 +1270,6 @@ def test_streaming_cdc_apply_maintains_snapshot(spark, tmp_path):
     feed_dir = str(tmp_path / "feed")
     snap = str(tmp_path / "snapshot")
     ckpt = str(tmp_path / "ckpt")
-    os.makedirs(feed_dir)
     cols = {"id": "bigint", "name": "string"}
 
     base = spark.createDataFrame(
@@ -1306,10 +1303,7 @@ def test_streaming_cdc_apply_maintains_snapshot(spark, tmp_path):
         [chg("update", 1, "one-v2"), chg("insert", 4, "four")],
         [chg("delete", 2), chg("update", 4, "four-v2")],
     ]
-    for i, msgs in enumerate(batches):
-        with open(f"{feed_dir}/f{i}.json", "w") as f:
-            for m in msgs:
-                f.write(json.dumps(m) + "\n")
+    _write_batches(feed_dir, batches)
 
     def drain():
         stream = parse_wal2json(
@@ -2540,7 +2534,6 @@ def test_streaming_matview_incremental_refresh(spark, tmp_path):
     snap = str(tmp_path / "snapshot")
     mv = str(tmp_path / "matview")
     ckpt = str(tmp_path / "ckpt")
-    os.makedirs(feed_dir)
     cols = {"id": "bigint", "grp": "string", "v": "bigint"}
 
     base = spark.createDataFrame(
@@ -2579,10 +2572,7 @@ def test_streaming_matview_incremental_refresh(spark, tmp_path):
         [chg("update", 1, "a", 11), chg("insert", 5, "b", 50)],
         [chg("delete", 3), chg("update", 5, "b", 55)],
     ]
-    for i, msgs in enumerate(batches):
-        with open(f"{feed_dir}/f{i}.json", "w") as f:
-            for m in msgs:
-                f.write(json.dumps(m) + "\n")
+    _write_batches(feed_dir, batches)
 
     def drain():
         stream = parse_wal2json(
@@ -2741,7 +2731,6 @@ def test_streaming_matview_banded_confined_rewrite(spark, tmp_path):
     snap = str(tmp_path / "snapb")
     mv = str(tmp_path / "mvb")
     ckpt = str(tmp_path / "ckptb")
-    os.makedirs(feed_dir)
     cols = {"id": "bigint", "grp": "string", "v": "bigint"}
 
     base = spark.createDataFrame(
@@ -2769,10 +2758,7 @@ def test_streaming_matview_banded_confined_rewrite(spark, tmp_path):
         [_mv_chg("update", 1, "a", 11), _mv_chg("insert", 5, "b", 50)],
         [_mv_chg("delete", 3), _mv_chg("update", 5, "b", 55)],
     ]
-    for i, msgs in enumerate(batches):
-        with open(f"{feed_dir}/f{i}.json", "w") as f:
-            for m in msgs:
-                f.write(json.dumps(m) + "\n")
+    _write_batches(feed_dir, batches)
 
     untouched_band = os.path.join(snap, "band=25")
     before = {
@@ -2911,10 +2897,14 @@ class _Consumer:
 
         os.makedirs(feed_dir)
         for i, b in enumerate(batches):
+            # the file source orders files by mtime: pin one second each
+            stamp = (1_700_000_000 + i, 1_700_000_000 + i)
             if not self.scd2:
-                with open(f"{feed_dir}/f{i}.json", "w") as f:
+                path = f"{feed_dir}/f{i}.json"
+                with open(path, "w") as f:
                     for m in _MV_BATCHES[b]:
                         f.write(json.dumps(m) + "\n")
+                os.utime(path, stamp)
                 continue
             cols = list(zip(*_SCD2_BATCHES[b]))
             types = [pa.int64(), pa.int64(), pa.date32(), pa.string(),
@@ -2925,6 +2915,7 @@ class _Consumer:
                          names=names),
                 f"{feed_dir}/f{i}.parquet",
             )
+            os.utime(f"{feed_dir}/f{i}.parquet", stamp)
 
     def start(self, spark, root, feed_dir, ckpt):
         from speculare_pgcdc_spark.cdc import apply, scd2
@@ -3262,7 +3253,7 @@ def test_matview_refreshes_the_null_group(spark, tmp_path, monkeypatch, path):
 
 
 def _batch_jobs(spark, query_name, batch_id):
-    """The ids of the Spark jobs one consumer batch ran."""
+    """The ids of the Spark jobs one foreachBatch batch ran."""
     from speculare_pgcdc_spark.cdc.commit import job_tag
 
     jsc = spark.sparkContext._jsc.sc()
@@ -3345,6 +3336,126 @@ def test_apply_small_batch_runs_three_jobs(spark, tmp_path):
     got = {tuple(r) for r in spark.read.parquet(f"{root}/snap").collect()}
     assert (2, "d", 102) in got and (13, None, 13) in got
     assert 1 not in {r[0] for r in got} and len(got) == 42
+
+
+def test_matview_banded_small_batch_job_count(spark, tmp_path):
+    """The banded matview consumer's small batches, counted by their
+    job tag and pinned as measured: the same seed and batches as
+    test_matview_small_batch_runs_four_jobs over four bands run 15 jobs
+    each, against the unbanded consumer's 6 and 4."""
+    from speculare_pgcdc_spark.cdc.apply import (
+        read_banded_snapshot,
+        start_matview_query_banded,
+        write_banded_snapshot,
+    )
+
+    root = str(tmp_path)
+    _job_seed(spark, root)
+    write_banded_snapshot(
+        spark.read.parquet(f"{root}/snap"), f"{root}/bands", "id",
+        n_bands=4,
+    )
+    _write_batches(f"{root}/feed", _JOB_BATCHES)
+    q = start_matview_query_banded(
+        _mv_stream(spark, f"{root}/feed"), f"{root}/bands", f"{root}/mv",
+        f"{root}/ck", "id", _MV_COLS, "grp", _mv_aggs,
+        query_name="mvb-job-count", available_now=True,
+    )
+    q.awaitTermination()
+    assert len(_batch_jobs(spark, "mvb-job-count", 0)) == 15
+    assert len(_batch_jobs(spark, "mvb-job-count", 1)) == 15
+    snap = read_banded_snapshot(spark, f"{root}/bands").drop("band")
+    assert snap.count() == 42
+    assert _view(spark, f"{root}/mv") == {
+        (r["grp"], r["n"], r["sv"])
+        for r in snap.groupBy("grp").agg(*_mv_aggs()).collect()
+    }
+
+
+def _scd2_job_feed(spark, sf_dir, feed):
+    """Two small order files, split by order date, mtimes pinned."""
+    from speculare_pgcdc_spark.catalog import table as t
+
+    orders = t(spark, sf_dir, "orders")
+    dates = sorted(r[0] for r in orders.select("o_orderdate").distinct()
+                   .collect())
+    d = dates[len(dates) // 2]
+    os.makedirs(feed)
+    for i, c in enumerate([orders.filter(F.col("o_orderdate") <= d),
+                           orders.filter(F.col("o_orderdate") > d)]):
+        out = f"{feed}.{i}"
+        c.coalesce(1).write.parquet(out)
+        part = [f for f in os.listdir(out) if f.endswith(".parquet")][0]
+        dst = f"{feed}/{i:05d}.parquet"
+        os.rename(f"{out}/{part}", dst)
+        os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
+    return orders
+
+
+@pytest.mark.parametrize("banded", [False, True])
+def test_scd2_small_batch_job_count(spark, sf_dir, tmp_path, banded):
+    """The SCD2 consumers' batches, counted by their job tag (pinned as
+    measured): batch 0 starts from the seed state, batch 1 merges into
+    the state batch 0 wrote."""
+    from speculare_pgcdc_spark.cdc.apply import write_banded_snapshot
+    from speculare_pgcdc_spark.cdc.scd2 import (
+        STORED_COLS,
+        scd2_apply,
+        start_scd2_query,
+        start_scd2_query_banded,
+    )
+
+    feed, state = str(tmp_path / "feed"), str(tmp_path / "state")
+    orders = _scd2_job_feed(spark, sf_dir, feed)
+    name = f"scd2-job-count-{banded}"
+    if banded:
+        empty = scd2_apply(None, orders).filter(F.lit(False))
+        max_ck = orders.agg(F.max("o_custkey")).first()[0]
+        write_banded_snapshot(empty.select(*STORED_COLS), state,
+                              "o_custkey", band_width=int(max_ck) // 4 + 1)
+    start = start_scd2_query_banded if banded else start_scd2_query
+    src = (spark.readStream.schema(orders.schema)
+           .option("maxFilesPerTrigger", 1).parquet(feed))
+    q = start(src, state, str(tmp_path / "ck"), query_name=name,
+              available_now=True)
+    q.awaitTermination()
+    want = (6, 13) if banded else (2, 9)
+    assert (len(_batch_jobs(spark, name, 0)),
+            len(_batch_jobs(spark, name, 1))) == want
+    assert spark.read.parquet(state).count() == orders.count()
+
+
+def test_watch_small_batch_runs_one_job(spark, tmp_path):
+    """Engine.watch end to end over a one-file feed: the fan-out query
+    tags its batch like the stateful consumers, and the small batch is
+    one Spark job, the bounded collect that routes, sizes and delivers
+    it (the registry rides the plan as a literal; the observe()
+    counters ride the same job)."""
+    from speculare_pgcdc_spark.engine import Engine
+
+    feed = str(tmp_path / "feed")
+    _write_batches(feed, [[
+        _wal2json_line("insert", "events_a", ["id"], [str(i)])
+        for i in range(4)
+    ]])
+    out = tmp_path / "out"
+    eng = Engine(spark=spark, tables=FEED_TABLES)
+    eng.subscribe(1, "insert:events_a")
+    eng.subscribe(2, "*:events_a:id.eq.2")
+    # the query name is the engine's; count only this run's jobs
+    before = set(_batch_jobs(spark, "cdc-fanout", 0))
+    q = eng.watch(feed, str(out), str(tmp_path / "ckpt"),
+                  available_now=True)
+    try:
+        q.awaitTermination(120)
+    finally:
+        q.stop()
+    jobs = set(_batch_jobs(spark, "cdc-fanout", 0)) - before
+    assert len(jobs) == 1, jobs
+    tracker = spark.sparkContext.statusTracker()
+    assert len(tracker.getJobInfo(jobs.pop()).stageIds) == 1
+    assert len((out / "1" / "outbox.jsonl").read_text().splitlines()) == 4
+    assert len((out / "2" / "outbox.jsonl").read_text().splitlines()) == 1
 
 
 def test_stage_snapshot_small_batch_plan(spark, tmp_path):
@@ -3442,7 +3553,6 @@ def test_banded_matview_partials_mode(spark, tmp_path):
     mv = str(tmp_path / "mvp")
     parts = str(tmp_path / "partsp")
     ckpt = str(tmp_path / "ckptp")
-    os.makedirs(feed_dir)
     cols = {"id": "bigint", "grp": "string", "v": "bigint"}
 
     base = spark.createDataFrame(
@@ -3471,10 +3581,7 @@ def test_banded_matview_partials_mode(spark, tmp_path):
         [_mv_chg("update", 1, "a", 11), _mv_chg("insert", 5, "b", 50)],
         [_mv_chg("delete", 3), _mv_chg("update", 5, "d", 55)],
     ]
-    for i, msgs in enumerate(batches):
-        with open(f"{feed_dir}/f{i}.json", "w") as f:
-            for m in msgs:
-                f.write(json.dumps(m) + "\n")
+    _write_batches(feed_dir, batches)
 
     untouched_band = os.path.join(snap, "band=25")
     before = {
