@@ -89,7 +89,7 @@ def probe(
         # per-key imbalance on fixtures small enough to fold into 1-2
         # tasks — pin the full 32-partition shuffle so the probe sees
         # the DISTRIBUTION the plan would have at scale (the
-        # scd2_skew_probe convention)
+        # convention SKEW_PROBE_r11_scd2 was measured under)
         extra["spark.sql.adaptive.coalescePartitions.enabled"] = "false"
         extra["spark.sql.shuffle.partitions"] = "32"
     spark = get_spark(app_name="scale-probe", extra_conf=extra)

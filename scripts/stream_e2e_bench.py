@@ -386,16 +386,15 @@ def main() -> None:
 
     # ---- SCD2 mode (round-12): the versioned-dimension consumer —
     # orders-shaped history drained chunk-by-chunk through
-    # start_scd2_query (state dir atomically swapped per microbatch).
-    # Basis: orders rows/s. Structural integrity per run: total
-    # versions == orders rows (q281 assigns one version per order) and
-    # open versions == distinct keys; exact one-shot parity is pinned
-    # in tests/test_streaming.py.
+    # start_scd2_query (open table swapped and one log entry appended
+    # per microbatch). Basis: orders rows/s. Structural integrity per
+    # run, through read_scd2_state: total versions == orders rows
+    # (q281 assigns one version per order) and open versions ==
+    # distinct keys; exact one-shot parity is pinned in
+    # tests/test_streaming.py.
     from speculare_pgcdc_spark.cdc.scd2 import (
-        STORED_COLS,
-        scd2_apply,
+        read_scd2_state,
         start_scd2_query,
-        start_scd2_query_banded,
     )
 
     orders = cat_table(spark, sf_dir, "orders")
@@ -424,64 +423,46 @@ def main() -> None:
         shutil.copy(part, dst)
         os.utime(dst, (t_base + i, t_base + i))
 
-    from speculare_pgcdc_spark.cdc.apply import write_banded_snapshot
-
-    max_ck = int(orders.agg(F.max("o_custkey")).first()[0])
-    for scd2_mode in ("legacy", "banded"):
-        walls = []
-        integrity_ok = True
-        for run in range(N_RUNS):
-            state_dir = os.path.join(work, f"scd2_{scd2_mode}_{run}")
-            ckpt = os.path.join(work, f"scd2_{scd2_mode}_ck_{run}")
-            if scd2_mode == "banded":
-                empty = scd2_apply(None, orders).filter(
-                    F.lit(False)
-                ).select(*STORED_COLS)
-                write_banded_snapshot(
-                    empty, state_dir, "o_custkey",
-                    band_width=max(1, max_ck // 32 + 1),
-                )
-            src = (
-                spark.readStream.schema(orders.schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(scd2_feed)
-            )
-            t0 = time.perf_counter()
-            start = (start_scd2_query_banded if scd2_mode == "banded"
-                     else start_scd2_query)
-            q = start(src, state_dir, ckpt, available_now=True)
-            try:
-                q.awaitTermination(600)
-            finally:
-                q.stop()
-            walls.append(time.perf_counter() - t0)
-            st = spark.read.parquet(state_dir)
-            if scd2_mode == "banded":
-                st = st.drop("band")
-            n_versions = st.count()
-            n_open = st.filter(F.col("valid_to").isNull()).count()
-            if n_versions != n_orders or n_open != n_keys:
-                integrity_ok = False
-            for d in (state_dir, ckpt):
-                shutil.rmtree(d, ignore_errors=True)
-        best = min(walls)
-        med = sorted(walls)[len(walls) // 2]
-        suffix = ("scd2_dimension_banded" if scd2_mode == "banded"
-                  else "scd2_dimension")
-        report["modes"][f"{n_chunks}_microbatches/{suffix}"] = {
-            "wall_sec": [round(w, 2) for w in walls],
-            "best_sec": round(best, 2),
-            "median_sec": round(med, 2),
-            "orders_rows_per_s": round(n_orders / best),
-            "orders_rows_per_s_median": round(n_orders / med),
-            "view_integrity": integrity_ok,
-        }
-        print(
-            f"{n_chunks}_microbatches/{suffix}: best {best:.2f}s / "
-            f"med {med:.2f}s -> {round(n_orders / best)} orders "
-            f"rows/s, integrity={'ok' if integrity_ok else 'FAIL'}",
-            flush=True,
+    walls = []
+    integrity_ok = True
+    for run in range(N_RUNS):
+        state_dir = os.path.join(work, f"scd2_{run}")
+        ckpt = os.path.join(work, f"scd2_ck_{run}")
+        src = (
+            spark.readStream.schema(orders.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(scd2_feed)
         )
+        t0 = time.perf_counter()
+        q = start_scd2_query(src, state_dir, ckpt, available_now=True)
+        try:
+            q.awaitTermination(600)
+        finally:
+            q.stop()
+        walls.append(time.perf_counter() - t0)
+        st = read_scd2_state(spark, state_dir)
+        n_versions = st.count()
+        n_open = st.filter(F.col("valid_to").isNull()).count()
+        if n_versions != n_orders or n_open != n_keys:
+            integrity_ok = False
+        for d in (state_dir, ckpt):
+            shutil.rmtree(d, ignore_errors=True)
+    best = min(walls)
+    med = sorted(walls)[len(walls) // 2]
+    report["modes"][f"{n_chunks}_microbatches/scd2_dimension"] = {
+        "wall_sec": [round(w, 2) for w in walls],
+        "best_sec": round(best, 2),
+        "median_sec": round(med, 2),
+        "orders_rows_per_s": round(n_orders / best),
+        "orders_rows_per_s_median": round(n_orders / med),
+        "view_integrity": integrity_ok,
+    }
+    print(
+        f"{n_chunks}_microbatches/scd2_dimension: best {best:.2f}s / "
+        f"med {med:.2f}s -> {round(n_orders / best)} orders "
+        f"rows/s, integrity={'ok' if integrity_ok else 'FAIL'}",
+        flush=True,
+    )
 
     shutil.rmtree(work, ignore_errors=True)
     if out_path:

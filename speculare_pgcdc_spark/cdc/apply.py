@@ -686,7 +686,7 @@ def write_banded_snapshot(
     for 60k rows) and a large one lands near the target rows/band.
     Pass ``n_bands`` to pin a count, or ``band_width`` to pin the
     width itself (required for an EMPTY seed, e.g. a from-scratch
-    SCD2 state, where no key range or size exists to derive from)."""
+    snapshot, where no key range or size exists to derive from)."""
     if band_width is not None:
         width = band_width
         part_bands = n_bands or 32

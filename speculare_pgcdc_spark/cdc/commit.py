@@ -2,9 +2,8 @@
 mark -> swap -> recover, plus the one ``foreachBatch`` starter.
 
 Every consumer (``start_apply_query``, ``start_matview_query``,
-``start_matview_query_banded``, ``start_scd2_query``,
-``start_scd2_query_banded``) keeps only its plan; this module owns
-how the plan's output becomes the live state.
+``start_matview_query_banded``, ``start_scd2_query``) keeps only its
+plan; this module owns how the plan's output becomes the live state.
 
 * **Stage.** The plan writes each changed dir ``d`` in full under
   ``<d>.b<batch_id>.tmp`` (:meth:`Batch.staged`). A banded root is staged as
@@ -32,10 +31,11 @@ and a batch whose every plain unit is marked is not planned at all
 (:func:`start_consumer`). The apply and matview plans would converge
 without the marker (latest-per-key apply is idempotent, and a view
 refresh recomputes from the snapshot); SCD2 would not: re-merging a
-batch into its POST-merge state re-enters every row beside the version
-it already created, duplicating versions and closing the real open
-slice. Banded SCD2 checks the marker per band, because its band swaps
-are not atomic as a set; keys never cross bands, so the skip is exact.
+batch into its POST-merge open table re-enters every row beside the
+version it already created, duplicating versions and closing the real
+open slice. SCD2's log entry is written before its open table is
+staged and named by the open table's sequence, so a replay before the
+swap re-derives the same entry and overwrites it by name.
 
 The marker is ``<query id>:<batch id>``, the query id being the
 ``id`` of ``<checkpoint_dir>/metadata``. It is stable across restarts
@@ -131,10 +131,6 @@ class Batch:
                 return f.read() == self.tag
         except FileNotFoundError:
             return False
-
-    def pending(self, root: str, bands: list[int]) -> list[int]:
-        """``bands`` minus those this batch already swapped."""
-        return [b for b in bands if not self.applied(band_dir(root, b))]
 
     def _commit(self, live: str, stage: str) -> None:
         """Swap ``stage`` in for ``live`` (or remove ``live`` when

@@ -18,7 +18,7 @@ the round-10 advice):
   before an already-CLOSED version whose ``valid_to`` this merge never
   rewrites, so the output silently diverges from the one-shot build —
   pass ``validate=True`` to turn that silent divergence into a raised
-  ``ValueError`` (one extra touched-key aggregate per batch).
+  ``ValueError`` (one extra key-window pass per batch).
 * EQUAL ``valid_from`` across batches is fine: the state stores each
   open version's tie key (``_tie``), and the re-chain ranks the open
   row by its REAL ``(valid_from, _tie)`` — not a hardcoded front
@@ -29,39 +29,32 @@ the round-10 advice):
   open slice the merge rewrites anyway).
 * Tie keys are unique across the history of a key (o_orderkey here);
   redelivery of the same physical row is upstream dedup's job (T5).
+* Rows with a NULL key are dropped before ranking, as
+  ``latest_changes`` drops them: a NULL key never matches its own open
+  row, so each batch would start it a new chain.
 
-Each batch:
+Each batch (:func:`_rechain`) pools every key's CURRENT OPEN version
+(with its real rank keys) with the batch's new rows, ranks the pool per
+key by ``(valid_from, _tie)`` and re-chains ``valid_to`` with one
+lead(); versions continue from the count of already-CLOSED versions,
+and the last row of each key stays open (valid_to NULL). Closed
+versions never change again.
 
-1. pools the key's CURRENT OPEN version (with its real rank keys) with
-   the batch's new rows;
-2. ranks the pool per key by ``(valid_from, _tie)`` and re-chains
-   ``valid_to`` with one lead() — versions continue from the count of
-   already-CLOSED versions, the last row stays open (valid_to NULL);
-3. merges: untouched state rows pass through, touched keys' open
-   rows are replaced by the re-chained slice.
-
-Scale shape per batch: ONE key-partitioned window over (touched open
-rows + batch) + one left-anti merge against state — both keyed on the
-dimension key. At warehouse scale the merge is the standard MERGE
-INTO / bucket-overwrite (state bucketed by key, only touched buckets
-rewritten); the test-sized driver here rewrites one parquet dir,
-which changes durability mechanics, not the per-batch plan.
+Scale shape: the state root holds ``open/``, one row per key, and
+``closed/<n>``, an append-only log with one entry per batch. A batch
+reads and rewrites ``open/`` and writes at most one new log entry of
+the versions it closed: ONE key-partitioned window and ONE write, so
+its cost follows the key count plus the batch, never the history.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from speculare_pgcdc_spark.cdc.apply import (
-    BAND_COL,
-    band_of,
-    read_band_width,
-    read_bands,
-    touched_bands,
-)
 from speculare_pgcdc_spark.cdc.commit import start_consumer
 
 #: SCD2 public state schema (q281's output shape). The stored state
@@ -76,8 +69,10 @@ STATE_COLS = [
 #: full stored schema = STATE_COLS + the internal rank tie key
 STORED_COLS = STATE_COLS + ["_tie"]
 
-_CHAIN_COLS = ["o_custkey", "_base_v", "valid_from", "status",
-               "price_e2", "_tie"]
+#: the state root's open table and its log of closed versions
+OPEN, CLOSED = "open", "closed"
+#: file in the open table naming the last log entry it covers
+LOG_SEQ = "_log_seq"
 
 
 def scd2_batch_rows(batch: DataFrame) -> DataFrame:
@@ -100,131 +95,144 @@ def scd2_apply(
     """Merge one change batch into the SCD2 state; returns new state.
 
     ``state`` is None (or empty) on the first batch; thereafter it is
-    a prior return value (STORED_COLS schema; a bare STATE_COLS frame
-    is accepted for back-compat — its open rows then rank with tie key
-    NULL, i.e. FIRST among equal valid_from, the pre-round-11
-    behavior). ``batch`` is orders-shaped raw changes.
+    a prior return value (STORED_COLS schema). ``batch`` is
+    orders-shaped raw changes.
 
     ``validate=True`` enforces the contract's ordering precondition
     (no batch row strictly earlier than the key's open version) with
-    one extra aggregate over the touched keys and raises ValueError on
+    one extra pass over the key window and raises ValueError on
     violation instead of silently diverging from the one-shot build.
     """
-    return _scd2_apply_rows(state, scd2_batch_rows(batch), validate)
+    rows = scd2_batch_rows(batch)
+    if state is None:
+        return _rechain(None, rows, validate)
+    is_open = F.col("valid_to").isNull()
+    return (
+        state.filter(~is_open)
+        .select(*STORED_COLS)
+        .unionByName(_rechain(state.filter(is_open), rows, validate))
+    )
 
 
-def _scd2_apply_rows(
-    state: DataFrame | None,
+def _rechain(
+    opens: DataFrame | None,
     rows: DataFrame,
     validate: bool = False,
 ) -> DataFrame:
-    """:func:`scd2_apply` on ALREADY-normalized version rows (the
-    :func:`scd2_batch_rows` schema). The banded consumer parses the
-    batch exactly once — band discovery and the merge share one
-    checkpointed rows frame (round-14 advice: the raw batch was being
-    re-parsed per pass) — so it enters here directly."""
-    new = rows.select(
-        "o_custkey",
-        F.lit(None).cast("bigint").alias("_base_v"),
-        "valid_from",
-        "status",
-        "price_e2",
-        "_tie",
+    """Re-chain the open versions ``opens`` with the version rows
+    ``rows`` (the :func:`scd2_batch_rows` schema). Returns, in
+    STORED_COLS, each key's new open version and the versions this
+    batch closed; a key the batch does not touch passes through as its
+    unchanged open row."""
+    vals = ["valid_from", "status", "price_e2", "_tie"]
+    pool = rows.filter(F.col("o_custkey").isNotNull()).select(
+        "o_custkey", F.lit(None).cast("bigint").alias("_base_v"), *vals
     )
-    if state is None:
-        base = None
-    else:
-        if "_tie" not in state.columns:
-            state = state.withColumn(
-                "_tie", F.lit(None).cast("bigint")
+    if opens is not None:
+        # versions continue from the key's CLOSED count (= open
+        # version - 1); batch rows carry NULL and take the key's max
+        pool = pool.unionByName(
+            opens.select(
+                "o_custkey", (F.col("version") - 1).alias("_base_v"), *vals
             )
-        touched = new.select("o_custkey").distinct()
-        base = state.filter(F.col("valid_to").isNull()).join(
-            touched, "o_custkey", "left_semi"
         )
-    if base is not None:
-        if validate:
-            floor_vf = base.groupBy("o_custkey").agg(
-                F.min("valid_from").alias("_open_vf")
+    w_key = Window.partitionBy("o_custkey")
+    w_chain = w_key.orderBy("valid_from", "_tie")
+    if validate and opens is not None:
+        open_vf = F.max(
+            F.when(F.col("_base_v").isNotNull(), F.col("valid_from"))
+        ).over(w_key)
+        n_bad = (
+            pool.select((F.col("valid_from") < open_vf).alias("late"))
+            .filter("late")
+            .count()
+        )
+        if n_bad:
+            raise ValueError(
+                f"scd2_apply: {n_bad} batch row(s) carry a "
+                "valid_from strictly earlier than their key's "
+                "open version — they belong before an already-"
+                "closed version this merge never rewrites, so the "
+                "incremental state would silently diverge from "
+                "the one-shot build (see module contract)"
             )
-            n_bad = (
-                new.join(floor_vf, "o_custkey")
-                .filter(F.col("valid_from") < F.col("_open_vf"))
-                .count()
-            )
-            if n_bad:
-                raise ValueError(
-                    f"scd2_apply: {n_bad} batch row(s) carry a "
-                    "valid_from strictly earlier than their key's "
-                    "open version — they belong before an already-"
-                    "closed version this merge never rewrites, so the "
-                    "incremental state would silently diverge from "
-                    "the one-shot build (see module contract)"
-                )
-        # the open version re-enters the chain at its REAL
-        # (valid_from, _tie) so equal-valid_from batch rows slot
-        # around it exactly as in the one-shot total order; versions
-        # continue from the key's CLOSED count (= open version - 1)
-        opens = base.select(
-            "o_custkey",
-            (F.col("version") - 1).alias("_base_v"),
-            "valid_from",
-            "status",
-            "price_e2",
-            "_tie",
-        )
-        base_v = opens.select("o_custkey", "_base_v")
-        chain = (
-            new.drop("_base_v")
-            .join(F.broadcast(base_v), "o_custkey", "left")
-            .select(
-                "o_custkey",
-                F.coalesce(F.col("_base_v"), F.lit(0)).alias("_base_v"),
-                "valid_from",
-                "status",
-                "price_e2",
-                "_tie",
-            )
-            .unionByName(opens.select(*_CHAIN_COLS))
-        )
-    else:
-        chain = new.select(
-            "o_custkey",
-            F.lit(0).cast("bigint").alias("_base_v"),
-            "valid_from",
-            "status",
-            "price_e2",
-            "_tie",
-        )
-    # NULL _tie (legacy STATE_COLS input) sorts FIRST among equal
-    # valid_from — the pre-tie behavior — via asc_nulls_first
-    w_chain = Window.partitionBy("o_custkey").orderBy(
-        F.col("valid_from").asc(),
-        F.col("_tie").asc_nulls_first(),
-    )
-    updated = chain.select(
+    return pool.select(
         "o_custkey",
-        (F.col("_base_v") + F.row_number().over(w_chain))
-        .cast("bigint").alias("version"),
+        (
+            F.coalesce(F.max("_base_v").over(w_key), F.lit(0))
+            + F.row_number().over(w_chain)
+        ).cast("bigint").alias("version"),
         "valid_from",
         F.lead("valid_from").over(w_chain).alias("valid_to"),
         "status",
         "price_e2",
         "_tie",
     )
-    if state is None:
-        return updated.select(*STORED_COLS)
-    untouched = state.join(
-        updated.select("o_custkey").distinct(), "o_custkey", "left_anti"
+
+
+def _log_seq(open_dir: str) -> int:
+    try:
+        with open(os.path.join(open_dir, LOG_SEQ)) as f:
+            return int(f.read())
+    except FileNotFoundError:
+        return 0
+
+
+def closed_entries(root: str) -> list[str]:
+    """The log entries the live open table covers, ``1..n``: an entry
+    written by a batch whose open table never swapped in is not
+    among them."""
+    n = _log_seq(os.path.join(root, OPEN))
+    log = os.path.join(root, CLOSED)
+    names = os.listdir(log) if os.path.isdir(log) else []
+    return [
+        os.path.join(log, e)
+        for e in sorted(names)
+        if e.isdigit() and int(e) <= n
+    ]
+
+
+def read_scd2_state(spark: SparkSession, root: str) -> DataFrame:
+    """The SCD2 dimension under ``root`` (STORED_COLS): the open table
+    plus every committed log entry."""
+    return spark.read.parquet(
+        os.path.join(root, OPEN), *closed_entries(root)
+    ).select(*STORED_COLS)
+
+
+def _write_split(chain: DataFrame, root: str, stage: str) -> None:
+    """Write ``chain`` (STORED_COLS) in ONE pass: its closed versions
+    become log entry ``n + 1``, overwriting any entry of that name,
+    and its open versions the open table at ``stage``, whose
+    ``LOG_SEQ`` reads ``n + 1``. ``n`` is the live open table's.
+    Nothing is staged when ``chain`` is empty."""
+    n = _log_seq(os.path.join(root, OPEN))
+    (
+        chain.select(*STORED_COLS, F.col("valid_to").isNull().alias(OPEN))
+        .write.partitionBy(OPEN)
+        .mode("overwrite")
+        .parquet(stage)
     )
-    closed_kept = state.filter(F.col("valid_to").isNotNull()).join(
-        updated.select("o_custkey").distinct(), "o_custkey", "left_semi"
-    )
-    return (
-        untouched.select(*STORED_COLS)
-        .unionByName(closed_kept.select(*STORED_COLS))
-        .unionByName(updated.select(*STORED_COLS))
-    )
+    entry = os.path.join(root, CLOSED, str(n + 1))
+    shutil.rmtree(entry, ignore_errors=True)
+    if os.path.isdir(f"{stage}/{OPEN}=false"):
+        os.makedirs(os.path.dirname(entry), exist_ok=True)
+        os.rename(f"{stage}/{OPEN}=false", entry)
+    opens = f"{stage}/{OPEN}=true"
+    if not os.path.isdir(opens):
+        shutil.rmtree(stage)
+        return
+    for name in os.listdir(opens):
+        os.rename(os.path.join(opens, name), os.path.join(stage, name))
+    os.rmdir(opens)
+    with open(os.path.join(stage, LOG_SEQ), "w") as f:
+        f.write(str(n + 1))
+
+
+def write_scd2_state(state: DataFrame, root: str) -> None:
+    """Seed an empty ``root`` from a one-shot build (a
+    :func:`scd2_apply` return value)."""
+    _write_split(state, root, os.path.join(root, OPEN))
 
 
 def start_scd2_query(
@@ -235,98 +243,37 @@ def start_scd2_query(
     query_name: str = "cdc-scd2",
     available_now: bool = False,
 ):
-    """Maintain the SCD2 state dir from a live change stream — the
-    packaged consumer the test harness chained by hand (round 12; the
-    last of the reference's four consumer shapes to get a streaming
-    entry: dispatch = Engine.watch, snapshot = start_apply_query,
-    matview = start_matview_query, SCD2 = this).
+    """Maintain the SCD2 state root ``state_dir`` from a live change
+    stream (read it with :func:`read_scd2_state`; seed it with
+    :func:`write_scd2_state`, or start from an absent root).
 
-    Each microbatch reads the prior state parquet (None on the very
-    first batch — an absent dir), runs :func:`scd2_apply`, and swaps
-    the dir atomically. ``scd2_apply`` is not idempotent, so a replay
-    must not re-merge a committed batch: commit and replay follow
-    :mod:`~speculare_pgcdc_spark.cdc.commit`.
+    Each microbatch re-chains the open table with the batch
+    (:func:`_rechain`), writes the versions it closed to log entry
+    ``n + 1`` and stages the new open table, which swaps in last under
+    :mod:`~speculare_pgcdc_spark.cdc.commit`. Until that swap the
+    reader's ``n`` excludes the new entry, and a replay re-derives the
+    same rows from the same open table and overwrites the entry by
+    name. Entries are named by this state-owned sequence, not by the
+    batch id, which a fresh checkpoint restarts at 0.
 
     ``validate=True`` forwards the ordering-precondition check, turning
     a strictly-late batch into a raised error instead of silent
     divergence from the one-shot build.
     """
     spark = changes_stream.sparkSession
+    open_dir = os.path.join(state_dir, OPEN)
+    os.makedirs(state_dir, exist_ok=True)  # recovery lists it
 
     def plan(batch_df: DataFrame, batch) -> None:
         prev = (
-            spark.read.parquet(state_dir)
-            if os.path.exists(state_dir)
+            spark.read.parquet(open_dir)
+            if os.path.exists(open_dir)
             else None
         )
-        out = scd2_apply(prev, batch_df, validate=validate)
-        out.select(*STORED_COLS).write.mode("overwrite").parquet(
-            batch.staged(state_dir)
-        )
+        chain = _rechain(prev, scd2_batch_rows(batch_df), validate)
+        _write_split(chain, state_dir, batch.staged(open_dir))
 
     return start_consumer(
         changes_stream, plan, checkpoint_dir, query_name, available_now,
-        [state_dir],
-    )
-
-
-def start_scd2_query_banded(
-    changes_stream: DataFrame,
-    state_dir: str,
-    checkpoint_dir: str,
-    validate: bool = False,
-    query_name: str = "cdc-scd2-banded",
-    available_now: bool = False,
-):
-    """Partition-confined twin of :func:`start_scd2_query`: the SCD2
-    state lives in the banded layout (cdc.apply's ``band=<i>`` dirs
-    keyed on o_custkey; seed with ``write_banded_snapshot(state_df,
-    state_dir, "o_custkey")``), and each microbatch rewrites ONLY the
-    bands containing the batch's keys. The versioned-dimension state
-    GROWS forever (one row per order), so the full-rewrite consumer's
-    per-batch cost grows with history — this one's tracks the batch's
-    key locality.
-
-    Replay protection is band-grained (see
-    :mod:`~speculare_pgcdc_spark.cdc.commit`): a replayed batch merges
-    only the bands it has not swapped yet.
-    """
-    spark = changes_stream.sparkSession
-    width = read_band_width(state_dir)
-
-    def plan(batch_df: DataFrame, batch) -> list[int] | None:
-        # ONE parse of the batch, checkpointed: band discovery and the
-        # merge input both read this frame (round-14 advice — the
-        # latest_changes single-parse doctrine; previously the raw
-        # batch lineage ran twice per microbatch). NULL keys are
-        # dropped BEFORE banding, matching latest_changes' null-key
-        # guard: band NULL would otherwise make sorted() raise
-        # TypeError on every replay, permanently wedging the stream.
-        rows = (
-            scd2_batch_rows(batch_df)
-            .filter(F.col("o_custkey").isNotNull())
-            .withColumn("_band", band_of("o_custkey", width))
-            .localCheckpoint(eager=True)
-        )
-        bands = batch.pending(
-            state_dir, touched_bands(rows, F.col("_band"))
-        )
-        if not bands:
-            return None
-        prev = read_bands(spark, state_dir, bands)
-        rel = rows.filter(F.col("_band").isin(bands)).drop("_band")
-        out = _scd2_apply_rows(prev, rel, validate=validate)
-        (
-            out.select(*STORED_COLS)
-            .withColumn(BAND_COL, band_of("o_custkey", width))
-            .repartition(max(len(bands), 1), F.col(BAND_COL))
-            .write.partitionBy(BAND_COL)
-            .mode("overwrite")
-            .parquet(batch.staged(state_dir))
-        )
-        return bands
-
-    return start_consumer(
-        changes_stream, plan, checkpoint_dir, query_name, available_now,
-        [], band_root=state_dir,
+        [open_dir],
     )

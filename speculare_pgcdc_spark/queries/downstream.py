@@ -56,7 +56,7 @@ from speculare_pgcdc_spark.queries import register
     "money floor-scales to e2 cents. The INCREMENTAL twin — "
     "maintaining this state change-batch by change-batch through a "
     "real foreachBatch stream (cdc/scd2.scd2_apply: one key window "
-    "over touched-open+batch rows, one anti-join merge per batch) — "
+    "over the open versions + batch rows, no join) — "
     "is pinned equal to this one-shot build in tests/"
     "test_streaming.py::test_scd2_incremental_stream_matches_batch"
     "_build, the q279-style stream==batch closure for the CDC "

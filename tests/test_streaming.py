@@ -2429,10 +2429,11 @@ def test_scd2_incremental_stream_matches_batch_build(
 
 def _orders_frame(spark, rows):
     """Tiny orders-shaped frame for SCD2 contract tests:
-    rows = [(orderkey, custkey, 'YYYY-MM-DD', status, totalprice)]."""
+    rows = [(orderkey, custkey, 'YYYY-MM-DD', status, totalprice)];
+    custkey may be None."""
     return spark.createDataFrame(
         [
-            (int(ok), int(ck), d, st, float(tp))
+            (int(ok), None if ck is None else int(ck), d, st, float(tp))
             for ok, ck, d, st, tp in rows
         ],
         "o_orderkey bigint, o_custkey bigint, o_orderdate string, "
@@ -2519,6 +2520,27 @@ def test_scd2_late_batch_violates_contract(spark):
     v1_shot = one_shot.filter(F.col("version") == 1).collect()[0]
     assert str(v1_silent["valid_to"]) == "2024-03-01"
     assert str(v1_shot["valid_to"]) == "2024-02-01"
+
+
+def test_scd2_null_keys_dropped_across_batches(spark):
+    """One NULL-key rule for the one-shot and the incremental build:
+    rows with a NULL o_custkey are dropped before ranking. Chained
+    instead, each batch started the NULL key a new open version 1,
+    because the next batch's match on the key never matches NULL,
+    while the one-shot build chained them as versions 1 and 2."""
+    from speculare_pgcdc_spark.cdc.scd2 import STATE_COLS, scd2_apply
+
+    b1 = _orders_frame(spark, [(10, 1, "2024-01-01", "O", 1.0),
+                               (11, None, "2024-01-01", "O", 3.0)])
+    b2 = _orders_frame(spark, [(20, 1, "2024-02-01", "F", 2.0),
+                               (21, None, "2024-02-01", "F", 4.0)])
+    inc = scd2_apply(scd2_apply(None, b1), b2)
+    one_shot = scd2_apply(None, b1.unionByName(b2))
+    got = {tuple(r) for r in inc.select(*STATE_COLS).collect()}
+    assert got == {tuple(r) for r in one_shot.select(*STATE_COLS)
+                   .collect()}
+    assert {r[0] for r in got} == {1}
+    assert len(got) == 2
 
 
 def test_streaming_matview_incremental_refresh(spark, tmp_path):
@@ -2610,15 +2632,16 @@ def test_streaming_matview_incremental_refresh(spark, tmp_path):
 
 def test_start_scd2_query_swaps_state_in_place(spark, sf_dir, tmp_path):
     """start_scd2_query (round-12, the packaged SCD2 streaming
-    consumer): the in-place atomically-swapped state dir converges to
-    the one-shot q281 build over the full history, and a second drain
-    with no new input leaves it unchanged."""
+    consumer): the state root, read through read_scd2_state, converges
+    to the one-shot q281 build over the full history, and a second
+    drain with no new input leaves it unchanged."""
     import glob as _glob
     import shutil as _shutil
 
     from speculare_pgcdc_spark.catalog import table as t
     from speculare_pgcdc_spark.cdc.scd2 import (
         STATE_COLS,
+        read_scd2_state,
         start_scd2_query,
     )
     from speculare_pgcdc_spark.queries import load_all
@@ -2677,7 +2700,7 @@ def test_start_scd2_query_swaps_state_in_place(spark, sf_dir, tmp_path):
     drain()
     got = {
         tuple(r)
-        for r in spark.read.parquet(state_dir)
+        for r in read_scd2_state(spark, state_dir)
         .select(*STATE_COLS).collect()
     }
     assert got == expected
@@ -2685,7 +2708,7 @@ def test_start_scd2_query_swaps_state_in_place(spark, sf_dir, tmp_path):
     drain()  # no new files -> unchanged
     again = {
         tuple(r)
-        for r in spark.read.parquet(state_dir)
+        for r in read_scd2_state(spark, state_dir)
         .select(*STATE_COLS).collect()
     }
     assert again == expected
@@ -2820,7 +2843,6 @@ _ORDERS_SCHEMA = (
     "o_orderkey bigint, o_custkey bigint, o_orderdate date, "
     "o_orderstatus string, o_totalprice double"
 )
-# band width 4 over o_custkey: 7 -> band 1, 9 -> band 2, 2 -> band 0
 _SCD2_SEED = [(10, 7, _dt.date(2023, 12, 1), "O", 9.0),
               (11, 9, _dt.date(2023, 12, 15), "O", 29.0)]
 _SCD2_BATCHES = [
@@ -2830,6 +2852,8 @@ _SCD2_BATCHES = [
     [(4, 7, _dt.date(2024, 3, 1), "F", 12.0),
      (5, 9, _dt.date(2024, 2, 15), "F", 31.0),
      (6, 2, _dt.date(2024, 3, 5), "O", 5.0)],
+    [(7, 7, _dt.date(2024, 4, 1), "F", 13.0),
+     (8, 2, _dt.date(2024, 4, 5), "F", 6.0)],
 ]
 
 
@@ -2858,24 +2882,25 @@ class _Consumer:
 
     def __init__(self, kind, banded=False, partials=False):
         self.kind, self.banded, self.partials = kind, banded, partials
-        self.scd2 = kind.startswith("scd2")
+        self.scd2 = kind == "scd2"
 
     def seed(self, spark, root):
         from speculare_pgcdc_spark.cdc.apply import (
             seed_band_partials,
             write_banded_snapshot,
         )
-        from speculare_pgcdc_spark.cdc.scd2 import STORED_COLS, scd2_apply
+        from speculare_pgcdc_spark.cdc.scd2 import (
+            scd2_apply,
+            write_scd2_state,
+        )
 
         if self.scd2:
-            state = scd2_apply(
-                None, spark.createDataFrame(_SCD2_SEED, _ORDERS_SCHEMA)
-            ).select(*STORED_COLS)
-            if self.banded:
-                write_banded_snapshot(state, f"{root}/scd2", "o_custkey",
-                                      band_width=4)
-            else:
-                state.write.parquet(f"{root}/scd2")
+            write_scd2_state(
+                scd2_apply(
+                    None, spark.createDataFrame(_SCD2_SEED, _ORDERS_SCHEMA)
+                ),
+                f"{root}/scd2",
+            )
             return
         base = spark.createDataFrame(_MV_SEED, "id bigint, grp string, "
                                      "v bigint")
@@ -2895,12 +2920,12 @@ class _Consumer:
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        os.makedirs(feed_dir)
-        for i, b in enumerate(batches):
+        os.makedirs(feed_dir, exist_ok=True)
+        for b in batches:
             # the file source orders files by mtime: pin one second each
-            stamp = (1_700_000_000 + i, 1_700_000_000 + i)
+            stamp = (1_700_000_000 + b, 1_700_000_000 + b)
             if not self.scd2:
-                path = f"{feed_dir}/f{i}.json"
+                path = f"{feed_dir}/f{b}.json"
                 with open(path, "w") as f:
                     for m in _MV_BATCHES[b]:
                         f.write(json.dumps(m) + "\n")
@@ -2913,9 +2938,9 @@ class _Consumer:
             pq.write_table(
                 pa.table([pa.array(c, t) for c, t in zip(cols, types)],
                          names=names),
-                f"{feed_dir}/f{i}.parquet",
+                f"{feed_dir}/f{b}.parquet",
             )
-            os.utime(f"{feed_dir}/f{i}.parquet", stamp)
+            os.utime(f"{feed_dir}/f{b}.parquet", stamp)
 
     def start(self, spark, root, feed_dir, ckpt):
         from speculare_pgcdc_spark.cdc import apply, scd2
@@ -2926,10 +2951,8 @@ class _Consumer:
                 .option("maxFilesPerTrigger", 1)
                 .parquet(feed_dir)
             )
-            start = (scd2.start_scd2_query_banded if self.banded
-                     else scd2.start_scd2_query)
-            return start(src, f"{root}/scd2", ckpt, validate=True,
-                         available_now=True)
+            return scd2.start_scd2_query(src, f"{root}/scd2", ckpt,
+                                         validate=True, available_now=True)
         stream = _mv_stream(spark, feed_dir)
         snap, mv = f"{root}/snap", f"{root}/mv"
         if self.kind == "apply":
@@ -2958,8 +2981,7 @@ class _Consumer:
     def units(self, root):
         """The dirs batch 0 swaps, in commit order."""
         if self.scd2:
-            return ([f"{root}/scd2/band=1", f"{root}/scd2/band=2"]
-                    if self.banded else [f"{root}/scd2"])
+            return [f"{root}/scd2/open"]
         snaps = ([f"{root}/snap/band=0", f"{root}/snap/band=1"]
                  if self.banded else [f"{root}/snap"])
         head = [] if self.kind == "apply" else [f"{root}/mv"]
@@ -2967,10 +2989,10 @@ class _Consumer:
 
     def state(self, spark, root):
         from speculare_pgcdc_spark.cdc.apply import read_banded_snapshot
-        from speculare_pgcdc_spark.cdc.scd2 import STATE_COLS
+        from speculare_pgcdc_spark.cdc.scd2 import STATE_COLS, read_scd2_state
 
         if self.scd2:
-            st = spark.read.parquet(f"{root}/scd2")
+            st = read_scd2_state(spark, f"{root}/scd2")
             return {"rows": _rows(st, STATE_COLS), "n": st.count()}
         snap = (read_banded_snapshot(spark, f"{root}/snap") if self.banded
                 else spark.read.parquet(f"{root}/snap"))
@@ -3032,7 +3054,6 @@ _CONSUMERS = {
     "matview_banded": _Consumer("matview", banded=True),
     "matview_partials": _Consumer("matview", banded=True, partials=True),
     "scd2": _Consumer("scd2"),
-    "scd2_banded": _Consumer("scd2", banded=True),
 }
 _CRASH_FREE: dict = {}
 
@@ -3070,7 +3091,7 @@ def _crash_free(spark, tmp_path, monkeypatch, name):
         (name, point)
         for name, n in [("apply", 1), ("matview", 2),
                         ("matview_banded", 3), ("matview_partials", 4),
-                        ("scd2", 1), ("scd2_banded", 2)]
+                        ("scd2", 1)]
         for point in [*range(n + 1), "mid"]
     ],
 )
@@ -3080,9 +3101,13 @@ def test_commit_crash_matrix(spark, tmp_path, monkeypatch, name, point):
     the same checkpoint, and require the crash-free state: snapshot,
     view, partials or SCD2 state, with one SCD2 row per order. The
     window before the restart is pinned too: the swapped dirs carry
-    the batch's marker, the rest do not."""
+    the batch's marker, the rest do not. For SCD2, point 0 is "log
+    entry written, open table not swapped". After the restart nothing
+    is left staged anywhere under the state root, and SCD2 holds no
+    log entry its open table does not cover."""
     from speculare_pgcdc_spark.cdc import commit
     from speculare_pgcdc_spark.cdc.apply import read_banded_snapshot
+    from speculare_pgcdc_spark.cdc.scd2 import closed_entries
 
     want = _crash_free(spark, tmp_path, monkeypatch, name)
     c = _CONSUMERS[name]
@@ -3130,25 +3155,35 @@ def test_commit_crash_matrix(spark, tmp_path, monkeypatch, name, point):
         got = {r["id"] for r in
                read_banded_snapshot(spark, f"{root}/snap").collect()}
         assert got == {2, 3, 4, 100}
+    if c.scd2 and point == 0:
+        # the batch's entry is in the log, but the reader's open table
+        # does not cover it yet: it still reads exactly the seed
+        assert os.listdir(f"{root}/scd2/closed") == ["2"]
+        assert c.state(spark, root) == c.expected(spark, 0)
 
     c.drain(spark, root, feed, ck)
     assert c.state(spark, root) == want
-    for d in {os.path.dirname(u) for u in units} | set(units):
-        if os.path.isdir(d):
-            assert not [e for e in os.listdir(d)
-                        if e.endswith((".old", ".tmp"))], d
+    for d, subdirs, files in os.walk(root):
+        assert not [e for e in subdirs + files
+                    if e.endswith((".old", ".tmp"))], d
+    if c.scd2:
+        assert sorted(os.listdir(f"{root}/scd2/closed")) == [
+            os.path.basename(e) for e in closed_entries(f"{root}/scd2")
+        ]
     if before is not None:  # the band no batch touched kept its files
         assert sorted((e.name, e.stat().st_mtime) for e in
                       os.scandir(untouched)) == before
 
 
 @pytest.mark.parametrize(
-    "name", ["apply", "matview", "matview_banded", "scd2", "scd2_banded"]
+    "name", ["apply", "matview", "matview_banded", "scd2"]
 )
 def test_fresh_checkpoint_over_existing_state_lands(spark, tmp_path, name):
     """A fresh checkpoint restarts batch ids at 0. Its batches over
     state another checkpoint already advanced must still apply: the
-    replay marker names the query as well as the batch."""
+    replay marker names the query as well as the batch, and SCD2's log
+    entries are named by the state's own sequence, so the second
+    query's batch 0 does not overwrite the first query's entry."""
     c = _CONSUMERS[name]
     root = str(tmp_path / "s")
     c.seed(spark, root)
@@ -3157,6 +3192,33 @@ def test_fresh_checkpoint_over_existing_state_lands(spark, tmp_path, name):
         c.write_feed(feed, [i])
         c.drain(spark, root, feed, str(tmp_path / f"ck{i}"))
     assert c.state(spark, root) == c.expected(spark, 2)
+
+
+def test_scd2_log_entries_never_rewritten(spark, tmp_path):
+    """A batch writes the open table and at most one new log entry.
+    Over three batches, every entry an earlier batch wrote keeps its
+    files, names and mtimes alike; the open table holds one row per
+    key; and the state equals the one-shot build after every batch."""
+    from speculare_pgcdc_spark.cdc.scd2 import CLOSED, OPEN
+
+    c = _CONSUMERS["scd2"]
+    root, feed, ck = (str(tmp_path / d) for d in ("s", "feed", "ck"))
+    c.seed(spark, root)
+    log = f"{root}/scd2/{CLOSED}"
+    seen: set = set()
+    for b in range(3):
+        c.write_feed(feed, [b])
+        c.drain(spark, root, feed, ck)
+        files = {(d, e.name, e.stat().st_mtime_ns)
+                 for d in os.listdir(log) for e in os.scandir(f"{log}/{d}")}
+        assert seen <= files
+        assert len({f[0] for f in files} - {f[0] for f in seen}) == 1
+        seen = files
+        assert sorted(os.listdir(f"{root}/scd2")) == [CLOSED, OPEN]
+        orders = _SCD2_SEED + [r for bt in _SCD2_BATCHES[:b + 1] for r in bt]
+        n_keys = len({r[1] for r in orders})
+        assert spark.read.parquet(f"{root}/scd2/{OPEN}").count() == n_keys
+        assert c.state(spark, root) == c.expected(spark, b + 1)
 
 
 def _large_path(monkeypatch):
@@ -3392,37 +3454,30 @@ def _scd2_job_feed(spark, sf_dir, feed):
     return orders
 
 
-@pytest.mark.parametrize("banded", [False, True])
-def test_scd2_small_batch_job_count(spark, sf_dir, tmp_path, banded):
-    """The SCD2 consumers' batches, counted by their job tag (pinned as
-    measured): batch 0 starts from the seed state, batch 1 merges into
-    the state batch 0 wrote."""
-    from speculare_pgcdc_spark.cdc.apply import write_banded_snapshot
+def test_scd2_small_batch_job_count(spark, sf_dir, tmp_path):
+    """The SCD2 consumer's batches, counted by their job tag (pinned as
+    measured): batch 0 starts from an absent state root and runs the
+    key window's shuffle and the one split write; batch 1 also infers
+    the open table's schema. With the whole history rewritten every
+    batch it was 2 then 9 jobs. The open table holds one row per key."""
     from speculare_pgcdc_spark.cdc.scd2 import (
-        STORED_COLS,
-        scd2_apply,
+        read_scd2_state,
         start_scd2_query,
-        start_scd2_query_banded,
     )
 
     feed, state = str(tmp_path / "feed"), str(tmp_path / "state")
     orders = _scd2_job_feed(spark, sf_dir, feed)
-    name = f"scd2-job-count-{banded}"
-    if banded:
-        empty = scd2_apply(None, orders).filter(F.lit(False))
-        max_ck = orders.agg(F.max("o_custkey")).first()[0]
-        write_banded_snapshot(empty.select(*STORED_COLS), state,
-                              "o_custkey", band_width=int(max_ck) // 4 + 1)
-    start = start_scd2_query_banded if banded else start_scd2_query
+    name = "scd2-job-count"
     src = (spark.readStream.schema(orders.schema)
            .option("maxFilesPerTrigger", 1).parquet(feed))
-    q = start(src, state, str(tmp_path / "ck"), query_name=name,
-              available_now=True)
+    q = start_scd2_query(src, state, str(tmp_path / "ck"),
+                         query_name=name, available_now=True)
     q.awaitTermination()
-    want = (6, 13) if banded else (2, 9)
     assert (len(_batch_jobs(spark, name, 0)),
-            len(_batch_jobs(spark, name, 1))) == want
-    assert spark.read.parquet(state).count() == orders.count()
+            len(_batch_jobs(spark, name, 1))) == (2, 3)
+    assert read_scd2_state(spark, state).count() == orders.count()
+    assert (spark.read.parquet(f"{state}/open").count()
+            == orders.select("o_custkey").distinct().count())
 
 
 def test_watch_small_batch_runs_one_job(spark, tmp_path):
@@ -3636,19 +3691,18 @@ def test_banded_matview_partials_mode(spark, tmp_path):
 
 
 def test_scd2_banded_state_parity(spark, sf_dir, tmp_path):
-    """start_scd2_query_banded (round-13): the key-banded SCD2 state
-    converges to the one-shot q281 build over the full history (its
-    crash replay is in test_commit_crash_matrix)."""
+    """start_scd2_query over a two-chunk feed (the case the
+    key-banded consumer of round 13 was pinned on): the state converges
+    to the one-shot q281 build over the full history, with one row per
+    order (its crash replay is in test_commit_crash_matrix)."""
     import glob as _glob
     import shutil as _shutil
 
     from speculare_pgcdc_spark.catalog import table as t
-    from speculare_pgcdc_spark.cdc.apply import write_banded_snapshot
     from speculare_pgcdc_spark.cdc.scd2 import (
         STATE_COLS,
-        STORED_COLS,
-        scd2_apply,
-        start_scd2_query_banded,
+        read_scd2_state,
+        start_scd2_query,
     )
     from speculare_pgcdc_spark.queries import load_all
 
@@ -3685,22 +3739,12 @@ def test_scd2_banded_state_parity(spark, sf_dir, tmp_path):
 
     state_dir = str(tmp_path / "scd2b_state")
     ckpt = str(tmp_path / "scd2b_ck")
-    # seed: EMPTY banded state, explicit width over the custkey range
-    max_ck = orders.agg(F.max("o_custkey")).first()[0]
-    empty = scd2_apply(None, orders).filter(F.lit(False)).select(
-        *STORED_COLS
-    )
-    write_banded_snapshot(
-        empty, state_dir, "o_custkey",
-        band_width=max(1, int(max_ck) // 8 + 1),
-    )
-
     src = (
         spark.readStream.schema(orders.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(str(feed))
     )
-    q = start_scd2_query_banded(
+    q = start_scd2_query(
         src, state_dir, ckpt, validate=True, available_now=True
     )
     try:
@@ -3708,33 +3752,28 @@ def test_scd2_banded_state_parity(spark, sf_dir, tmp_path):
     finally:
         q.stop()
 
-    got = {
-        tuple(r)
-        for r in spark.read.parquet(state_dir)
-        .select(*STATE_COLS).collect()
-    }
+    state = read_scd2_state(spark, state_dir)
+    got = {tuple(r) for r in state.select(*STATE_COLS).collect()}
     assert got == expected
     # no duplicated versions anywhere: one row per order
-    assert spark.read.parquet(state_dir).count() == orders.count()
+    assert state.count() == orders.count()
 
 
 def test_scd2_banded_null_keys_dropped_not_wedged(spark, sf_dir, tmp_path):
-    """Round-14 advice pin: a batch row with NULL o_custkey used to
-    produce band NULL, and sorted([None, int, ...]) raised TypeError
-    on EVERY replay — permanently wedging the banded SCD2 stream. The
-    single-parse rows frame now drops NULL keys before banding (the
-    latest_changes null-key guard), so the stream drains and the
-    state equals the non-null one-shot build."""
+    """Round-14 advice pin: a batch row with NULL o_custkey once
+    wedged the key-banded SCD2 stream of round 13 (band NULL made
+    every replay raise). start_scd2_query drops NULL keys before
+    ranking (the latest_changes null-key guard), so the stream drains
+    and the state equals the non-null one-shot build."""
     import glob as _glob
     import shutil as _shutil
 
     from speculare_pgcdc_spark.catalog import table as t
-    from speculare_pgcdc_spark.cdc.apply import write_banded_snapshot
     from speculare_pgcdc_spark.cdc.scd2 import (
         STATE_COLS,
-        STORED_COLS,
+        read_scd2_state,
         scd2_apply,
-        start_scd2_query_banded,
+        start_scd2_query,
     )
 
     orders = t(spark, sf_dir, "orders").limit(200).cache()
@@ -3759,20 +3798,11 @@ def test_scd2_banded_null_keys_dropped_not_wedged(spark, sf_dir, tmp_path):
     _shutil.copy(part, str(feed / "00000.parquet"))
 
     state_dir = str(tmp_path / "scd2n_state")
-    max_ck = orders.agg(F.max("o_custkey")).first()[0]
-    empty = scd2_apply(None, orders).filter(F.lit(False)).select(
-        *STORED_COLS
-    )
-    write_banded_snapshot(
-        empty, state_dir, "o_custkey",
-        band_width=max(1, int(max_ck) // 4 + 1),
-    )
-
     src = (
         spark.readStream.schema(poisoned.schema)
         .parquet(str(feed))
     )
-    q = start_scd2_query_banded(
+    q = start_scd2_query(
         src, state_dir, str(tmp_path / "scd2n_ck"), available_now=True
     )
     try:
@@ -3782,7 +3812,7 @@ def test_scd2_banded_null_keys_dropped_not_wedged(spark, sf_dir, tmp_path):
 
     got = {
         tuple(r)
-        for r in spark.read.parquet(state_dir)
+        for r in read_scd2_state(spark, state_dir)
         .select(*STATE_COLS).collect()
     }
     assert got == expected
