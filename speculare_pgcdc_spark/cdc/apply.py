@@ -11,13 +11,15 @@ branches preserve verbatim.
 
 Scale shape: latest-change-per-key is one aggregation
 (max_by over the (seq, chg_idx) WAL order — no window, no join). The
-merge is planned by the size of the change set
-(:func:`stage_snapshot`): up to ``LOOKUP_INLINE_MAX_ROWS`` changed
-keys ride the plan as literals (an InSet of keys and a LocalRelation
-of upserts: no join, no exchange); a larger set is one equi-join on
-the key. With the base bucketed by key (sources.write_bucketed) the
-join side is co-located and the whole apply is a single shuffle of
-the (small) change batch. The snapshot
+streaming merge is planned by the size of the batch
+(:func:`stage_snapshot`): a batch of up to ``LOOKUP_INLINE_MAX_ROWS``
+change rows is collected with no shuffle, each key's latest change is
+picked on the driver, and the changed keys and upserts ride the plan
+as literals (an InSet of keys and a LocalRelation of upserts: no join,
+no exchange); a larger batch is aggregated in Spark and merged by one
+equi-join on the key. With the base bucketed by key
+(sources.write_bucketed) the join side is co-located and the whole
+apply is a single shuffle of the (small) change batch. The snapshot
 OVERWRITE in :func:`start_apply_query` is the local-parquet stand-in
 for a real table format's row-level MERGE (Delta/Iceberg) — the apply
 PLAN is the part that carries over.
@@ -36,14 +38,16 @@ from speculare_pgcdc_spark.catalog import eval_once
 from speculare_pgcdc_spark.cdc import pipeline
 from speculare_pgcdc_spark.cdc.commit import (
     BAND_COL,
+    Dirs,
     band_dir,
     start_consumer,
 )
 
 
-def _change_key(key_col: str, from_cols: bool = False):
-    """The change's key as a string: row map for inserts/updates,
-    oldkeys (v1) / identity (v2) from the raw payload for deletes.
+def _change_key(key_col: str, from_cols: bool = False) -> str:
+    """SQL for the change's key as a string: row map for
+    inserts/updates, oldkeys (v1) / identity (v2) from the raw payload
+    for deletes.
 
     The delete key is located BY NAME in oldkeys.keynames / the
     identity entries — never positionally: a composite or reordered
@@ -59,33 +63,44 @@ def _change_key(key_col: str, from_cols: bool = False):
     That path never touches ``change_json``, so Catalyst prunes the
     to_json payload render AND this function's three re-parses out of
     the apply lineage — parse-once instead of
-    parse -> serialize -> re-parse x3."""
+    parse -> serialize -> re-parse x3.
+
+    SQL text, not Columns: it is parsed in one JVM call, where the
+    Column form cost ~20 ms of py4j calls per plan (4 vCPU)."""
+    k = _sql_literal(key_col)
     if from_cols:
-        pos = F.array_position(F.col("_dk_names"), key_col)
-        dk = F.when(
-            pos > 0, F.try_element_at(F.col("_dk_vals"), pos.cast("int"))
+        names, vals = "_dk_names", "_dk_vals"
+    else:
+        doc = "try_parse_json(change_json)"
+        names = f"variant_get({doc}, '$.oldkeys.keynames', 'array<string>')"
+        vals = f"variant_get({doc}, '$.oldkeys.keyvalues', 'array<string>')"
+    pos = f"array_position({names}, {k})"
+    keys = [
+        f"try_element_at(row_str, {k})",
+        f"CASE WHEN {pos} > 0 "
+        f"THEN try_element_at({vals}, CAST({pos} AS INT)) END",
+    ]
+    if not from_cols:
+        idn = (
+            f"variant_get({doc}, '$.identity', "
+            "'array<struct<name:string,value:string>>')"
         )
-        return F.coalesce(F.try_element_at("row_str", F.lit(key_col)), dk)
-    names = F.expr(
-        "variant_get(try_parse_json(change_json), "
-        "'$.oldkeys.keynames', 'array<string>')"
+        keys.append(
+            f"try_element_at(filter({idn}, x -> x.name = {k}), 1).value"
+        )
+    return f"coalesce({', '.join(keys)})"
+
+
+def _keyed(
+    changes: DataFrame, key_col: str, key_t: str, tables, *cols: str
+) -> DataFrame:
+    """The changes of ``tables`` (None = all) as their typed key plus
+    the SQL expressions ``cols``."""
+    rel = changes if tables is None else changes.where(
+        in_set("table_name", tables)
     )
-    vals = F.expr(
-        "variant_get(try_parse_json(change_json), "
-        "'$.oldkeys.keyvalues', 'array<string>')"
-    )
-    pos = F.array_position(names, key_col)
-    v1_del = F.when(pos > 0, F.try_element_at(vals, pos.cast("int")))
-    idn = F.expr(
-        "variant_get(try_parse_json(change_json), '$.identity', "
-        "'array<struct<name:string,value:string>>')"
-    )
-    v2_del = F.try_element_at(
-        F.filter(idn, lambda x: x["name"] == F.lit(key_col)), F.lit(1)
-    )["value"]
-    return F.coalesce(
-        F.try_element_at("row_str", F.lit(key_col)), v1_del, v2_del
-    )
+    key = _change_key(key_col, "_dk_names" in changes.columns)
+    return rel.selectExpr(f"CAST({key} AS {key_t}) AS {_q(key_col)}", *cols)
 
 
 def latest_changes(
@@ -124,15 +139,9 @@ def latest_changes(
     (``AB_LATEST.json``, join-back / max_by per-round ratio median:
     q96 1.23 and q97 1.04 at sf0.1, 1.12 and 1.07 at 10x, q96 1.10
     at 100x)."""
-    rel = changes if tables is None else changes.filter(
-        F.col("table_name").isin(tables)
-    )
-    keyed = rel.select(
-        _change_key(key_col, "_dk_names" in changes.columns)
-        .cast(key_t)
-        .alias(key_col),
-        F.struct("seq", "chg_idx").alias("_ord"),
-        F.struct("kind", "row_str").alias("_chg"),
+    keyed = _keyed(
+        changes, key_col, key_t, tables,
+        "struct(seq, chg_idx) AS _ord", "struct(kind, row_str) AS _chg",
     )
     # Generate barrier before the null-key guard (r14, guide §4.4's
     # duplicate-evaluation defect): a filter above a projection is
@@ -237,14 +246,9 @@ def touched_groups(
     pre-apply snapshot — wal2json deletes carry no columns) plus the
     NEW group of every upsert. One column (``group_col``), distinct.
     Bounded by the batch size, never by the snapshot."""
-    rel = changes if tables is None else changes.filter(
-        F.col("table_name").isin(tables)
-    )
-    keyed = rel.select(
-        _change_key(key_col, "_dk_names" in changes.columns)
-        .cast(key_type)
-        .alias(key_col),
-        F.try_element_at("row_str", F.lit(group_col)).alias("_new_g"),
+    keyed = _keyed(
+        changes, key_col, key_type, tables,
+        f"try_element_at(row_str, {_sql_literal(group_col)}) AS _new_g",
         "kind",
     ).filter(F.col(key_col).isNotNull())
     old_side = (
@@ -379,6 +383,25 @@ def in_groups(group_col: str, values, has_null: bool) -> Column:
     return hit | F.col(group_col).isNull() if has_null else hit
 
 
+def _latest_rows(rows, key_col: str):
+    """:func:`latest_changes`' pick over collected change rows (a
+    pyarrow Table with ``key_col``, ``_seq`` and ``_idx``): per
+    non-NULL key, the row with the greatest ``(_seq, _idx)``, a NULL
+    ordering first. The sort is stable, so of tied rows the last one
+    collected wins: an unspecified winner, as in the aggregate."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    rows = rows.filter(pc.is_valid(rows.column(key_col)))
+    rows = rows.take(pc.sort_indices(
+        rows, [("_seq", "ascending"), ("_idx", "ascending")],
+        null_placement="at_start",
+    ))
+    pos = rows.append_column("_pos", pa.array(range(rows.num_rows)))
+    last = pos.group_by(key_col).aggregate([("_pos", "max")])
+    return rows.take(last.column("_pos_max"))
+
+
 def stage_snapshot(
     base: DataFrame,
     changes: DataFrame,
@@ -391,93 +414,99 @@ def stage_snapshot(
     change set. Returns ``(snapshot, touched)``: write ``snapshot``
     (key_col + ``columns``, in that order, typed); AFTER the write,
     ``touched()`` gives the ``group_col`` groups the batch touched, in
-    the form :func:`refresh_aggregates` takes (``touched`` is None
-    without ``group_col``).
+    the form :func:`refresh_aggregates` takes, or None when it touched
+    none (``touched`` is None without ``group_col``). Both are None
+    when the batch changes no key: there is nothing to stage.
 
-    The batch is parsed and aggregated ONCE (:func:`latest_changes`),
-    and one bounded Arrow collect of at most
-    ``LOOKUP_INLINE_MAX_ROWS + 1`` typed rows (the
+    One bounded Arrow collect of at most ``LOOKUP_INLINE_MAX_ROWS + 1``
+    change rows (the
     :func:`~speculare_pgcdc_spark.cdc.pipeline.normalize_hypertables`
-    bound between a literal in the plan and a broadcast join) both
-    sizes the change set and, when it fits, IS the change set:
+    bound between a literal in the plan and a join) reads the batch
+    with no shuffle: each row's key, WAL position, delete flag and
+    uncast cells. It sizes the change set and, when it fits, IS the
+    change set:
 
-    * **Small** (at most the bound): the changed keys enter the plan
-      as an ``InSet`` literal (:func:`in_set`) and the upserts as a
-      LocalRelation; the snapshot is ``base`` minus the changed keys
-      plus the upserts, with no join and no exchange. One
-      ``observe()`` on the written plan collects the OLD groups of the
-      changed keys as it scans ``base``, so the touched groups cost
-      no join and no job either.
-    * **Large**: the :func:`apply_latest` anti-join against the
-      checkpointed latest frame, and :func:`touched_groups_latest`.
+    * **Small** (at most the bound, counted in change rows, not keys):
+      the driver picks each key's latest change (:func:`_latest_rows`,
+      the order of :func:`latest_changes`). The changed keys enter the
+      plan as an ``InSet`` literal (:func:`in_set`) and the upserts as
+      a LocalRelation, cast to ``columns`` in the plan, so a malformed
+      cell fails the batch only on a change that wins. The snapshot is
+      ``base`` minus the changed keys plus the upserts: no join and no
+      exchange. One ``observe()`` on the written plan collects the OLD
+      groups of the changed keys and the NEW groups of the upserts, so
+      the touched groups cost no join and no job either.
+    * **Large**: the batch is aggregated by :func:`latest_changes`,
+      checkpointed, and merged by the :func:`apply_latest` anti-join;
+      :func:`touched_groups_latest` gives the groups.
 
-    The latest frame is checkpointed lazily: adaptive execution runs
-    its aggregate's shuffle as the checkpoint is planned, and the
-    bounded collect reads every partition, so it fills the checkpoint
-    too: two jobs, and the large path reads the batch from the
-    checkpoint. The union is coalesced to the number of ``base``'s
-    files, so the snapshot keeps its file count: the upserts'
-    partitions would otherwise add files to it every batch."""
+    The union is coalesced to the number of ``base``'s files, so the
+    snapshot keeps its file count: the upserts' partitions would
+    otherwise add files to it every batch."""
     import pyarrow.compute as pc
 
     spark = base.sparkSession
     key_t = columns.get(key_col, "string")
     ordered = _ordered(key_col, columns)
     n_out = _n_files(base)
-    latest = latest_changes(changes, key_col, key_t, tables).localCheckpoint(
-        eager=False
-    )
     rows = (
-        latest.select(
-            key_col,
-            (F.col("_chg.kind") == "delete").alias("_del"),
-            *_upsert_cols(key_col, columns),
+        _keyed(
+            changes, key_col, key_t, tables,
+            "seq AS _seq", "chg_idx AS _idx", "kind = 'delete' AS _del",
+            *[f"try_element_at(row_str, {_sql_literal(c)}) AS {_q(c)}"
+              for c in ordered[1:]],
         )
         .limit(pipeline.LOOKUP_INLINE_MAX_ROWS + 1)
         .toArrow()
     )
-    small = rows.num_rows <= pipeline.LOOKUP_INLINE_MAX_ROWS
-    changed = small and in_set(
-        f"CAST({_q(key_col)} AS {key_t})", rows.column(key_col).to_pylist()
-    )
-    if not changed:  # too many keys, or a key with no SQL literal
-        snapshot = apply_latest(base, latest, key_col, columns)
+    changed = None
+    if rows.num_rows <= pipeline.LOOKUP_INLINE_MAX_ROWS:
+        latest = _latest_rows(rows, key_col)
+        if latest.num_rows == 0:
+            return None, None
+        changed = in_set(
+            f"CAST({_q(key_col)} AS {key_t})",
+            latest.column(key_col).to_pylist(),
+        )
+    if changed is None:  # too many change rows, or a key with no literal
+        lat = latest_changes(changes, key_col, key_t, tables).localCheckpoint(
+            eager=False
+        )
+        snapshot = apply_latest(base, lat, key_col, columns)
         touched = None if group_col is None else (
-            lambda: touched_groups_latest(base, latest, key_col, group_col)
+            lambda: touched_groups_latest(base, lat, key_col, group_col)
         )
         return snapshot.coalesce(n_out), touched
-    ups = rows.filter(pc.invert(rows.column("_del"))).select(ordered)
     upserts = spark.createDataFrame(
-        ups, ", ".join(f"{_q(c)} {columns.get(c, key_t)}" for c in ordered)
+        latest.filter(pc.invert(latest.column("_del"))).select(ordered),
+        ", ".join(
+            f"{_q(c)} {key_t if c == key_col else 'string'}" for c in ordered
+        ),
     )
+    # _row: 0 on an untouched base row, 1 on a changed key's old row
+    # (dropped), 2 on an upsert
     cur = base.selectExpr(
-        *_typed_sql(key_col, columns), f"{changed} AS _changed"
+        *_typed_sql(key_col, columns), f"CAST({changed} AS INT) AS _row"
+    ).unionByName(
+        upserts.selectExpr(*_typed_sql(key_col, columns), "2 AS _row")
     )
     if group_col is not None:
         obs = Observation()
-        g, hit = F.col(group_col), F.col("_changed")
+        g = _q(group_col)
         cur = cur.observe(
             obs,
-            F.collect_set(F.when(hit, g)).alias("groups"),
-            F.max(hit & g.isNull()).alias("has_null"),
+            F.expr(f"collect_set(CASE WHEN _row > 0 THEN {g} END) AS groups"),
+            F.expr(f"max(_row > 0 AND {g} IS NULL) AS has_null"),
         )
-    snapshot = (
-        cur.filter(~F.col("_changed"))
-        .drop("_changed")
-        .unionByName(upserts)
-        .coalesce(n_out)
-    )
+    snapshot = cur.where("_row != 1").drop("_row").coalesce(n_out)
     if group_col is None:
         return snapshot, None
 
-    def touched() -> Column:
-        old = obs.get
-        new = ups.column(group_col).to_pylist()
-        return in_groups(
-            group_col,
-            [*old["groups"], *new],
-            bool(old["has_null"]) or None in new,
-        )
+    def touched() -> Column | None:
+        got = obs.get
+        if not got["groups"] and not got["has_null"]:
+            return None
+        return in_groups(group_col, got["groups"], bool(got["has_null"]))
 
     return snapshot, touched
 
@@ -486,28 +515,6 @@ def _n_files(df: DataFrame) -> int:
     """The files a dir frame reads (at least 1): a stage coalesced to
     its dir's count keeps the dir from gaining files every batch."""
     return max(1, len(df.inputFiles()))
-
-
-class _Dirs:
-    """A consumer's reads of its own dirs, with no schema inference
-    per batch: a dir's schema is inferred at its first read in the
-    query run (one job; crash recovery has run by then, so a dir
-    caught mid-swap is back in place), then taken from the frame the
-    consumer last staged there."""
-
-    def __init__(self, spark: SparkSession):
-        self.spark = spark
-        self.schemas: dict = {}
-
-    def read(self, d: str, path: str | None = None) -> DataFrame:
-        """Dir ``d``, or its stage at ``path``."""
-        if d not in self.schemas:
-            self.schemas[d] = self.spark.read.parquet(d).schema
-        return self.spark.read.schema(self.schemas[d]).parquet(path or d)
-
-    def stage(self, df: DataFrame, d: str, batch) -> None:
-        df.write.mode("overwrite").parquet(batch.staged(d))
-        self.schemas[d] = df.schema
 
 
 def start_apply_query(
@@ -526,21 +533,24 @@ def start_apply_query(
     materialized-table consumer of watch()'s dataflow. Commit and
     replay follow :mod:`~speculare_pgcdc_spark.cdc.commit`.
 
-    A batch of at most ``LOOKUP_INLINE_MAX_ROWS`` changed keys runs
-    three Spark jobs: the latest-per-key shuffle, the bounded collect,
-    and the snapshot write (no join, no schema inference). A larger
-    one keeps the anti-join, whose key set would not fit in the plan.
+    A batch of at most ``LOOKUP_INLINE_MAX_ROWS`` change rows runs two
+    Spark jobs: the bounded collect and the snapshot write (no
+    shuffle, no join, no schema inference); a batch that changes no
+    key runs only the collect and stages nothing. A larger one keeps
+    the latest-per-key aggregate and the anti-join, whose key set
+    would not fit in the plan.
 
     The full-overwrite is correct-but-local: a durable deployment
     swaps this writer for a table format with row-level merge; the
     upstream plan is unchanged."""
-    dirs = _Dirs(changes_stream.sparkSession)
+    dirs = Dirs(changes_stream.sparkSession)
 
     def plan(batch_df: DataFrame, batch) -> None:
         snapshot, _ = stage_snapshot(
             dirs.read(snapshot_dir), batch_df, key_col, columns, tables
         )
-        dirs.stage(snapshot, snapshot_dir, batch)
+        if snapshot is not None:
+            dirs.stage(snapshot, snapshot_dir, batch)
 
     return start_consumer(
         changes_stream, plan, checkpoint_dir, query_name, available_now,
@@ -573,28 +583,33 @@ def start_matview_query(
     Per batch, :func:`stage_snapshot` writes the snapshot stage, and
     the view stage re-aggregates the touched groups of the staged
     snapshot (read back, never re-planned). A batch of at most
-    ``LOOKUP_INLINE_MAX_ROWS`` changed keys runs four Spark jobs on a
-    one-file snapshot: the latest-per-key shuffle, the bounded
-    collect, the snapshot write and the view write (five on a
-    multi-file snapshot, whose view aggregate shuffles). Its changed
-    keys and touched groups ride the plan as literals, because at
-    these sizes a job costs more than the data it moves: with
-    broadcast joins in both stages the batch ran 12 to 14 jobs. A
-    larger batch keeps the joins: its key set would not fit in the
-    plan.
+    ``LOOKUP_INLINE_MAX_ROWS`` change rows runs three Spark jobs on a
+    one-file snapshot: the bounded collect of the change rows, the
+    snapshot write and the view write (four on a multi-file snapshot,
+    whose view aggregate shuffles). Each key's latest change is picked
+    on the driver, and the changed keys and touched groups ride the
+    plan as literals, because at these sizes a job costs more than the
+    data it moves. A batch that changes no key stages nothing, and one
+    that touches no group stages no view. A larger batch keeps the
+    aggregate and the joins: its key set would not fit in the plan.
 
     Commit and replay follow :mod:`~speculare_pgcdc_spark.cdc.commit`.
     """
-    dirs = _Dirs(changes_stream.sparkSession)
+    dirs = Dirs(changes_stream.sparkSession)
 
     def plan(batch_df: DataFrame, batch) -> None:
         snapshot, touched = stage_snapshot(
             dirs.read(snapshot_dir), batch_df, key_col, columns, tables,
             group_col,
         )
+        if snapshot is None:
+            return
         # BOTH stages land before either directory swaps — the large
         # path's touched groups read the PRE-swap snapshot
         dirs.stage(snapshot, snapshot_dir, batch)
+        groups = touched()
+        if groups is None:
+            return
         staged = dirs.read(snapshot_dir, batch.staged(snapshot_dir))
         # read in at most one partition per file: a snapshot staged as
         # one file is then one partition, and the view's aggregate
@@ -602,7 +617,7 @@ def start_matview_query(
         staged = staged.coalesce(_n_files(staged))
         mv_old = dirs.read(matview_dir)
         mv_new = refresh_aggregates(
-            mv_old, staged, touched(), group_col, agg_cols_fn()
+            mv_old, staged, groups, group_col, agg_cols_fn()
         )
         dirs.stage(
             mv_new.select(*mv_old.columns).coalesce(_n_files(mv_old)),

@@ -17,6 +17,8 @@ plan; this module owns how the plan's output becomes the live state.
   ``live -> live.old``, ``staged -> live``, drop ``live.old``; a
   touched band absent from the stage had every row deleted and is
   removed the same way (:func:`swap`).
+* **Read.** :class:`Dirs` reads a unit with the schema the consumer
+  last staged there, so a steady batch infers no schema.
 * **Recover.** At the top of every batch each unit is recovered: a
   ``.old`` with no live dir is a crash between a swap's two renames
   and is renamed back; a ``.old`` beside its live dir is post-swap
@@ -152,6 +154,28 @@ class Batch:
             self._commit(
                 band_dir(band_root, b), band_dir(self.staged(band_root), b)
             )
+
+
+class Dirs:
+    """A consumer's reads of its own dirs, with no schema inference
+    per batch: a dir's schema is inferred at its first read in the
+    query run (one job; crash recovery has run by then, so a dir
+    caught mid-swap is back in place), then taken from the frame the
+    consumer last staged there."""
+
+    def __init__(self, spark):
+        self.spark = spark
+        self.schemas: dict = {}
+
+    def read(self, d: str, path: str | None = None):
+        """Dir ``d``, or its stage at ``path``."""
+        if d not in self.schemas:
+            self.schemas[d] = self.spark.read.parquet(d).schema
+        return self.spark.read.schema(self.schemas[d]).parquet(path or d)
+
+    def stage(self, df, d: str, batch: Batch) -> None:
+        df.write.mode("overwrite").parquet(batch.staged(d))
+        self.schemas[d] = df.schema
 
 
 def job_tag(query_name: str, batch_id: int) -> str:

@@ -55,7 +55,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from speculare_pgcdc_spark.cdc.commit import start_consumer
+from speculare_pgcdc_spark.cdc.commit import Dirs, start_consumer
 
 #: SCD2 public state schema (q281's output shape). The stored state
 #: additionally carries ``_tie`` (each version's rank tie key) so the
@@ -254,24 +254,25 @@ def start_scd2_query(
     reader's ``n`` excludes the new entry, and a replay re-derives the
     same rows from the same open table and overwrites the entry by
     name. Entries are named by this state-owned sequence, not by the
-    batch id, which a fresh checkpoint restarts at 0.
+    batch id, which a fresh checkpoint restarts at 0. The open table
+    is read with the schema this query last staged
+    (:class:`~speculare_pgcdc_spark.cdc.commit.Dirs`), so a steady
+    batch runs two Spark jobs: the key window's shuffle and the split
+    write.
 
     ``validate=True`` forwards the ordering-precondition check, turning
     a strictly-late batch into a raised error instead of silent
     divergence from the one-shot build.
     """
-    spark = changes_stream.sparkSession
+    dirs = Dirs(changes_stream.sparkSession)
     open_dir = os.path.join(state_dir, OPEN)
     os.makedirs(state_dir, exist_ok=True)  # recovery lists it
 
     def plan(batch_df: DataFrame, batch) -> None:
-        prev = (
-            spark.read.parquet(open_dir)
-            if os.path.exists(open_dir)
-            else None
-        )
+        prev = dirs.read(open_dir) if os.path.exists(open_dir) else None
         chain = _rechain(prev, scd2_batch_rows(batch_df), validate)
         _write_split(chain, state_dir, batch.staged(open_dir))
+        dirs.schemas[open_dir] = chain.schema
 
     return start_consumer(
         changes_stream, plan, checkpoint_dir, query_name, available_now,

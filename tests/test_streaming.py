@@ -3350,15 +3350,16 @@ def _job_seed(spark, root):
     )
 
 
-def test_matview_small_batch_runs_four_jobs(spark, tmp_path):
-    """A small matview batch runs four Spark jobs, counted by the job
-    tag cdc.commit gives each batch: the latest-per-key shuffle, the
-    bounded collect of the change set, the snapshot write, and the
-    view write. The view's aggregate needs no shuffle of its own: the
-    one-file snapshot stage is read back as one partition. The first
-    batch of a query run also infers the two dirs' schemas (one job
-    each); later batches read with the schema they staged. It was 12
-    jobs per batch with the joins, 14 with the hypertable lookup."""
+def test_matview_small_batch_runs_three_jobs(spark, tmp_path):
+    """A small matview batch runs three Spark jobs, counted by the job
+    tag cdc.commit gives each batch: the bounded collect of the change
+    rows (no shuffle: the driver picks each key's latest change), the
+    snapshot write, and the view write. The view's aggregate needs no
+    shuffle of its own: the one-file snapshot stage is read back as
+    one partition. The first batch of a query run also infers the two
+    dirs' schemas (one job each); later batches read with the schema
+    they staged. It was 4 jobs with the latest-per-key shuffle, 12
+    with the joins, 14 with the hypertable lookup."""
     from speculare_pgcdc_spark.cdc.apply import start_matview_query
 
     root = str(tmp_path)
@@ -3370,19 +3371,19 @@ def test_matview_small_batch_runs_four_jobs(spark, tmp_path):
         query_name="mv-job-count", available_now=True,
     )
     q.awaitTermination()
-    assert len(_batch_jobs(spark, "mv-job-count", 0)) == 6
-    assert len(_batch_jobs(spark, "mv-job-count", 1)) == 4
+    assert len(_batch_jobs(spark, "mv-job-count", 0)) == 5
+    assert len(_batch_jobs(spark, "mv-job-count", 1)) == 3
     assert _view(spark, f"{root}/mv") == _recomputed_view(
         spark, f"{root}/snap"
     )
     assert spark.read.parquet(f"{root}/snap").count() == 42
 
 
-def test_apply_small_batch_runs_three_jobs(spark, tmp_path):
+def test_apply_small_batch_runs_two_jobs(spark, tmp_path):
     """start_apply_query shares the matview's snapshot stage: a small
-    batch runs the latest-per-key shuffle, the bounded collect and the
-    snapshot write, with no join and no schema inference after the
-    query run's first batch."""
+    batch runs the bounded collect and the snapshot write, with no
+    shuffle, no join and no schema inference after the query run's
+    first batch."""
     from speculare_pgcdc_spark.cdc.apply import start_apply_query
 
     root = str(tmp_path)
@@ -3393,18 +3394,71 @@ def test_apply_small_batch_runs_three_jobs(spark, tmp_path):
         "id", _MV_COLS, query_name="apply-job-count", available_now=True,
     )
     q.awaitTermination()
-    assert len(_batch_jobs(spark, "apply-job-count", 0)) == 4
-    assert len(_batch_jobs(spark, "apply-job-count", 1)) == 3
+    assert len(_batch_jobs(spark, "apply-job-count", 0)) == 3
+    assert len(_batch_jobs(spark, "apply-job-count", 1)) == 2
     got = {tuple(r) for r in spark.read.parquet(f"{root}/snap").collect()}
     assert (2, "d", 102) in got and (13, None, 13) in got
     assert 1 not in {r[0] for r in got} and len(got) == 42
 
 
+def test_unchanged_batch_stages_nothing(spark, tmp_path):
+    """A batch that changes no key of ``tables`` (batch 1: a change to
+    another table and one with a NULL key) runs only the collect and
+    stages neither dir; a batch that changes keys but touches no group
+    (batch 2: the delete of a key the snapshot lacks) stages the
+    snapshot but no view. A replay of batch 2 after a crash before its
+    commit-log entry changes neither dir."""
+    from speculare_pgcdc_spark.cdc.apply import start_matview_query
+    from speculare_pgcdc_spark.cdc.commit import MARKER, query_id
+
+    root = str(tmp_path)
+    snap, mv, ck = f"{root}/snap", f"{root}/mv", f"{root}/ck"
+    _job_seed(spark, root)
+    other = _mv_chg("insert", 50, "a", 1)
+    other["change"][0]["table"] = "u"
+    _write_batches(f"{root}/feed", [
+        _JOB_BATCHES[0],
+        [other, _mv_chg("insert", None, "a", 1)],
+        [_mv_chg("delete", 999)],
+    ])
+
+    def drain():
+        start_matview_query(
+            _mv_stream(spark, f"{root}/feed"), snap, mv, ck, "id",
+            _MV_COLS, "grp", _mv_aggs, tables=["t"],
+            query_name="mv-unchanged", available_now=True,
+        ).awaitTermination()
+
+    def state():
+        return {d: sorted((e.name, e.stat().st_mtime_ns)
+                          for e in os.scandir(d)) for d in (snap, mv)}
+
+    def marker(d):
+        with open(f"{d}/{MARKER}") as f:
+            return f.read()
+
+    drain()
+    assert [len(_batch_jobs(spark, "mv-unchanged", b))
+            for b in (1, 2)] == [1, 2]
+    qid = query_id(ck)
+    assert (marker(snap), marker(mv)) == (f"{qid}:2", f"{qid}:0")
+    before = state()
+    for f in ("2", ".2.crc"):
+        if os.path.exists(f"{ck}/commits/{f}"):
+            os.remove(f"{ck}/commits/{f}")
+    drain()
+    # the replay ran batch 2 again (its collect at least)
+    assert len(_batch_jobs(spark, "mv-unchanged", 2)) > 2
+    assert state() == before
+    assert spark.read.parquet(snap).count() == 41
+    assert _view(spark, mv) == _recomputed_view(spark, snap)
+
+
 def test_matview_banded_small_batch_job_count(spark, tmp_path):
     """The banded matview consumer's small batches, counted by their
     job tag and pinned as measured: the same seed and batches as
-    test_matview_small_batch_runs_four_jobs over four bands run 15 jobs
-    each, against the unbanded consumer's 6 and 4."""
+    test_matview_small_batch_runs_three_jobs over four bands run 15 jobs
+    each, against the unbanded consumer's 5 and 3."""
     from speculare_pgcdc_spark.cdc.apply import (
         read_banded_snapshot,
         start_matview_query_banded,
@@ -3456,10 +3510,12 @@ def _scd2_job_feed(spark, sf_dir, feed):
 
 def test_scd2_small_batch_job_count(spark, sf_dir, tmp_path):
     """The SCD2 consumer's batches, counted by their job tag (pinned as
-    measured): batch 0 starts from an absent state root and runs the
-    key window's shuffle and the one split write; batch 1 also infers
-    the open table's schema. With the whole history rewritten every
-    batch it was 2 then 9 jobs. The open table holds one row per key."""
+    measured): each batch runs the key window's shuffle and the one
+    split write. Batch 0 starts from an absent state root; batch 1
+    reads the open table with the schema batch 0 staged, not by
+    inferring it (one job more). With the whole history rewritten
+    every batch it was 2 then 9 jobs. The open table holds one row per
+    key."""
     from speculare_pgcdc_spark.cdc.scd2 import (
         read_scd2_state,
         start_scd2_query,
@@ -3474,7 +3530,7 @@ def test_scd2_small_batch_job_count(spark, sf_dir, tmp_path):
                          query_name=name, available_now=True)
     q.awaitTermination()
     assert (len(_batch_jobs(spark, name, 0)),
-            len(_batch_jobs(spark, name, 1))) == (2, 3)
+            len(_batch_jobs(spark, name, 1))) == (2, 2)
     assert read_scd2_state(spark, state).count() == orders.count()
     assert (spark.read.parquet(f"{state}/open").count()
             == orders.select("o_custkey").distinct().count())
@@ -3548,6 +3604,87 @@ def test_stage_snapshot_small_batch_plan(spark, tmp_path):
     )
     hit = {r[0] for r in groups.filter(touched()).collect()}
     assert hit == {"a", "b", "c", "d"}
+
+
+def _v2_delete(id_):
+    return json.dumps({"action": "D", "table": "t", "identity": [
+        {"name": "id", "type": "bigint", "value": id_}]})
+
+
+# (lsn, v1 message) pairs; a NULL lsn is a NULL seq
+_PARITY_V1 = [
+    (10, _mv_chg("insert", 7, "a", 70)),       # insert -> update ->
+    (11, _mv_chg("update", 7, "b", 71)),       # delete: gone
+    (12, _mv_chg("delete", 7)),
+    (20, _mv_chg("update", 2, "b", 21)),       # update -> delete (v2,
+    (22, _mv_chg("insert", 2, "d", 22)),       # below) -> insert
+    (25, _mv_chg("update", 3, "a", 33)),       # tied (seq, chg_idx) on
+    (25, _mv_chg("update", 3, "a", 33)),       # one key, and across keys
+    (25, _mv_chg("insert", 10, "e", 100)),
+    (None, _mv_chg("update", 4, "c", 999)),    # a NULL seq orders first
+    (5, _mv_chg("update", 4, "d", 44)),
+    (None, _mv_chg("insert", 9, None, 90)),    # NULL seq, NULL group
+    (26, _mv_chg("insert", None, "a", 1)),     # NULL key: dropped
+    (31, _mv_chg("delete", 5)),                # v1 oldkeys delete
+    (40, _mv_chg("update", 6, "c", "x1")),     # malformed, superseded
+    (41, _mv_chg("update", 6, "c", 66)),
+    (50, {"change": [_mv_chg("update", 8, "b", 1)["change"][0],
+                     _mv_chg("update", 8, "a", 2)["change"][0]]}),
+]
+_PARITY_V2 = [(21, _v2_delete(2)), (30, _v2_delete(1))]
+
+
+def test_stage_snapshot_paths_agree(spark, tmp_path, monkeypatch):
+    """The driver-side pick of each key's latest change (small path)
+    and the latest_changes aggregate (large path, the bound at 0) give
+    the same snapshot, one row per key, and the same view, on one
+    batch of insert -> update -> delete chains, tied positions, NULL
+    seqs, a NULL key, v1 and v2 deletes, and a malformed cell on a
+    change a later one supersedes: only a winning change is cast."""
+    from speculare_pgcdc_spark.cdc import apply
+
+    with pytest.raises(Exception, match="CAST_INVALID_INPUT"):
+        spark.sql("SELECT CAST('x1' AS BIGINT)").collect()
+    joins = []
+    real = apply.apply_latest
+    monkeypatch.setattr(apply, "apply_latest",
+                        lambda *a: joins.append(1) or real(*a))
+    feed = "lsn bigint, payload string"
+    changes = parse_wal2json(
+        spark.createDataFrame(
+            [(lsn, json.dumps(m)) for lsn, m in _PARITY_V1], feed
+        ), seq_col="lsn",
+    ).unionByName(parse_wal2json(
+        spark.createDataFrame(_PARITY_V2, feed), seq_col="lsn", fmt="v2"
+    )).withColumn("table_name", F.col("table"))
+    spark.createDataFrame(
+        [(1, "a", 10), (2, "a", 20), (3, "b", 30), (4, "c", 40),
+         (5, "c", 50), (6, None, 60), (8, "b", 80), (11, "z", 5)],
+        "id bigint, grp string, v bigint",
+    ).write.parquet(str(tmp_path / "snap"))
+    base = spark.read.parquet(str(tmp_path / "snap"))
+    mv = base.groupBy("grp").agg(*_mv_aggs()).localCheckpoint()
+    got = {}
+    for path in ("small", "large"):
+        if path == "large":
+            _large_path(monkeypatch)
+        snapshot, touched = apply.stage_snapshot(
+            base, changes, "id", _MV_COLS, group_col="grp"
+        )
+        snapshot.write.parquet(str(tmp_path / path))
+        out = spark.read.parquet(str(tmp_path / path))
+        rows = [tuple(r) for r in out.collect()]
+        assert len(rows) == len({r[0] for r in rows})
+        view = apply.refresh_aggregates(mv, out, touched(), "grp",
+                                        _mv_aggs())
+        got[path] = (frozenset(rows), _rows(view))
+        assert len(joins) == (path == "large")
+    assert got["small"] == got["large"] == (
+        {(2, "d", 22), (3, "a", 33), (4, "d", 44), (6, "c", 66),
+         (8, "a", 2), (9, None, 90), (10, "e", 100), (11, "z", 5)},
+        {("a", 2, 35), ("c", 1, 66), ("d", 2, 66), ("e", 1, 100),
+         (None, 1, 90), ("z", 1, 5)},
+    )
 
 
 def test_matview_file_counts_stay_bounded(spark, tmp_path):
