@@ -1,22 +1,25 @@
-"""Banded-IVM scale demonstration (round 13, r12 verdict item 3).
+"""Snapshot-consumer scale probe: hold the batch fixed, grow the
+snapshot, and compare the two layouts ``start_matview_query`` reads.
 
-STREAM_BENCH measures both matview consumers at snapshot == feed
-scale (sf0.1: 100k rows, 100k changes), where band confinement's
-write savings cancel against its per-band overheads — the two modes
-tie (~9.3 s / 4 microbatches). The claim that matters at 100 TB is
-different: the LEGACY consumer's per-batch cost grows with SNAPSHOT
-size (two snapshot-scale writes per batch) while the banded
-consumer's write cost grows only with the TOUCHED-BAND count. This
-probe holds the batch fixed and grows the snapshot 10x:
+STREAM_BENCH measures the consumer at snapshot == feed scale (sf0.1:
+100k rows, 100k changes), where band confinement's write savings
+cancel against its per-band overheads. The claim that matters at
+100 TB is different: on the PLAIN layout the per-batch cost grows
+with SNAPSHOT size (a snapshot-scale rewrite per batch), while on the
+BANDED layout (write_banded_snapshot) the write grows only with the
+TOUCHED-BAND count. This probe holds the batch fixed and grows the
+snapshot 10x:
 
   snapshot = /tmp/scale10 events (10x rows, key range 10x wider)
-  feed     = sf0.1-derived changes (keys cover only the low ~10% of
-             the key range -> ~10% of bands touched, the WAL-locality
-             shape a txn-ordered feed has natively)
+  feed     = sf0.1-derived changes, txn-contiguous (keys cover only
+             the low ~10% of the key range -> ~10% of bands touched,
+             the WAL-locality shape a txn-ordered feed has natively)
 
-Both consumers drain the same 4-microbatch feed; integrity = final
-view == full recompute of the final snapshot. Expected: legacy wall
-grows ~with the snapshot; banded stays near its sf0.1 number.
+Both layouts drain the same 4-microbatch feed, their runs interleaved
+(plain, banded, plain, ...) so box drift hits both alike; integrity =
+final view == full recompute of the final snapshot. Each row records
+the touched-band count of every batch (banded) and how many batches
+took the join path (a change set over LOOKUP_INLINE_MAX_ROWS).
 
 Usage: python scripts/ivm_scale_probe.py [snap_src] [feed_sf]
        [--json out.json]
@@ -24,6 +27,7 @@ Usage: python scripts/ivm_scale_probe.py [snap_src] [feed_sf]
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import shutil
@@ -36,13 +40,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 from speculare_pgcdc_spark.catalog import table as cat_table  # noqa: E402
-from speculare_pgcdc_spark.cdc.apply import (  # noqa: E402
-    read_banded_snapshot,
-    seed_band_partials,
-    start_matview_query,
-    start_matview_query_banded,
-    write_banded_snapshot,
-)
+from speculare_pgcdc_spark.cdc import apply  # noqa: E402
 from speculare_pgcdc_spark.cdc.feedgen import (  # noqa: E402
     FEED_TABLES,
     lookup_df,
@@ -63,6 +61,7 @@ N_FILES = 8
 FPT = 2  # 4 microbatches
 N_RUNS = 3
 N_BANDS = 32
+MODES = ("plain", "banded")
 
 
 def ivm_aggs():
@@ -72,20 +71,14 @@ def ivm_aggs():
     ]
 
 
-def ivm_merges():
-    return [
-        F.sum("n").cast("bigint").alias("n"),
-        F.sum("sv").cast("decimal(38,6)").alias("sv"),
-    ]
-
-
 def main() -> None:
-    args = [a for a in sys.argv[1:] if not a.startswith("--")]
+    ap = argparse.ArgumentParser()
+    ap.add_argument("paths", nargs="*", help="[snap_src] [feed_sf]")
+    ap.add_argument("--json", dest="out_path")
+    opts = ap.parse_args()
+    args = opts.paths
     snap_src = args[0] if args else "/tmp/scale10"
     feed_sf = args[1] if len(args) > 1 else "/root/testdata/sf0.1"
-    out_path = None
-    if "--json" in sys.argv:
-        out_path = sys.argv[sys.argv.index("--json") + 1]
 
     spark = get_spark(app_name="ivm-scale-probe")
     spark.sparkContext.setLogLevel("ERROR")
@@ -98,12 +91,85 @@ def main() -> None:
         *[F.col(c).cast(t).alias(c) for c, t in IVM_COLS.items()]
     )
     n_snap = base.count()
-    report: dict = {
+
+    # per batch: the touched-band count stage_snapshot returns, and
+    # whether the change set took the join path (apply_latest)
+    batches: list[dict] = []
+    real_stage, real_join = apply.stage_snapshot, apply.apply_latest
+
+    def stage_spy(*a, **k):
+        batches.append({"bands": None, "join": False})
+        out = real_stage(*a, **k)
+        batches[-1]["bands"] = None if out[2] is None else len(out[2])
+        return out
+
+    def join_spy(*a, **k):
+        batches[-1]["join"] = True
+        return real_join(*a, **k)
+
+    apply.stage_snapshot, apply.apply_latest = stage_spy, join_spy
+
+    rows = {m: {"wall_sec": [], "view_integrity": True} for m in MODES}
+    for run in range(N_RUNS):
+        for mode in MODES:
+            snap, mv, ckpt = (os.path.join(work, f"{d}_{mode}_{run}")
+                              for d in ("snap", "mv", "ckpt"))
+            if mode == "banded":
+                apply.write_banded_snapshot(base, snap, "event_id",
+                                            n_bands=N_BANDS)
+            else:
+                base.write.parquet(snap)
+            base.groupBy("event_type").agg(*ivm_aggs()).write.parquet(mv)
+            stream = normalize_hypertables(
+                parse_wal2json(file_change_feed(
+                    spark, feed_dir, max_files_per_trigger=FPT
+                ), delete_keys=True),
+                lookup_df(spark),
+            )
+            batches.clear()
+            t0 = time.perf_counter()
+            q = apply.start_matview_query(
+                stream, snap, mv, ckpt, "event_id", IVM_COLS,
+                "event_type", ivm_aggs, tables=FEED_TABLES,
+                available_now=True,
+            )
+            try:
+                q.awaitTermination(1200)
+            finally:
+                q.stop()
+            row = rows[mode]
+            row["wall_sec"].append(round(time.perf_counter() - t0, 2))
+            row["touched_bands_per_batch"] = [b["bands"] for b in batches]
+            row["join_path_batches"] = sum(b["join"] for b in batches)
+            final = apply.read_banded_snapshot(spark, snap)
+            got = {r["event_type"]: (r["n"], str(r["sv"])) for r in
+                   spark.read.parquet(mv).collect()}
+            full = {r["event_type"]: (r["n"], str(r["sv"])) for r in
+                    final.groupBy("event_type").agg(*ivm_aggs())
+                    .collect()}
+            row["view_integrity"] &= got == full
+            if mode == "banded":
+                row["final_band_dirs"] = len(apply.band_dirs(snap))
+            for d in (snap, mv, ckpt):
+                shutil.rmtree(d, ignore_errors=True)
+            print(f"run {run} {mode}: {row['wall_sec'][-1]:.2f}s, "
+                  f"touched bands {row['touched_bands_per_batch']}",
+                  flush=True)
+
+    for mode, row in rows.items():
+        walls = row["wall_sec"]
+        row["best_sec"] = min(walls)
+        row["median_sec"] = sorted(walls)[len(walls) // 2]
+        print(f"{mode}: best {row['best_sec']:.2f}s / med "
+              f"{row['median_sec']:.2f}s over {n_snap}-row snapshot, "
+              f"integrity={'ok' if row['view_integrity'] else 'FAIL'}",
+              flush=True)
+    report = {
         "_meta": {
             "purpose": (
-                "hold the batch fixed, grow the snapshot: legacy "
-                "per-batch cost tracks snapshot size (full rewrite), "
-                "banded tracks touched bands only"
+                "hold the batch fixed, grow the snapshot: the plain "
+                "layout's per-batch cost tracks snapshot size (full "
+                "rewrite), the banded layout's tracks touched bands"
             ),
             "snapshot_src": snap_src,
             "snapshot_rows": n_snap,
@@ -112,103 +178,17 @@ def main() -> None:
             "files_per_trigger": FPT,
             "n_bands": N_BANDS,
         },
-        "modes": {},
+        "modes": rows,
+        "plain_over_banded": round(
+            rows["plain"]["median_sec"] / rows["banded"]["median_sec"], 2
+        ),
     }
-
-    for mode in ("legacy", "banded", "banded_partials"):
-        walls: list[float] = []
-        integrity_ok = True
-        bands_touched = None
-        for run in range(N_RUNS):
-            snap = os.path.join(work, f"snap_{mode}_{run}")
-            mv = os.path.join(work, f"mv_{mode}_{run}")
-            parts = os.path.join(work, f"parts_{mode}_{run}")
-            ckpt = os.path.join(work, f"ckpt_{mode}_{run}")
-            kwargs = {}
-            if mode.startswith("banded"):
-                write_banded_snapshot(base, snap, "event_id",
-                                      n_bands=N_BANDS)
-                start = start_matview_query_banded
-                if mode == "banded_partials":
-                    seed_band_partials(
-                        spark, snap, "event_type", ivm_aggs, parts
-                    )
-                    kwargs = {"merge_cols_fn": ivm_merges,
-                              "partials_dir": parts}
-            else:
-                base.write.parquet(snap)
-                start = start_matview_query
-            base.groupBy("event_type").agg(*ivm_aggs()).write.parquet(mv)
-            stream = normalize_hypertables(
-                parse_wal2json(file_change_feed(
-                    spark, feed_dir, max_files_per_trigger=FPT
-                ), delete_keys=True),
-                lookup_df(spark),
-            )
-            t0 = time.perf_counter()
-            q = start(
-                stream, snap, mv, ckpt, "event_id", IVM_COLS,
-                "event_type", ivm_aggs, tables=FEED_TABLES,
-                available_now=True, **kwargs,
-            )
-            try:
-                q.awaitTermination(1200)
-            finally:
-                q.stop()
-            walls.append(time.perf_counter() - t0)
-            final = (read_banded_snapshot(spark, snap)
-                     if mode.startswith("banded")
-                     else spark.read.parquet(snap))
-            got = {r["event_type"]: (r["n"], str(r["sv"])) for r in
-                   spark.read.parquet(mv).collect()}
-            full = {r["event_type"]: (r["n"], str(r["sv"])) for r in
-                    final.groupBy("event_type").agg(*ivm_aggs())
-                    .collect()}
-            if got != full:
-                integrity_ok = False
-            if mode.startswith("banded") and bands_touched is None:
-                bands_touched = sorted(
-                    int(e.split("=")[1])
-                    for e in os.listdir(snap)
-                    if e.startswith("band=")
-                )
-            for d in (snap, mv, parts, ckpt):
-                shutil.rmtree(d, ignore_errors=True)
-        best = min(walls)
-        med = sorted(walls)[len(walls) // 2]
-        row = {
-            "wall_sec": [round(w, 2) for w in walls],
-            "best_sec": round(best, 2),
-            "median_sec": round(med, 2),
-            "view_integrity": integrity_ok,
-        }
-        if bands_touched is not None:
-            row["final_band_dirs"] = len(bands_touched)
-        report["modes"][mode] = row
-        print(
-            f"{mode}: best {best:.2f}s / med {med:.2f}s over "
-            f"{n_snap}-row snapshot, integrity="
-            f"{'ok' if integrity_ok else 'FAIL'}",
-            flush=True,
-        )
-
-    lb = report["modes"]["legacy"]["best_sec"]
-    bb = report["modes"]["banded"]["best_sec"]
-    pb = report["modes"]["banded_partials"]["best_sec"]
-    report["legacy_over_banded"] = round(lb / bb, 2) if bb else None
-    report["legacy_over_banded_partials"] = (
-        round(lb / pb, 2) if pb else None
-    )
-    print(f"legacy/banded = {report['legacy_over_banded']}  "
-          f"legacy/banded_partials = "
-          f"{report['legacy_over_banded_partials']}", flush=True)
-
     shutil.rmtree(work, ignore_errors=True)
-    if out_path:
-        with open(out_path, "w") as f:
+    if opts.out_path:
+        with open(opts.out_path, "w") as f:
             json.dump(report, f, indent=1)
-        print(f"wrote {out_path}")
-    if not all(m["view_integrity"] for m in report["modes"].values()):
+        print(f"wrote {opts.out_path}")
+    if not all(m["view_integrity"] for m in rows.values()):
         raise SystemExit("VIEW INTEGRITY FAILURE")
 
 

@@ -14,13 +14,19 @@ fresh checkpoint/outbox each, through Engine.watch as users run it
 fanout_partitions per microbatch by routed row count), reporting wall
 seconds, changes/s (pipeline grain, the BASELINE comparator), routed
 rows/s, how many microbatches took each path, and a delivery-integrity
-check (outbox line total == routed row count).
+check (outbox line total == routed row count). The snapshot consumer
+(start_matview_query) runs over a plain and over a key-banded snapshot,
+and the SCD2 consumer over an orders history.
 
 Usage: python scripts/stream_e2e_bench.py [sf_dir] [--json out.json]
+       [--only auto,ivm_matview,ivm_matview_banded,scd2_dimension]
+
+``--only`` runs just the named row kinds (default: all of them).
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import shutil
@@ -78,16 +84,22 @@ DISPATCH_TRIGGER_CONFIGS = [
     (8, "1_microbatch"),
 ]
 N_RUNS = 3
+#: the row kinds ``--only`` selects from (a row is ``<config>/<kind>``)
+ROW_KINDS = ["auto", "ivm_matview", "ivm_matview_banded", "scd2_dimension"]
 
 
 def main() -> None:
-    args = [a for a in sys.argv[1:] if not a.startswith("--")]
-    sf_dir = args[0] if args else os.environ.get(
+    ap = argparse.ArgumentParser()
+    ap.add_argument("sf_dir", nargs="?", default=os.environ.get(
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"
-    )
-    out_path = None
-    if "--json" in sys.argv:
-        out_path = sys.argv[sys.argv.index("--json") + 1]
+    ))
+    ap.add_argument("--json", dest="out_path")
+    ap.add_argument("--only", default=",".join(ROW_KINDS))
+    args = ap.parse_args()
+    sf_dir, out_path = args.sf_dir, args.out_path
+    only = set(args.only.split(","))
+    if only - set(ROW_KINDS):
+        ap.error(f"--only takes {ROW_KINDS}")
 
     spark = get_spark(app_name="stream-e2e-bench")
     spark.sparkContext.setLogLevel("ERROR")
@@ -142,7 +154,7 @@ def main() -> None:
         paths, "partitions", fanout.fanout_partitions
     )
 
-    for fpt, label in DISPATCH_TRIGGER_CONFIGS:
+    for fpt, label in (DISPATCH_TRIGGER_CONFIGS if "auto" in only else []):
         walls: list[float] = []
         integrity_ok = True
         for k in paths:
@@ -228,7 +240,7 @@ def main() -> None:
 
     n_join = {"join": 0}
     _apply.apply_latest = counted(n_join, "join", _apply.apply_latest)
-    for fpt, label in TRIGGER_CONFIGS:
+    for fpt, label in (TRIGGER_CONFIGS if "ivm_matview" in only else []):
         walls = []
         integrity_ok = True
         n_join["join"] = n_batches = 0
@@ -291,54 +303,36 @@ def main() -> None:
             flush=True,
         )
 
-    # ---- Banded IVM mode (round-13, r12 verdict item 3): the
-    # partition-confined matview consumer. The snapshot lives in the
-    # key-banded layout (write_banded_snapshot) and each batch
-    # rewrites ONLY the bands containing changed keys. Locality
-    # source: a txn-CONTIGUOUS feed (write_feed contiguous=True) —
-    # the WAL-faithful ordering, since a real replication feed
-    # arrives in commit order with sequence-adjacent keys. The legacy
-    # ivm_matview rows above keep the round-robin feed for
-    # cross-round comparability; feed order cannot help the legacy
-    # consumer anyway (it rewrites the full snapshot regardless), so
-    # banded-vs-legacy isolates the banding win.
+    # ---- Banded IVM mode (round-13, r12 verdict item 3): the same
+    # consumer over the key-banded layout (write_banded_snapshot), which
+    # start_matview_query detects by its marker and rewrites ONLY the
+    # bands containing changed keys. Locality source: a txn-CONTIGUOUS
+    # feed (write_feed contiguous=True) — the WAL-faithful ordering,
+    # since a real replication feed arrives in commit order with
+    # sequence-adjacent keys. The plain ivm_matview rows above keep the
+    # round-robin feed for cross-round comparability; feed order cannot
+    # help the plain layout anyway (it rewrites the full snapshot
+    # regardless), so banded-vs-plain isolates the banding win.
     from speculare_pgcdc_spark.cdc.apply import (
         read_banded_snapshot,
-        seed_band_partials,
-        start_matview_query_banded,
         write_banded_snapshot,
     )
 
-    def ivm_merges():
-        return [
-            F.sum("n").cast("bigint").alias("n"),
-            F.sum("sv").cast("decimal(38,6)").alias("sv"),
-        ]
-
     feed_dir_contig = os.path.join(work, "feed_contig")
-    write_feed(spark, sf_dir, feed_dir_contig, num_files=N_FILES,
-               contiguous=True)
-    for (fpt, label), partials in [
-        (cfg, p) for cfg in TRIGGER_CONFIGS for p in (False, True)
-    ]:
-        suffix = "ivm_matview_banded_partials" if partials \
-            else "ivm_matview_banded"
+    if "ivm_matview_banded" in only:
+        write_feed(spark, sf_dir, feed_dir_contig, num_files=N_FILES,
+                   contiguous=True)
+    banded_configs = TRIGGER_CONFIGS if "ivm_matview_banded" in only else []
+    for fpt, label in banded_configs:
         walls = []
         integrity_ok = True
+        n_join["join"] = n_batches = 0
         for run in range(N_RUNS):
             snap = os.path.join(work, f"ivmb_snap_{label}_{run}")
             mv = os.path.join(work, f"ivmb_mv_{label}_{run}")
-            parts = os.path.join(work, f"ivmb_parts_{label}_{run}")
             ckpt = os.path.join(work, f"ivmb_ckpt_{label}_{run}")
             write_banded_snapshot(base, snap, "event_id", n_bands=32)
             base.groupBy("event_type").agg(*ivm_aggs()).write.parquet(mv)
-            kwargs = {}
-            if partials:
-                seed_band_partials(
-                    spark, snap, "event_type", ivm_aggs, parts
-                )
-                kwargs = {"merge_cols_fn": ivm_merges,
-                          "partials_dir": parts}
             stream = _norm(
                 _parse(file_change_feed(
                     spark, feed_dir_contig, max_files_per_trigger=fpt
@@ -346,16 +340,19 @@ def main() -> None:
                 lookup_df(spark),
             )
             t0 = time.perf_counter()
-            q = start_matview_query_banded(
+            q = start_matview_query(
                 stream, snap, mv, ckpt, "event_id", ivm_cols,
                 "event_type", ivm_aggs, tables=FEED_TABLES,
-                available_now=True, **kwargs,
+                available_now=True,
             )
             try:
                 q.awaitTermination(600)
             finally:
                 q.stop()
             walls.append(time.perf_counter() - t0)
+            n_batches += sum(
+                1 for p in q.recentProgress if p["numInputRows"]
+            )
             final_snap = read_banded_snapshot(spark, snap)
             got = {r["event_type"]: (r["n"], str(r["sv"])) for r in
                    spark.read.parquet(mv).collect()}
@@ -364,26 +361,45 @@ def main() -> None:
                     .agg(*ivm_aggs()).collect()}
             if got != full:
                 integrity_ok = False
-            for d in (snap, mv, parts, ckpt):
+            for d in (snap, mv, ckpt):
                 shutil.rmtree(d, ignore_errors=True)
         best = min(walls)
         med = sorted(walls)[len(walls) // 2]
-        report["modes"][f"{label}/{suffix}"] = {
+        report["modes"][f"{label}/ivm_matview_banded"] = {
             "wall_sec": [round(w, 2) for w in walls],
             "best_sec": round(best, 2),
             "median_sec": round(med, 2),
             "changes_per_s": round(n_changes / best),
             "changes_per_s_median": round(n_changes / med),
+            "batches_by_path": {"literal": n_batches - n_join["join"],
+                                **n_join},
             "view_integrity": integrity_ok,
             "feed": "txn-contiguous (WAL order)",
         }
         print(
-            f"{label}/{suffix}: best {best:.2f}s / med "
+            f"{label}/ivm_matview_banded: best {best:.2f}s / med "
             f"{med:.2f}s -> {round(n_changes / best)} changes/s, "
+            f"join-path batches {n_join['join']}/{n_batches}, "
             f"integrity={'ok' if integrity_ok else 'FAIL'}",
             flush=True,
         )
 
+    if "scd2_dimension" in only:
+        scd2_rows(spark, sf_dir, work, report)
+
+    shutil.rmtree(work, ignore_errors=True)
+    if out_path:
+        with open(out_path, "w") as f:
+            json.dump(report, f, indent=1)
+        print(f"wrote {out_path}")
+    if not all(
+        m.get("delivery_integrity", m.get("view_integrity"))
+        for m in report["modes"].values()
+    ):
+        raise SystemExit("DELIVERY INTEGRITY FAILURE")
+
+
+def scd2_rows(spark, sf_dir: str, work: str, report: dict) -> None:
     # ---- SCD2 mode (round-12): the versioned-dimension consumer —
     # orders-shaped history drained chunk-by-chunk through
     # start_scd2_query (open table swapped and one log entry appended
@@ -392,6 +408,9 @@ def main() -> None:
     # (q281 assigns one version per order) and open versions ==
     # distinct keys; exact one-shot parity is pinned in
     # tests/test_streaming.py.
+    from pyspark.sql import functions as F
+
+    from speculare_pgcdc_spark.catalog import table as cat_table
     from speculare_pgcdc_spark.cdc.scd2 import (
         read_scd2_state,
         start_scd2_query,
@@ -463,17 +482,6 @@ def main() -> None:
         f"rows/s, integrity={'ok' if integrity_ok else 'FAIL'}",
         flush=True,
     )
-
-    shutil.rmtree(work, ignore_errors=True)
-    if out_path:
-        with open(out_path, "w") as f:
-            json.dump(report, f, indent=1)
-        print(f"wrote {out_path}")
-    if not all(
-        m.get("delivery_integrity", m.get("view_integrity"))
-        for m in report["modes"].values()
-    ):
-        raise SystemExit("DELIVERY INTEGRITY FAILURE")
 
 
 if __name__ == "__main__":

@@ -19,16 +19,19 @@ as literals (an InSet of keys and a LocalRelation of upserts: no join,
 no exchange); a larger batch is aggregated in Spark and merged by one
 equi-join on the key. With the base bucketed by key
 (sources.write_bucketed) the join side is co-located and the whole
-apply is a single shuffle of the (small) change batch. The snapshot
-OVERWRITE in :func:`start_apply_query` is the local-parquet stand-in
-for a real table format's row-level MERGE (Delta/Iceberg) — the apply
-PLAN is the part that carries over.
+apply is a single shuffle of the (small) change batch. One consumer,
+:func:`start_matview_query`, maintains the snapshot (plain, or banded
+by key range when the snapshot dir holds the banded layout) and,
+optionally, an aggregate view. Its snapshot OVERWRITE is the
+local-parquet stand-in for a real table format's row-level MERGE
+(Delta/Iceberg) — the apply PLAN is the part that carries over.
 """
 
 from __future__ import annotations
 
 import datetime
 import decimal
+import math
 import os
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
@@ -39,7 +42,6 @@ from speculare_pgcdc_spark.cdc import pipeline
 from speculare_pgcdc_spark.cdc.commit import (
     BAND_COL,
     Dirs,
-    band_dir,
     start_consumer,
 )
 
@@ -403,20 +405,32 @@ def _latest_rows(rows, key_col: str):
 
 
 def stage_snapshot(
-    base: DataFrame,
+    base,
     changes: DataFrame,
     key_col: str,
     columns: dict[str, str],
     tables: list[str] | None = None,
     group_col: str | None = None,
+    band_width: int | None = None,
 ):
     """Plan the new snapshot of one change batch by the size of its
-    change set. Returns ``(snapshot, touched)``: write ``snapshot``
-    (key_col + ``columns``, in that order, typed); AFTER the write,
-    ``touched()`` gives the ``group_col`` groups the batch touched, in
-    the form :func:`refresh_aggregates` takes, or None when it touched
-    none (``touched`` is None without ``group_col``). Both are None
-    when the batch changes no key: there is nothing to stage.
+    change set. Returns ``(snapshot, touched, bands)``: write
+    ``snapshot`` (key_col + ``columns``, in that order, typed); AFTER
+    the write, ``touched()`` gives the ``group_col`` groups the batch
+    touched, in the form :func:`refresh_aggregates` takes, or None
+    when it touched none (``touched`` is None without ``group_col``).
+    All three are None when the batch changes no key: there is nothing
+    to stage.
+
+    ``base`` is the snapshot frame. On the banded layout
+    (:func:`write_banded_snapshot`), ``band_width`` is the layout's
+    width and ``base`` a function from a sorted list of band ids to
+    the rows of those bands: only the bands that hold a changed key
+    are read and restaged. ``snapshot`` then carries the ``band``
+    column, to be written with ``partitionBy(band)``, one file per
+    band, and ``bands`` lists the bands it replaces; a listed band
+    with no rows in ``snapshot`` had every row deleted. ``bands`` is
+    None on the plain layout.
 
     One bounded Arrow collect of at most ``LOOKUP_INLINE_MAX_ROWS + 1``
     change rows (the
@@ -428,27 +442,28 @@ def stage_snapshot(
 
     * **Small** (at most the bound, counted in change rows, not keys):
       the driver picks each key's latest change (:func:`_latest_rows`,
-      the order of :func:`latest_changes`). The changed keys enter the
-      plan as an ``InSet`` literal (:func:`in_set`) and the upserts as
-      a LocalRelation, cast to ``columns`` in the plan, so a malformed
-      cell fails the batch only on a change that wins. The snapshot is
-      ``base`` minus the changed keys plus the upserts: no join and no
-      exchange. One ``observe()`` on the written plan collects the OLD
-      groups of the changed keys and the NEW groups of the upserts, so
-      the touched groups cost no join and no job either.
+      the order of :func:`latest_changes`), and the touched bands are
+      :func:`band_of` of the picked keys, computed on the driver. The
+      changed keys enter the plan as an ``InSet`` literal
+      (:func:`in_set`) and the upserts as a LocalRelation, cast to
+      ``columns`` in the plan, so a malformed cell fails the batch only
+      on a change that wins. The snapshot is ``base`` minus the changed
+      keys plus the upserts: no join and no exchange. One ``observe()``
+      on the written plan collects the OLD groups of the changed keys
+      and the NEW groups of the upserts, so the touched groups cost no
+      join and no job either.
     * **Large**: the batch is aggregated by :func:`latest_changes`,
       checkpointed, and merged by the :func:`apply_latest` anti-join;
-      :func:`touched_groups_latest` gives the groups.
+      :func:`touched_bands` (one job) gives the bands and
+      :func:`touched_groups_latest` the groups.
 
-    The union is coalesced to the number of ``base``'s files, so the
-    snapshot keeps its file count: the upserts' partitions would
-    otherwise add files to it every batch."""
-    import pyarrow.compute as pc
-
-    spark = base.sparkSession
+    A plain snapshot is coalesced to the number of ``base``'s files, so
+    it keeps its file count: the upserts' partitions would otherwise
+    add files to it every batch. A banded one is one partition on the
+    small path and one hash partition per touched band on the large
+    path, so each band is written as one file either way."""
     key_t = columns.get(key_col, "string")
     ordered = _ordered(key_col, columns)
-    n_out = _n_files(base)
     rows = (
         _keyed(
             changes, key_col, key_t, tables,
@@ -459,25 +474,54 @@ def stage_snapshot(
         .limit(pipeline.LOOKUP_INLINE_MAX_ROWS + 1)
         .toArrow()
     )
-    changed = None
+    changed = lat = None
     if rows.num_rows <= pipeline.LOOKUP_INLINE_MAX_ROWS:
         latest = _latest_rows(rows, key_col)
-        if latest.num_rows == 0:
-            return None, None
-        changed = in_set(
-            f"CAST({_q(key_col)} AS {key_t})",
-            latest.column(key_col).to_pylist(),
-        )
+        keys = latest.column(key_col).to_pylist()
+        if not keys:
+            return None, None, None
+        changed = in_set(f"CAST({_q(key_col)} AS {key_t})", keys)
     if changed is None:  # too many change rows, or a key with no literal
         lat = latest_changes(changes, key_col, key_t, tables).localCheckpoint(
             eager=False
         )
+    bands = None
+    if band_width is not None:
+        bands = (
+            touched_bands(lat, band_of(key_col, band_width))
+            if lat is not None
+            else sorted({math.floor(float(k) / band_width) for k in keys})
+        )
+        if not bands:
+            return None, None, None
+        base = base(bands)
+    if lat is not None:
         snapshot = apply_latest(base, lat, key_col, columns)
         touched = None if group_col is None else (
             lambda: touched_groups_latest(base, lat, key_col, group_col)
         )
-        return snapshot.coalesce(n_out), touched
-    upserts = spark.createDataFrame(
+    else:
+        snapshot, touched = _apply_literal(
+            base, latest, changed, key_col, columns, group_col
+        )
+    if bands is None:
+        return snapshot.coalesce(_n_files(base)), touched, None
+    snapshot = snapshot.withColumn(BAND_COL, band_of(key_col, band_width))
+    return (
+        snapshot.coalesce(1) if lat is None
+        else snapshot.repartition(len(bands), BAND_COL)
+    ), touched, bands
+
+
+def _apply_literal(base, latest, changed, key_col, columns, group_col):
+    """:func:`stage_snapshot`'s small path: ``base`` minus the keys of
+    the ``changed`` predicate plus the upserts of the driver-picked
+    ``latest`` rows, and the observed touched groups."""
+    import pyarrow.compute as pc
+
+    ordered = _ordered(key_col, columns)
+    key_t = columns.get(key_col, "string")
+    upserts = base.sparkSession.createDataFrame(
         latest.filter(pc.invert(latest.column("_del"))).select(ordered),
         ", ".join(
             f"{_q(c)} {key_t if c == key_col else 'string'}" for c in ordered
@@ -490,17 +534,15 @@ def stage_snapshot(
     ).unionByName(
         upserts.selectExpr(*_typed_sql(key_col, columns), "2 AS _row")
     )
-    if group_col is not None:
-        obs = Observation()
-        g = _q(group_col)
-        cur = cur.observe(
-            obs,
-            F.expr(f"collect_set(CASE WHEN _row > 0 THEN {g} END) AS groups"),
-            F.expr(f"max(_row > 0 AND {g} IS NULL) AS has_null"),
-        )
-    snapshot = cur.where("_row != 1").drop("_row").coalesce(n_out)
     if group_col is None:
-        return snapshot, None
+        return cur.where("_row != 1").drop("_row"), None
+    obs = Observation()
+    g = _q(group_col)
+    cur = cur.observe(
+        obs,
+        F.expr(f"collect_set(CASE WHEN _row > 0 THEN {g} END) AS groups"),
+        F.expr(f"max(_row > 0 AND {g} IS NULL) AS has_null"),
+    )
 
     def touched() -> Column | None:
         got = obs.get
@@ -508,54 +550,13 @@ def stage_snapshot(
             return None
         return in_groups(group_col, got["groups"], bool(got["has_null"]))
 
-    return snapshot, touched
+    return cur.where("_row != 1").drop("_row"), touched
 
 
 def _n_files(df: DataFrame) -> int:
     """The files a dir frame reads (at least 1): a stage coalesced to
     its dir's count keeps the dir from gaining files every batch."""
     return max(1, len(df.inputFiles()))
-
-
-def start_apply_query(
-    changes_stream: DataFrame,
-    snapshot_dir: str,
-    checkpoint_dir: str,
-    key_col: str,
-    columns: dict[str, str],
-    tables: list[str] | None = None,
-    query_name: str = "cdc-apply",
-    available_now: bool = False,
-):
-    """Maintain a parquet snapshot from the live change stream: each
-    microbatch reads the current snapshot, applies the batch
-    (:func:`stage_snapshot`), and atomically replaces it — the
-    materialized-table consumer of watch()'s dataflow. Commit and
-    replay follow :mod:`~speculare_pgcdc_spark.cdc.commit`.
-
-    A batch of at most ``LOOKUP_INLINE_MAX_ROWS`` change rows runs two
-    Spark jobs: the bounded collect and the snapshot write (no
-    shuffle, no join, no schema inference); a batch that changes no
-    key runs only the collect and stages nothing. A larger one keeps
-    the latest-per-key aggregate and the anti-join, whose key set
-    would not fit in the plan.
-
-    The full-overwrite is correct-but-local: a durable deployment
-    swaps this writer for a table format with row-level merge; the
-    upstream plan is unchanged."""
-    dirs = Dirs(changes_stream.sparkSession)
-
-    def plan(batch_df: DataFrame, batch) -> None:
-        snapshot, _ = stage_snapshot(
-            dirs.read(snapshot_dir), batch_df, key_col, columns, tables
-        )
-        if snapshot is not None:
-            dirs.stage(snapshot, snapshot_dir, batch)
-
-    return start_consumer(
-        changes_stream, plan, checkpoint_dir, query_name, available_now,
-        [snapshot_dir],
-    )
 
 
 def start_matview_query(
@@ -571,85 +572,133 @@ def start_matview_query(
     query_name: str = "cdc-matview",
     available_now: bool = False,
 ):
-    """Maintain a parquet snapshot AND an incrementally-refreshed
-    aggregate view from the live change stream — the streaming twin of
-    q97's batch IVM (only touched groups recomputed, every other view
-    row carried forward).
+    """The one snapshot consumer: maintain a parquet snapshot, and
+    optionally an incrementally refreshed aggregate view, from the live
+    change stream. The view is the streaming twin of q97's batch IVM:
+    only touched groups are recomputed, every other view row is
+    carried forward.
 
-    ``agg_cols_fn`` is a zero-arg callable returning the aliased
-    aggregate expressions (Column objects aren't reusable across
-    microbatch plans, so the view definition is re-built per batch).
+    **The view is optional.** With ``matview_dir``, ``group_col`` and
+    ``agg_cols_fn`` all None the query keeps only the snapshot
+    (``Engine.watch_snapshot``); passing some of the three but not all
+    raises ``ValueError``. ``agg_cols_fn`` is a zero-arg callable
+    returning the aliased aggregate expressions (Column objects aren't
+    reusable across microbatch plans, so the view definition is
+    re-built per batch).
+
+    **The layout on disk decides banding.** A ``snapshot_dir`` holding
+    the ``_band_width`` marker of :func:`write_banded_snapshot` is
+    banded: each batch reads and restages only the bands that hold a
+    changed key, and a band no batch touches keeps its files. Any other
+    dir is one plain parquet dir, rewritten whole. The marker is read
+    once, at query start.
 
     Per batch, :func:`stage_snapshot` writes the snapshot stage, and
-    the view stage re-aggregates the touched groups of the staged
-    snapshot (read back, never re-planned). A batch of at most
-    ``LOOKUP_INLINE_MAX_ROWS`` change rows runs three Spark jobs on a
-    one-file snapshot: the bounded collect of the change rows, the
-    snapshot write and the view write (four on a multi-file snapshot,
-    whose view aggregate shuffles). Each key's latest change is picked
-    on the driver, and the changed keys and touched groups ride the
-    plan as literals, because at these sizes a job costs more than the
-    data it moves. A batch that changes no key stages nothing, and one
-    that touches no group stages no view. A larger batch keeps the
-    aggregate and the joins: its key set would not fit in the plan.
+    the view stage re-aggregates the touched groups of the new
+    snapshot (the staged dir, or the untouched live bands plus the
+    staged ones), read back, never re-planned. A batch of at most
+    ``LOOKUP_INLINE_MAX_ROWS`` change rows over a one-file plain
+    snapshot runs three Spark jobs: the bounded collect of the change
+    rows, the snapshot write and the view write (two without a view;
+    four on a multi-file snapshot, whose view aggregate shuffles, as
+    over a banded one).
+    Each key's latest change is picked on the driver, and the changed
+    keys, touched bands and touched groups ride the plan as literals,
+    because at these sizes a job costs more than the data it moves. A
+    batch that changes no key stages nothing, and one that touches no
+    group stages no view. A larger batch keeps the aggregate and the
+    joins: its key set would not fit in the plan.
 
-    Commit and replay follow :mod:`~speculare_pgcdc_spark.cdc.commit`.
+    Commit and replay follow :mod:`~speculare_pgcdc_spark.cdc.commit`:
+    the view commits first, then the snapshot dir, or the touched bands
+    one at a time. The full overwrite of a plain snapshot is
+    correct-but-local: a durable deployment swaps this writer for a
+    table format with row-level merge; the upstream plan is unchanged.
     """
+    view = (matview_dir, group_col, agg_cols_fn)
+    if any(v is None for v in view) and any(v is not None for v in view):
+        raise ValueError(
+            "a view needs matview_dir, group_col and agg_cols_fn: pass "
+            "all three, or none for a snapshot alone"
+        )
     dirs = Dirs(changes_stream.sparkSession)
+    width = read_band_width(snapshot_dir)
+    empty = ", ".join(
+        f"{_q(c)} {columns.get(c, 'string')}"
+        for c in _ordered(key_col, columns)
+    )
 
-    def plan(batch_df: DataFrame, batch) -> None:
-        snapshot, touched = stage_snapshot(
-            dirs.read(snapshot_dir), batch_df, key_col, columns, tables,
-            group_col,
+    def plan(batch_df: DataFrame, batch) -> list[int] | None:
+        if width is None:
+            base = dirs.read(snapshot_dir)
+        else:
+            live = band_dirs(snapshot_dir)
+
+            def base(bands: list[int]) -> DataFrame:
+                return read_bands(dirs, snapshot_dir,
+                                  [live[b] for b in bands if b in live], empty)
+        snapshot, touched, bands = stage_snapshot(
+            base, batch_df, key_col, columns, tables, group_col, width
         )
         if snapshot is None:
-            return
-        # BOTH stages land before either directory swaps — the large
-        # path's touched groups read the PRE-swap snapshot
-        dirs.stage(snapshot, snapshot_dir, batch)
-        groups = touched()
+            return None
+        # BOTH stages land before either swaps — the large path's
+        # touched groups read the PRE-swap snapshot
+        stage = batch.staged(snapshot_dir)
+        dirs.stage(snapshot, snapshot_dir, batch,
+                   *([] if width is None else [BAND_COL]))
+        groups = touched and touched()
         if groups is None:
-            return
-        staged = dirs.read(snapshot_dir, batch.staged(snapshot_dir))
+            return bands
+        if width is None:
+            new = dirs.read(snapshot_dir, stage)
+        else:  # the untouched live bands plus the staged ones
+            new = read_bands(
+                dirs, snapshot_dir,
+                [d for b, d in live.items() if b not in bands]
+                + list(band_dirs(stage).values()),
+                empty,
+            )
         # read in at most one partition per file: a snapshot staged as
         # one file is then one partition, and the view's aggregate
         # needs no exchange (one job fewer)
-        staged = staged.coalesce(_n_files(staged))
+        new = new.coalesce(_n_files(new))
         mv_old = dirs.read(matview_dir)
         mv_new = refresh_aggregates(
-            mv_old, staged, groups, group_col, agg_cols_fn()
+            mv_old, new, groups, group_col, agg_cols_fn()
         )
         dirs.stage(
             mv_new.select(*mv_old.columns).coalesce(_n_files(mv_old)),
             matview_dir,
             batch,
         )
+        return bands
 
     # view first, snapshot second: a crash between the two must leave
     # the PRE-batch snapshot, so the replay can still derive the old
     # groups (cdc.commit, "Order")
+    units = [] if matview_dir is None else [matview_dir]
     return start_consumer(
         changes_stream, plan, checkpoint_dir, query_name, available_now,
-        [matview_dir, snapshot_dir],
+        [*units, snapshot_dir] if width is None else units,
+        band_root=None if width is None else snapshot_dir,
     )
 
 
 # ---------------------------------------------------------------------------
-# Banded snapshot layout (round-13, r12 verdict item 3): the
-# partition-confined alternative to the full-snapshot rewrite above.
-#
-# start_matview_query pays two snapshot-scale parquet WRITES per
-# microbatch — the one consumer whose per-batch cost grows with
-# snapshot size, not batch size (STREAM_BENCH_r12: 8.4k changes/s at 4
-# microbatches vs 15.7k dispatch). The fix: store the snapshot
-# range-partitioned into key BANDS (`band=<i>` subdirs, band =
-# floor(key / band_width)), and per batch rewrite ONLY the bands that
-# contain changed keys. WAL batches have key-range locality natively —
-# commit order means inserts carry sequence-adjacent keys, and the
-# reference's hypertable chunks (src/cdc/mod.rs:11-18) ARE time-range
-# partitions — so a txn-ordered feed touches a small, contiguous band
-# set per batch. A key-scrambled feed degrades gracefully to the full
-# rewrite (every band touched), never to wrong answers.
+# Banded snapshot layout: the partition-confined alternative to the
+# full-snapshot rewrite. A plain snapshot pays a snapshot-scale parquet
+# WRITE per microbatch, a cost that grows with the snapshot, not the
+# batch. The banded layout stores the snapshot range-partitioned into
+# key BANDS (`band=<i>` subdirs, band = floor(key / band_width)), and
+# start_matview_query rewrites ONLY the bands that contain changed keys
+# when the snapshot dir holds the layout's `_band_width` marker. WAL
+# batches have key-range locality natively — commit order means
+# inserts carry sequence-adjacent keys, and the reference's hypertable
+# chunks (src/cdc/mod.rs:11-18) ARE time-range partitions — so a
+# txn-ordered feed touches a small, contiguous band set per batch. A
+# key-scrambled feed degrades gracefully to the full rewrite (every
+# band touched), never to wrong answers.
 #
 # At warehouse scale this is exactly partition-confined MERGE: bands
 # map to table-format partitions, the per-band dir swap to a
@@ -691,8 +740,8 @@ def write_banded_snapshot(
     is persisted in a ``_band_width`` marker (underscore-prefixed ->
     invisible to parquet readers) so consumers band identically
     forever — a re-derived width would silently re-home every key;
-    ``start_*_banded`` reads the marker, the caller never re-supplies
-    the choice.
+    :func:`start_matview_query` reads the marker, the caller never
+    re-supplies the choice.
 
     Band-count selection (round-13 verdict #5 — defaults instead of a
     hand-picked count): when ``n_bands`` is omitted it derives from
@@ -739,9 +788,14 @@ def write_banded_snapshot(
     return width
 
 
-def read_band_width(root: str) -> int:
-    with open(os.path.join(root, "_band_width")) as f:
-        return int(f.read().strip())
+def read_band_width(root: str) -> int | None:
+    """The band width of banded ``root``; None when ``root`` holds no
+    ``_band_width`` marker (the plain layout)."""
+    try:
+        with open(os.path.join(root, "_band_width")) as f:
+            return int(f.read().strip())
+    except FileNotFoundError:
+        return None
 
 
 def read_banded_snapshot(spark: SparkSession, root: str) -> DataFrame:
@@ -749,284 +803,34 @@ def read_banded_snapshot(spark: SparkSession, root: str) -> DataFrame:
     return spark.read.parquet(root).drop(BAND_COL)
 
 
+def band_dirs(root: str) -> dict[int, str]:
+    """The band dirs under a banded root (or under its stage), by
+    band."""
+    pre = f"{BAND_COL}="
+    return {
+        int(e[len(pre):]): os.path.join(root, e)
+        for e in os.listdir(root)
+        if e.startswith(pre)
+    }
+
+
 def read_bands(
-    spark: SparkSession, root: str, bands: list[int]
-) -> DataFrame | None:
-    """The rows of the live dirs among ``bands`` (band column dropped),
-    or None when none of them is live. Reads ONLY those dirs:
+    dirs: Dirs, root: str, paths: list[str], schema: str
+) -> DataFrame:
+    """The rows under the band dirs ``paths`` of banded ``root`` or of
+    its stage (band column dropped); no rows, typed by the DDL
+    ``schema``, when ``paths`` is empty. Reads ONLY those dirs:
     partition discovery over the full root lists every band, the
     dominant fixed cost once bands number in the hundreds
-    (SCD2_BAND_PROBE_r13); basePath keeps the band partition column
-    semantics identical."""
-    live = [
-        p for p in (band_dir(root, b) for b in bands) if os.path.isdir(p)
-    ]
-    if not live:
-        return None
-    return (
-        spark.read.option("basePath", root).parquet(*live).drop(BAND_COL)
-    )
+    (SCD2_BAND_PROBE_r13). ``dirs`` keeps ``root``'s schema, so only
+    a query run's first read infers it."""
+    if not paths:
+        return dirs.spark.createDataFrame([], schema)
+    return dirs.read(root, *paths).drop(BAND_COL)
 
 
 def touched_bands(df: DataFrame, band) -> list[int]:
     """The distinct values of the ``band`` column expression, sorted."""
     return sorted(
         r[0] for r in df.select(band.alias("_b")).distinct().collect()
-    )
-
-
-def seed_band_partials(
-    spark: SparkSession,
-    snapshot_root: str,
-    group_col: str,
-    agg_cols_fn,
-    partials_dir: str,
-) -> None:
-    """Seed the per-(band, group) partial-aggregate state for
-    :func:`start_matview_query_banded`'s partial-maintenance mode from
-    an already-banded snapshot. The partials frame is tiny (bands x
-    groups rows), so it coalesces to one file."""
-    snap = spark.read.parquet(snapshot_root)
-    (
-        snap.groupBy(BAND_COL, group_col)
-        .agg(*agg_cols_fn())
-        .coalesce(1)
-        .write.parquet(partials_dir)
-    )
-
-
-def _validate_mergeable(
-    spark: SparkSession,
-    snapshot_dir: str,
-    group_col: str,
-    agg_cols_fn,
-    merge_cols_fn,
-    sample_rows: int = 512,
-) -> None:
-    """Refuse a NON-ALGEBRAIC (agg_cols_fn, merge_cols_fn) spec at
-    stream start (round-13 verdict #6): band-partial maintenance is
-    correct only when merging two halves' partials equals the partial
-    of the union — a median/percentile-style spec violates that and
-    would silently diverge from the view==recompute integrity check
-    batch after batch. The probe is EMPIRICAL: over a small snapshot
-    sample, ``merge(partial(half0), partial(half1))`` must equal
-    ``merge(partial(all))`` (merge over a singleton also catches a
-    merge that isn't identity on one partial). One tiny driver-side
-    job at start; an empty seed snapshot can't disprove anything and
-    skips the probe (documented)."""
-    probe = (
-        read_banded_snapshot(spark, snapshot_dir)
-        .limit(sample_rows)
-        .localCheckpoint(eager=True)
-    )
-    if not probe.take(1):
-        return
-    halves = probe.withColumn(
-        "_h", (F.monotonically_increasing_id() % 2).cast("int")
-    )
-    merged = (
-        halves.groupBy("_h", group_col)
-        .agg(*agg_cols_fn())
-        .groupBy(group_col)
-        .agg(*merge_cols_fn())
-    )
-    expected = (
-        probe.groupBy(group_col)
-        .agg(*agg_cols_fn())
-        .groupBy(group_col)
-        .agg(*merge_cols_fn())
-    )
-
-    def _rows(df):
-        # one row per group; order by the group's string form (mixed
-        # None/float tuples don't sort directly)
-        cols = [group_col] + sorted(
-            c for c in df.columns if c != group_col
-        )
-        return [
-            tuple(row[c] for c in cols)
-            for row in sorted(
-                df.collect(), key=lambda r: str(r[group_col])
-            )
-        ]
-
-    def _cell_eq(a, b) -> bool:
-        if isinstance(a, float) or isinstance(b, float):
-            if a is None or b is None:
-                return a is b
-            return abs(a - b) <= 1e-9 * max(1.0, abs(a), abs(b))
-        return a == b
-
-    got, want = _rows(merged), _rows(expected)
-    ok = len(got) == len(want) and all(
-        len(g) == len(w) and all(map(_cell_eq, g, w))
-        for g, w in zip(got, want)
-    )
-    if not ok:
-        diffs = [
-            (g, w) for g, w in zip(got, want) if g != w
-        ][:3]
-        raise ValueError(
-            "band-partial maintenance requires an ALGEBRAIC "
-            "(agg_cols_fn, merge_cols_fn) pair: merging two halves' "
-            "partials diverged from the partial of the union on a "
-            f"snapshot sample (first diffs merged-vs-direct: {diffs}). "
-            "Holistic aggregates (median, exact percentile, mode) "
-            "cannot ride partials — use the scan-refresh mode (omit "
-            "merge_cols_fn/partials_dir) for those views."
-        )
-
-
-def start_matview_query_banded(
-    changes_stream: DataFrame,
-    snapshot_dir: str,
-    matview_dir: str,
-    checkpoint_dir: str,
-    key_col: str,
-    columns: dict[str, str],
-    group_col: str,
-    agg_cols_fn,
-    tables: list[str] | None = None,
-    query_name: str = "cdc-matview-banded",
-    available_now: bool = False,
-    merge_cols_fn=None,
-    partials_dir: str | None = None,
-):
-    """Partition-confined twin of :func:`start_matview_query`: the
-    snapshot lives in the banded layout (seed with
-    :func:`write_banded_snapshot`), and each microbatch rewrites ONLY
-    the bands containing the batch's changed keys.
-
-    Two view-maintenance modes:
-
-    * **Scan refresh** (default): the view's touched groups are
-      re-aggregated from the full new snapshot. Per-batch cost is
-      O(touched bands) WRITTEN + one snapshot-scale SCAN. Works for
-      ANY aggregate shape (including non-decomposable ones — exact
-      medians, mode), because the refresh recomputes from rows.
-    * **Band-partial maintenance** (pass ``merge_cols_fn`` +
-      ``partials_dir``, seed with :func:`seed_band_partials`): the
-      consumer keeps per-(band, group) ALGEBRAIC partials; each batch
-      recomputes partials only for the touched bands (from the
-      already-materialized new band content — deletes need no
-      subtraction because the partial is rebuilt, not adjusted) and
-      re-merges the tiny partials frame into the view.
-      ``agg_cols_fn`` computes the partial exprs over rows;
-      ``merge_cols_fn`` combines partials (the classic partial/merge
-      split Spark's own partial_sum model uses — e.g. partial
-      [count->n, sum(v)->sv] merges as [sum(n)->n, sum(sv)->sv]).
-      Per-batch cost is O(touched bands) — NO snapshot-scale scan or
-      write anywhere, the shape that stays flat as the snapshot grows
-      (IVM_SCALE_PROBE_r13: the scan-refresh mode's residual growth
-      is exactly the view scan this mode removes).
-
-    Commit and replay follow :mod:`~speculare_pgcdc_spark.cdc.commit`:
-    the view commits first, then the partials, then the touched bands
-    one at a time.
-    """
-    if (merge_cols_fn is None) != (partials_dir is None):
-        raise ValueError(
-            "partial-maintenance mode needs BOTH merge_cols_fn and "
-            "partials_dir (seed the latter with seed_band_partials)"
-        )
-    spark = changes_stream.sparkSession
-    if merge_cols_fn is not None:
-        _validate_mergeable(
-            spark, snapshot_dir, group_col, agg_cols_fn, merge_cols_fn
-        )
-    ordered = _ordered(key_col, columns)
-    key_t = columns.get(key_col, "bigint")
-    width = read_band_width(snapshot_dir)
-    schema_str = ", ".join(f"{c} {columns[c]}" for c in ordered)
-
-    def _snap(path_root: str) -> DataFrame:
-        if not any(
-            e.startswith(f"{BAND_COL}=") for e in os.listdir(path_root)
-        ):  # every row deleted: no band dirs left to infer schema from
-            return spark.createDataFrame(
-                [], f"{schema_str}, {BAND_COL} int"
-            )
-        return spark.read.parquet(path_root)
-
-    def plan(batch_df: DataFrame, batch) -> list[int] | None:
-        # scan-refresh mode needs the whole snapshot (untouched bands
-        # feed the view re-aggregate); partial mode never does, and
-        # building the frame costs a full-root partition discovery
-        snap = _snap(snapshot_dir) if partials_dir is None else None
-        mv_old = spark.read.parquet(matview_dir)
-        # ONE parse of the batch (eager, batch-key-bounded); band
-        # discovery, the merge, and the group derivation all read the
-        # checkpoint instead of re-running the feed-parse lineage
-        lat = latest_changes(
-            batch_df, key_col, key_t, tables
-        ).localCheckpoint(eager=True)
-        bands = touched_bands(lat, band_of(key_col, width))
-        if not bands:
-            return None
-        if partials_dir is not None:
-            # partial mode never scans untouched bands
-            base_t = read_bands(spark, snapshot_dir, bands)
-            if base_t is None:
-                base_t = spark.createDataFrame([], schema_str)
-        else:
-            base_t = snap.filter(
-                F.col(BAND_COL).isin(bands)
-            ).drop(BAND_COL)
-        # bounded by the touched bands, not the snapshot; eager so the
-        # write and the view plan never re-read pre-swap band dirs.
-        # The checkpoint materializes POST band-clustering (one hash
-        # partition per touched band), so the partitioned write below
-        # emits one file per band with no extra stage — repeated
-        # batches would otherwise compound into a small-file explosion
-        # that taxes every later snapshot scan.
-        new_t = (
-            apply_latest(base_t, lat, key_col, columns)
-            .withColumn(BAND_COL, band_of(key_col, width))
-            .repartition(max(len(bands), 1), F.col(BAND_COL))
-            .localCheckpoint(eager=True)
-        )
-        if partials_dir is not None:
-            # band-partial maintenance: touched bands' partials are
-            # REBUILT from the new band content (no delete
-            # subtraction), untouched bands' carry forward; the view
-            # is a merge of the tiny partials frame — nothing here
-            # scans or writes at snapshot scale
-            parts_old = spark.read.parquet(partials_dir)
-            new_parts = new_t.groupBy(BAND_COL, group_col).agg(
-                *agg_cols_fn()
-            )
-            parts_new = parts_old.filter(
-                ~F.col(BAND_COL).isin(bands)
-            ).unionByName(new_parts.select(*parts_old.columns))
-            mv_new = parts_new.groupBy(group_col).agg(
-                *merge_cols_fn()
-            )
-            parts_new.coalesce(1).write.mode("overwrite").parquet(
-                batch.staged(partials_dir)
-            )
-        else:
-            untouched = snap.filter(
-                ~F.col(BAND_COL).isin(bands)
-            ).select(*ordered)
-            full_new = untouched.unionByName(new_t.select(*ordered))
-            groups = touched_groups_latest(
-                base_t, lat, key_col, group_col
-            )
-            mv_new = refresh_aggregates(
-                mv_old, full_new, groups, group_col, agg_cols_fn()
-            )
-        (
-            new_t.write.partitionBy(BAND_COL)
-            .mode("overwrite")
-            .parquet(batch.staged(snapshot_dir))
-        )
-        mv_new.select(*mv_old.columns).write.mode("overwrite").parquet(
-            batch.staged(matview_dir)
-        )
-        return bands
-
-    return start_consumer(
-        changes_stream, plan, checkpoint_dir, query_name, available_now,
-        [matview_dir, *([partials_dir] if partials_dir else [])],
-        band_root=snapshot_dir,
     )

@@ -1,9 +1,9 @@
 """The one commit protocol of the stateful CDC consumers: stage ->
 mark -> swap -> recover, plus the one ``foreachBatch`` starter.
 
-Every consumer (``start_apply_query``, ``start_matview_query``,
-``start_matview_query_banded``, ``start_scd2_query``) keeps only its
-plan; this module owns how the plan's output becomes the live state.
+Each consumer (``cdc.apply.start_matview_query``, the one snapshot
+consumer, and ``cdc.scd2.start_scd2_query``) keeps only its plan; this
+module owns how the plan's output becomes the live state.
 
 * **Stage.** The plan writes each changed dir ``d`` in full under
   ``<d>.b<batch_id>.tmp`` (:meth:`Batch.staged`). A banded root is staged as
@@ -30,7 +30,7 @@ its commit log only after the batch function returns, so a crash at
 any point above replays the batch, against any prefix of its swaps. A
 unit, or a band, whose marker already reads this batch is skipped,
 and a batch whose every plain unit is marked is not planned at all
-(:func:`start_consumer`). The apply and matview plans would converge
+(:func:`start_consumer`). The snapshot consumer's plan would converge
 without the marker (latest-per-key apply is idempotent, and a view
 refresh recomputes from the snapshot); SCD2 would not: re-merging a
 batch into its POST-merge open table re-enters every row beside the
@@ -45,8 +45,8 @@ of one checkpoint and new for a fresh one, whose batch ids restart at
 0: a bare batch id would make a fresh checkpoint's first batches over
 existing state look already applied, and drop them.
 
-Order. A matview commits its VIEW first, then its partials, then the
-snapshot or its bands. A crash between them replays the batch against
+Order. A matview commits its VIEW first, then the snapshot or its
+bands. A crash between them replays the batch against
 the PRE-batch snapshot (or pre-batch bands), where the old group of
 every delete and group-moving update is still derivable; the
 already-committed view is kept. Snapshot-first would leave the replay
@@ -167,14 +167,17 @@ class Dirs:
         self.spark = spark
         self.schemas: dict = {}
 
-    def read(self, d: str, path: str | None = None):
-        """Dir ``d``, or its stage at ``path``."""
+    def read(self, d: str, *paths: str):
+        """Dir ``d``, or ``paths`` under it or under its stage (its
+        stage, or band dirs)."""
         if d not in self.schemas:
             self.schemas[d] = self.spark.read.parquet(d).schema
-        return self.spark.read.schema(self.schemas[d]).parquet(path or d)
+        return self.spark.read.schema(self.schemas[d]).parquet(*(paths or [d]))
 
-    def stage(self, df, d: str, batch: Batch) -> None:
-        df.write.mode("overwrite").parquet(batch.staged(d))
+    def stage(self, df, d: str, batch: Batch, *partition_by: str) -> None:
+        df.write.partitionBy(*partition_by).mode("overwrite").parquet(
+            batch.staged(d)
+        )
         self.schemas[d] = df.schema
 
 

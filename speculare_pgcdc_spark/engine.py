@@ -269,25 +269,25 @@ class Engine:
         available_now: bool = False,
     ):
         """Maintain a queryable parquet snapshot from the change feed
-        (cdc/apply.start_apply_query behind the facade) — the
-        reference-consumer shape one step past fan-out: every real
-        deployment's next stop after receiving changes is applying
-        them somewhere queryable.
+        (cdc/apply.start_matview_query without a view, behind the
+        facade) — the reference-consumer shape one step past fan-out:
+        every real deployment's next stop after receiving changes is
+        applying them somewhere queryable.
 
         The file feed carries no WAL position (every message parses
         at seq 0), so the snapshot keeps exactly one row per key, but
         when two messages in one microbatch change the same key, which
         one wins is unspecified (cdc/apply.latest_changes)."""
-        from speculare_pgcdc_spark.cdc.apply import start_apply_query
+        from speculare_pgcdc_spark.cdc.apply import start_matview_query
 
         src = file_change_feed(
             self.spark, feed_dir,
             max_files_per_trigger=max_files_per_trigger,
         )
-        return start_apply_query(
-            self._changes(src, lookup), snapshot_dir, checkpoint_dir,
-            key_col, columns, tables=tables,
-            available_now=available_now,
+        return start_matview_query(
+            self._changes(src, lookup), snapshot_dir, None, checkpoint_dir,
+            key_col, columns, None, None, tables=tables,
+            query_name="cdc-apply", available_now=available_now,
         )
 
     def watch_matview(

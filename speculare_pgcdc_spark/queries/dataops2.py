@@ -98,8 +98,9 @@ _NTOK_SQL = "len(list_filter(string_split(text, ' '), t -> t <> ''))"
     """,
     doc="Banded-layout balance audit: occupancy, distinct-key spread, "
     "key range, and revenue mass per key band — the health check for "
-    "the range-banded snapshot layout the partition-confined IVM "
-    "consumer maintains (cdc/apply.py:start_matview_query_banded; a "
+    "the range-banded snapshot layout the snapshot consumer "
+    "maintains when its dir holds one (cdc/apply.py:"
+    "start_matview_query; a "
     "hot band means its dir is rewritten every batch, an empty band "
     "range means wasted pruning metadata). The band width is DERIVED "
     "exactly as write_banded_snapshot's round-14 auto-selection "

@@ -39,6 +39,7 @@ from speculare_pgcdc_spark.queries import register
                o_orderstatus AS status,
                CAST(FLOOR(o_totalprice * 100) AS BIGINT) AS price_e2
         FROM orders
+        WHERE o_custkey IS NOT NULL
         WINDOW w AS (PARTITION BY o_custkey
                      ORDER BY o_orderdate, o_orderkey)
         ORDER BY o_custkey, version
@@ -53,7 +54,9 @@ from speculare_pgcdc_spark.queries import register
     "high-cardinality, so the window needs no band (the band rule "
     "targets LOW-cardinality partition keys); one shuffle on the "
     "key, no join, output streams. Ties totalized by o_orderkey; "
-    "money floor-scales to e2 cents. The INCREMENTAL twin — "
+    "money floor-scales to e2 cents. A NULL o_custkey is no key: its "
+    "rows are dropped, the rule of cdc/apply.latest_changes and "
+    "cdc/scd2.scd2_apply. The INCREMENTAL twin — "
     "maintaining this state change-batch by change-batch through a "
     "real foreachBatch stream (cdc/scd2.scd2_apply: one key window "
     "over the open versions + batch rows, no join) — "
@@ -70,6 +73,7 @@ def q281(spark: SparkSession, sf: str) -> DataFrame:
     )
     return (
         table(spark, sf, "orders")
+        .filter(F.col("o_custkey").isNotNull())
         .select(
             "o_custkey",
             F.row_number().over(w).cast("bigint").alias("version"),

@@ -874,33 +874,28 @@ def test_write_banded_snapshot_empty_seed_requires_width(spark, tmp_path):
     assert read_band_width(str(tmp_path / "e2")) == 1000
 
 
-def test_banded_matview_partial_mode_args_validated(spark, tmp_path):
-    """merge_cols_fn and partials_dir come together or not at all —
-    half-configured partial maintenance must fail loudly at start,
-    not silently fall back to the scan refresh."""
+def test_matview_view_args_all_or_none(spark, tmp_path):
+    """start_matview_query keeps a view only with all three of
+    matview_dir, group_col and agg_cols_fn: passing some but not all
+    fails loudly at start instead of silently dropping the view."""
     import pytest as _pytest
     from pyspark.sql import functions as F
 
-    from speculare_pgcdc_spark.cdc.apply import (
-        start_matview_query_banded,
-        write_banded_snapshot,
-    )
+    from speculare_pgcdc_spark.cdc.apply import start_matview_query
 
-    snap = str(tmp_path / "vsnap")
-    base = spark.createDataFrame([(1, "a", 1)], "id bigint, g string, v bigint")
-    write_banded_snapshot(base, snap, "id", band_width=10)
     stream = (
         spark.readStream.format("rate").option("rowsPerSecond", 1).load()
     )
-    for kwargs in (
-        {"merge_cols_fn": lambda: [F.sum("v").alias("v")]},
-        {"partials_dir": str(tmp_path / "parts")},
-    ):
-        with _pytest.raises(ValueError, match="partial-maintenance"):
-            start_matview_query_banded(
-                stream, snap, str(tmp_path / "mv"),
-                str(tmp_path / "ck"), "id", {"id": "bigint"},
-                "g", lambda: [F.sum("v").alias("v")], **kwargs,
+
+    def aggs():
+        return [F.sum("v").alias("v")]
+
+    for view in ((str(tmp_path / "mv"), None, None), (None, "g", aggs),
+                 (str(tmp_path / "mv"), "g", None)):
+        with _pytest.raises(ValueError, match="matview_dir, group_col"):
+            start_matview_query(
+                stream, str(tmp_path / "snap"), view[0],
+                str(tmp_path / "ck"), "id", {"id": "bigint"}, *view[1:],
             )
 
 
@@ -968,54 +963,3 @@ def test_write_banded_snapshot_auto_band_count(spark, tmp_path):
     assert len(
         [e for e in os.listdir(root2) if e.startswith("band=")]
     ) == 4
-
-
-def test_banded_matview_refuses_non_algebraic_partials(
-    spark, tmp_path
-):
-    """Round-13 verdict #6: a (agg, merge) pair where merging two
-    halves' partials diverges from the partial of the union (here:
-    per-band MAX merged by SUM — the holistic-misuse stand-in) must
-    fail LOUDLY at stream start, not silently diverge from the
-    view==recompute integrity check batch after batch."""
-    import pytest as _pytest
-    from pyspark.sql import functions as F
-
-    from speculare_pgcdc_spark.cdc.apply import (
-        seed_band_partials,
-        start_matview_query_banded,
-        write_banded_snapshot,
-    )
-
-    snap = str(tmp_path / "na_snap")
-    base = spark.createDataFrame(
-        [(i, "g", i) for i in range(1, 9)],
-        "id bigint, g string, v bigint",
-    ).coalesce(1)
-    write_banded_snapshot(base, snap, "id", band_width=1000)
-    parts = str(tmp_path / "na_parts")
-    seed_band_partials(
-        spark, snap, "g", lambda: [F.max("v").alias("v")], parts
-    )
-    stream = (
-        spark.readStream.format("rate")
-        .option("rowsPerSecond", 1)
-        .load()
-    )
-    with _pytest.raises(ValueError, match="ALGEBRAIC"):
-        start_matview_query_banded(
-            stream, snap, str(tmp_path / "na_mv"),
-            str(tmp_path / "na_ck"), "id", {"id": "bigint"}, "g",
-            agg_cols_fn=lambda: [F.max("v").alias("v")],
-            merge_cols_fn=lambda: [F.sum("v").alias("v")],
-            partials_dir=parts,
-        )
-    # the algebraic twin of the same spec must pass the probe
-    q = start_matview_query_banded(
-        stream, snap, str(tmp_path / "ok_mv"),
-        str(tmp_path / "ok_ck"), "id", {"id": "bigint"}, "g",
-        agg_cols_fn=lambda: [F.max("v").alias("v")],
-        merge_cols_fn=lambda: [F.max("v").alias("v")],
-        partials_dir=parts,
-    )
-    q.stop()

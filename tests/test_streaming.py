@@ -1258,12 +1258,13 @@ def test_fanout_auto_small_batch_evaluates_routing_once(spark, tmp_path):
 
 
 def test_streaming_cdc_apply_maintains_snapshot(spark, tmp_path):
-    """start_apply_query: a parquet snapshot maintained from the change
-    stream converges to the batch apply_changes result across multiple
-    microbatches, and a second drain with no new input is a no-op."""
+    """start_matview_query without a view: a parquet snapshot
+    maintained from the change stream converges to the batch
+    apply_changes result across multiple microbatches, and a second
+    drain with no new input is a no-op."""
     from speculare_pgcdc_spark.cdc.apply import (
         apply_changes,
-        start_apply_query,
+        start_matview_query,
     )
     from speculare_pgcdc_spark.cdc.pipeline import parse_wal2json
 
@@ -1309,7 +1310,8 @@ def test_streaming_cdc_apply_maintains_snapshot(spark, tmp_path):
         stream = parse_wal2json(
             file_change_feed(spark, feed_dir)
         ).withColumn("table_name", F.col("table"))
-        q = start_apply_query(stream, snap, ckpt, "id", cols)
+        q = start_matview_query(stream, snap, None, ckpt, "id", cols,
+                                None, None)
         # both files in flight; process everything committed, stop
         q.processAllAvailable()
         q.stop()
@@ -2543,6 +2545,34 @@ def test_scd2_null_keys_dropped_across_batches(spark):
     assert len(got) == 2
 
 
+def test_q281_drops_null_keys_like_scd2_apply(spark, tmp_path):
+    """q281 and its DuckDB oracle drop NULL-key orders, as scd2_apply
+    does: on three orders, two with a NULL o_custkey, all three give
+    the one version of the one real key. Chained instead, q281 made
+    the NULL key two more versions that the SCD2 consumer never
+    holds."""
+    import duckdb
+
+    from speculare_pgcdc_spark.cdc.scd2 import STATE_COLS, scd2_apply
+    from speculare_pgcdc_spark.queries import load_all
+
+    orders = _orders_frame(spark, [(10, 1, "2024-01-01", "O", 1.0),
+                                   (11, None, "2024-01-01", "O", 3.0),
+                                   (21, None, "2024-02-01", "F", 4.0)])
+    orders.coalesce(1).write.parquet(str(tmp_path / "orders.parquet"))
+    spec = load_all()["q281_scd2_intervals"]
+    got = {tuple(r) for r in spec.fn(spark, str(tmp_path)).collect()}
+    want = {tuple(r) for r in scd2_apply(None, orders)
+            .select(*STATE_COLS).collect()}
+    con = duckdb.connect()
+    con.execute("CREATE VIEW orders AS SELECT * FROM read_parquet("
+                f"'{tmp_path}/orders.parquet/*.parquet')")
+    oracle = set(con.execute(spec.oracle).fetchall())
+    assert got == want == oracle == {
+        (1, 1, _dt.date(2024, 1, 1), None, "O", 100)
+    }
+
+
 def test_streaming_matview_incremental_refresh(spark, tmp_path):
     """start_matview_query (round-12, the q97 IVM's streaming twin):
     snapshot AND aggregate view maintained per microbatch; after the
@@ -2740,13 +2770,14 @@ def _mv_stream(spark, feed_dir):
 
 
 def test_streaming_matview_banded_confined_rewrite(spark, tmp_path):
-    """start_matview_query_banded: same end state as the full-rewrite
-    consumer (view == recompute, poison proves carry-forward), AND the
-    rewrite is physically confined — a band no batch touches keeps its
-    exact parquet files (names + mtimes) across the drain."""
+    """start_matview_query over a banded snapshot: same end state as
+    over the plain layout (view == recompute, poison proves
+    carry-forward), AND the rewrite is physically confined — a band no
+    batch touches keeps its exact parquet files (names + mtimes) across
+    the drain."""
     from speculare_pgcdc_spark.cdc.apply import (
         read_banded_snapshot,
-        start_matview_query_banded,
+        start_matview_query,
         write_banded_snapshot,
     )
 
@@ -2789,7 +2820,7 @@ def test_streaming_matview_banded_confined_rewrite(spark, tmp_path):
         for p in os.listdir(untouched_band)
     }
 
-    q = start_matview_query_banded(
+    q = start_matview_query(
         _mv_stream(spark, feed_dir), snap, mv, ckpt, "id", cols,
         "grp", aggs, available_now=True,
     )
@@ -2864,13 +2895,6 @@ def _mv_aggs():
     ]
 
 
-def _mv_merges():
-    return [
-        F.sum("n").cast("bigint").alias("n"),
-        F.sum("sv").cast("bigint").alias("sv"),
-    ]
-
-
 def _rows(df, cols=None):
     return frozenset(tuple(r) for r in df.select(*(cols or df.columns))
                      .collect())
@@ -2880,15 +2904,12 @@ class _Consumer:
     """One stateful consumer over a state root: seed, feed, start,
     read back, and the dirs batch 0 swaps, in commit order."""
 
-    def __init__(self, kind, banded=False, partials=False):
-        self.kind, self.banded, self.partials = kind, banded, partials
+    def __init__(self, kind, banded=False):
+        self.kind, self.banded = kind, banded
         self.scd2 = kind == "scd2"
 
     def seed(self, spark, root):
-        from speculare_pgcdc_spark.cdc.apply import (
-            seed_band_partials,
-            write_banded_snapshot,
-        )
+        from speculare_pgcdc_spark.cdc.apply import write_banded_snapshot
         from speculare_pgcdc_spark.cdc.scd2 import (
             scd2_apply,
             write_scd2_state,
@@ -2912,9 +2933,6 @@ class _Consumer:
             base.groupBy("grp").agg(*_mv_aggs()).write.parquet(
                 f"{root}/mv"
             )
-        if self.partials:
-            seed_band_partials(spark, f"{root}/snap", "grp", _mv_aggs,
-                               f"{root}/parts")
 
     def write_feed(self, feed_dir, batches):
         import pyarrow as pa
@@ -2953,22 +2971,11 @@ class _Consumer:
             )
             return scd2.start_scd2_query(src, f"{root}/scd2", ckpt,
                                          validate=True, available_now=True)
-        stream = _mv_stream(spark, feed_dir)
-        snap, mv = f"{root}/snap", f"{root}/mv"
-        if self.kind == "apply":
-            return apply.start_apply_query(
-                stream, snap, ckpt, "id", _MV_COLS, available_now=True
-            )
-        if not self.banded:
-            return apply.start_matview_query(
-                stream, snap, mv, ckpt, "id", _MV_COLS, "grp", _mv_aggs,
-                available_now=True,
-            )
-        extra = ({"merge_cols_fn": _mv_merges,
-                  "partials_dir": f"{root}/parts"} if self.partials else {})
-        return apply.start_matview_query_banded(
-            stream, snap, mv, ckpt, "id", _MV_COLS, "grp", _mv_aggs,
-            available_now=True, **extra,
+        mv, grp, aggs = ((None, None, None) if self.kind == "apply"
+                         else (f"{root}/mv", "grp", _mv_aggs))
+        return apply.start_matview_query(
+            _mv_stream(spark, feed_dir), f"{root}/snap", mv, ckpt, "id",
+            _MV_COLS, grp, aggs, available_now=True,
         )
 
     def drain(self, spark, root, feed_dir, ckpt):
@@ -2985,7 +2992,7 @@ class _Consumer:
         snaps = ([f"{root}/snap/band=0", f"{root}/snap/band=1"]
                  if self.banded else [f"{root}/snap"])
         head = [] if self.kind == "apply" else [f"{root}/mv"]
-        return head + ([f"{root}/parts"] if self.partials else []) + snaps
+        return head + snaps
 
     def state(self, spark, root):
         from speculare_pgcdc_spark.cdc.apply import read_banded_snapshot
@@ -3000,9 +3007,6 @@ class _Consumer:
         if self.kind != "apply":
             out["view"] = _rows(spark.read.parquet(f"{root}/mv"),
                                 ["grp", "n", "sv"])
-        if self.partials:
-            out["parts"] = _rows(spark.read.parquet(f"{root}/parts"),
-                                 ["band", "grp", "n", "sv"])
         return out
 
     def expected(self, spark, n_batches):
@@ -3028,23 +3032,12 @@ class _Consumer:
                     i, g, v = c["columnvalues"]
                     snap[i] = (g, v)
         out = {"snap": frozenset((i, g, v) for i, (g, v) in snap.items())}
-
-        def agg(key):
-            acc = {}
-            for i, (g, v) in snap.items():
-                n, sv = acc.get(key(i, g), (0, 0))
-                acc[key(i, g)] = (n + 1, sv + v)
-            return acc
-
         if self.kind != "apply":
-            out["view"] = frozenset(
-                (g, n, sv) for g, (n, sv) in agg(lambda i, g: g).items()
-            )
-        if self.partials:
-            out["parts"] = frozenset(
-                (*bg, n, sv)
-                for bg, (n, sv) in agg(lambda i, g: (i // 4, g)).items()
-            )
+            acc = {}
+            for g, v in snap.values():
+                n, sv = acc.get(g, (0, 0))
+                acc[g] = (n + 1, sv + v)
+            out["view"] = frozenset((g, n, sv) for g, (n, sv) in acc.items())
         return out
 
 
@@ -3052,7 +3045,6 @@ _CONSUMERS = {
     "apply": _Consumer("apply"),
     "matview": _Consumer("matview"),
     "matview_banded": _Consumer("matview", banded=True),
-    "matview_partials": _Consumer("matview", banded=True, partials=True),
     "scd2": _Consumer("scd2"),
 }
 _CRASH_FREE: dict = {}
@@ -3090,8 +3082,7 @@ def _crash_free(spark, tmp_path, monkeypatch, name):
     [
         (name, point)
         for name, n in [("apply", 1), ("matview", 2),
-                        ("matview_banded", 3), ("matview_partials", 4),
-                        ("scd2", 1)]
+                        ("matview_banded", 3), ("scd2", 1)]
         for point in [*range(n + 1), "mid"]
     ],
 )
@@ -3099,7 +3090,7 @@ def test_commit_crash_matrix(spark, tmp_path, monkeypatch, name, point):
     """Crash batch 0 of a consumer after ``point`` of its dir swaps
     (or between the two renames of its last swap, "mid"), restart on
     the same checkpoint, and require the crash-free state: snapshot,
-    view, partials or SCD2 state, with one SCD2 row per order. The
+    view or SCD2 state, with one SCD2 row per order. The
     window before the restart is pinned too: the swapped dirs carry
     the batch's marker, the rest do not. For SCD2, point 0 is "log
     entry written, open table not swapped". After the restart nothing
@@ -3232,20 +3223,20 @@ def _large_path(monkeypatch):
     "name,point",
     [
         (name, point)
-        for name, n in [("apply", 1), ("matview", 2)]
+        for name, n in [("apply", 1), ("matview", 2), ("matview_banded", 3)]
         for point in [*range(n + 1), "mid"]
     ],
 )
 def test_commit_crash_matrix_large_path(
     spark, tmp_path, monkeypatch, name, point
 ):
-    """The unbanded consumers' crash matrix on the path a change set
+    """The snapshot consumer's crash matrix on the path a change set
     too large to ride the plan as literals takes."""
     _large_path(monkeypatch)
     test_commit_crash_matrix(spark, tmp_path, monkeypatch, name, point)
 
 
-@pytest.mark.parametrize("name", ["apply", "matview"])
+@pytest.mark.parametrize("name", ["apply", "matview", "matview_banded"])
 def test_fresh_checkpoint_over_existing_state_lands_large_path(
     spark, tmp_path, monkeypatch, name
 ):
@@ -3380,18 +3371,18 @@ def test_matview_small_batch_runs_three_jobs(spark, tmp_path):
 
 
 def test_apply_small_batch_runs_two_jobs(spark, tmp_path):
-    """start_apply_query shares the matview's snapshot stage: a small
-    batch runs the bounded collect and the snapshot write, with no
-    shuffle, no join and no schema inference after the query run's
-    first batch."""
-    from speculare_pgcdc_spark.cdc.apply import start_apply_query
+    """start_matview_query without a view: a small batch runs the
+    bounded collect and the snapshot write, with no shuffle, no join
+    and no schema inference after the query run's first batch."""
+    from speculare_pgcdc_spark.cdc.apply import start_matview_query
 
     root = str(tmp_path)
     _job_seed(spark, root)
     _write_batches(f"{root}/feed", _JOB_BATCHES)
-    q = start_apply_query(
-        _mv_stream(spark, f"{root}/feed"), f"{root}/snap", f"{root}/ck",
-        "id", _MV_COLS, query_name="apply-job-count", available_now=True,
+    q = start_matview_query(
+        _mv_stream(spark, f"{root}/feed"), f"{root}/snap", None,
+        f"{root}/ck", "id", _MV_COLS, None, None,
+        query_name="apply-job-count", available_now=True,
     )
     q.awaitTermination()
     assert len(_batch_jobs(spark, "apply-job-count", 0)) == 3
@@ -3455,13 +3446,17 @@ def test_unchanged_batch_stages_nothing(spark, tmp_path):
 
 
 def test_matview_banded_small_batch_job_count(spark, tmp_path):
-    """The banded matview consumer's small batches, counted by their
-    job tag and pinned as measured: the same seed and batches as
-    test_matview_small_batch_runs_three_jobs over four bands run 15 jobs
-    each, against the unbanded consumer's 5 and 3."""
+    """Small batches over a banded snapshot, counted by their job tag
+    and pinned as measured: the same seed and batches as
+    test_matview_small_batch_runs_three_jobs over four bands run 6 then
+    4 jobs, against the plain layout's 5 and 3. A steady batch is the
+    bounded collect, the write of the touched bands and the view,
+    whose aggregate over the four band files shuffles (two jobs); the
+    first batch also infers the two dirs' schemas. With a separate
+    banded plan it was 15 and 15."""
     from speculare_pgcdc_spark.cdc.apply import (
         read_banded_snapshot,
-        start_matview_query_banded,
+        start_matview_query,
         write_banded_snapshot,
     )
 
@@ -3472,14 +3467,14 @@ def test_matview_banded_small_batch_job_count(spark, tmp_path):
         n_bands=4,
     )
     _write_batches(f"{root}/feed", _JOB_BATCHES)
-    q = start_matview_query_banded(
+    q = start_matview_query(
         _mv_stream(spark, f"{root}/feed"), f"{root}/bands", f"{root}/mv",
         f"{root}/ck", "id", _MV_COLS, "grp", _mv_aggs,
         query_name="mvb-job-count", available_now=True,
     )
     q.awaitTermination()
-    assert len(_batch_jobs(spark, "mvb-job-count", 0)) == 15
-    assert len(_batch_jobs(spark, "mvb-job-count", 1)) == 15
+    assert (len(_batch_jobs(spark, "mvb-job-count", 0)),
+            len(_batch_jobs(spark, "mvb-job-count", 1))) == (6, 4)
     snap = read_banded_snapshot(spark, f"{root}/bands").drop("band")
     assert snap.count() == 42
     assert _view(spark, f"{root}/mv") == {
@@ -3587,9 +3582,10 @@ def test_stage_snapshot_small_batch_plan(spark, tmp_path):
             [(json.dumps(m),) for m in _JOB_BATCHES[0]], "payload string"
         )
     ).withColumn("table_name", F.col("table"))
-    snapshot, touched = stage_snapshot(
+    snapshot, touched, bands = stage_snapshot(
         base, changes, "id", _MV_COLS, group_col="grp"
     )
+    assert bands is None
     physical = plan_string(snapshot)
     assert "Join" not in physical and "Exchange" not in physical
     assert optimized_plan_string(snapshot).count(" INSET ") == 1
@@ -3640,8 +3636,12 @@ def test_stage_snapshot_paths_agree(spark, tmp_path, monkeypatch):
     the same snapshot, one row per key, and the same view, on one
     batch of insert -> update -> delete chains, tied positions, NULL
     seqs, a NULL key, v1 and v2 deletes, and a malformed cell on a
-    change a later one supersedes: only a winning change is cast."""
-    from speculare_pgcdc_spark.cdc import apply
+    change a later one supersedes: only a winning change is cast. Both
+    paths agree on a plain snapshot and on a banded one, where the
+    batch deletes every row of two bands and inserts into two bands
+    that have no dir yet: only the touched bands are restaged, one
+    file each, and a band left empty is staged as no dir."""
+    from speculare_pgcdc_spark.cdc import apply, pipeline
 
     with pytest.raises(Exception, match="CAST_INVALID_INPUT"):
         spark.sql("SELECT CAST('x1' AS BIGINT)").collect()
@@ -3657,174 +3657,127 @@ def test_stage_snapshot_paths_agree(spark, tmp_path, monkeypatch):
     ).unionByName(parse_wal2json(
         spark.createDataFrame(_PARITY_V2, feed), seq_col="lsn", fmt="v2"
     )).withColumn("table_name", F.col("table"))
-    spark.createDataFrame(
+    seed = spark.createDataFrame(
         [(1, "a", 10), (2, "a", 20), (3, "b", 30), (4, "c", 40),
          (5, "c", 50), (6, None, 60), (8, "b", 80), (11, "z", 5)],
         "id bigint, grp string, v bigint",
-    ).write.parquet(str(tmp_path / "snap"))
+    )
+    seed.write.parquet(str(tmp_path / "snap"))
     base = spark.read.parquet(str(tmp_path / "snap"))
+    # width 1: one band per key, so bands 1 and 5 lose every row and
+    # keys 9 and 10 land in bands with no dir
+    apply.write_banded_snapshot(seed, str(tmp_path / "bands"), "id",
+                                band_width=1)
+    banded = spark.read.parquet(str(tmp_path / "bands"))
+
+    def band_rows(bands):
+        return banded.where(F.col("band").isin(bands)).drop("band")
+
     mv = base.groupBy("grp").agg(*_mv_aggs()).localCheckpoint()
+    bound = pipeline.LOOKUP_INLINE_MAX_ROWS
     got = {}
-    for path in ("small", "large"):
-        if path == "large":
-            _large_path(monkeypatch)
-        snapshot, touched = apply.stage_snapshot(
-            base, changes, "id", _MV_COLS, group_col="grp"
-        )
-        snapshot.write.parquet(str(tmp_path / path))
-        out = spark.read.parquet(str(tmp_path / path))
-        rows = [tuple(r) for r in out.collect()]
-        assert len(rows) == len({r[0] for r in rows})
-        view = apply.refresh_aggregates(mv, out, touched(), "grp",
-                                        _mv_aggs())
-        got[path] = (frozenset(rows), _rows(view))
-        assert len(joins) == (path == "large")
-    assert got["small"] == got["large"] == (
+    for layout in ("plain", "banded"):
+        for path in ("small", "large"):
+            monkeypatch.setattr(pipeline, "LOOKUP_INLINE_MAX_ROWS",
+                                bound if path == "small" else 0)
+            joins.clear()
+            out_dir = str(tmp_path / f"{layout}_{path}")
+            if layout == "plain":
+                snapshot, touched, bands = apply.stage_snapshot(
+                    base, changes, "id", _MV_COLS, group_col="grp"
+                )
+                assert bands is None
+                snapshot.write.parquet(out_dir)
+                out = spark.read.parquet(out_dir)
+            else:
+                snapshot, touched, bands = apply.stage_snapshot(
+                    band_rows, changes, "id", _MV_COLS, group_col="grp",
+                    band_width=1,
+                )
+                assert bands == list(range(1, 11))
+                snapshot.write.partitionBy("band").parquet(out_dir)
+                staged = {e: [f for f in os.listdir(f"{out_dir}/{e}")
+                              if f.endswith(".parquet")]
+                          for e in os.listdir(out_dir)
+                          if e.startswith("band=")}
+                assert sorted(staged) == [
+                    f"band={b}" for b in (10, 2, 3, 4, 6, 8, 9)
+                ]
+                assert all(len(f) == 1 for f in staged.values())
+                out = spark.read.parquet(out_dir).drop("band").unionByName(
+                    band_rows([11])
+                )
+            rows = [tuple(r) for r in out.collect()]
+            assert len(rows) == len({r[0] for r in rows})
+            view = apply.refresh_aggregates(mv, out, touched(), "grp",
+                                            _mv_aggs())
+            got[layout, path] = (frozenset(rows), _rows(view))
+            assert len(joins) == (path == "large")
+    want = (
         {(2, "d", 22), (3, "a", 33), (4, "d", 44), (6, "c", 66),
          (8, "a", 2), (9, None, 90), (10, "e", 100), (11, "z", 5)},
         {("a", 2, 35), ("c", 1, 66), ("d", 2, 66), ("e", 1, 100),
          (None, 1, 90), ("z", 1, 5)},
     )
+    assert len(got) == 4 and all(v == want for v in got.values()), got
 
 
 def test_matview_file_counts_stay_bounded(spark, tmp_path):
-    """The snapshot and the view keep their file counts over 20
+    """The snapshot and the view keep their file counts over 21
     batches: the upserts' LocalRelation and the view's recomputed
     groups are coalesced into the dir's own count instead of adding
-    files every batch."""
-    from speculare_pgcdc_spark.cdc.apply import start_matview_query
+    files every batch. On a banded snapshot every band dir keeps one
+    file: the inserts open two bands that had no dir, and the last
+    batch deletes every row of band 3, whose dir goes."""
+    from speculare_pgcdc_spark.cdc.apply import (
+        start_matview_query,
+        write_banded_snapshot,
+    )
 
-    root = str(tmp_path)
     base = spark.createDataFrame(
         [(i, "abc"[i % 3], i) for i in range(1, 61)],
         "id bigint, grp string, v bigint",
-    )
-    base.repartition(2).write.parquet(f"{root}/snap")
-    # 'c' is never touched, so the view's kept rows are never empty
-    base.groupBy("grp").agg(*_mv_aggs()).repartition(2).write.parquet(
-        f"{root}/mv"
     )
 
     def files(d):
         return len([f for f in os.listdir(d) if f.endswith(".parquet")])
 
-    seeded = files(f"{root}/snap"), files(f"{root}/mv")
-    _write_batches(f"{root}/feed", [
+    batches = [
         [_mv_chg("update", 1 + 3 * (b % 20), "a", b),
          _mv_chg("insert", 100 + b, "b", b)]
         for b in range(20)
-    ])
-    q = start_matview_query(
-        _mv_stream(spark, f"{root}/feed"), f"{root}/snap", f"{root}/mv",
-        f"{root}/ck", "id", _MV_COLS, "grp", _mv_aggs, available_now=True,
-    )
-    q.awaitTermination()
-    assert len(q.recentProgress) >= 20
-    assert files(f"{root}/snap") <= seeded[0]
-    assert files(f"{root}/mv") <= seeded[1]
-    assert _view(spark, f"{root}/mv") == _recomputed_view(
-        spark, f"{root}/snap"
-    )
-
-
-def test_banded_matview_partials_mode(spark, tmp_path):
-    """Band-partial maintenance (round-13): the view is merged from
-    per-(band, group) partials, touched bands' partials rebuilt from
-    the new band content — no snapshot-scale scan. End state equals a
-    full recompute, untouched bands keep their physical files (its
-    crash replay is in test_commit_crash_matrix)."""
-    from speculare_pgcdc_spark.cdc.apply import (
-        read_banded_snapshot,
-        seed_band_partials,
-        start_matview_query_banded,
-        write_banded_snapshot,
-    )
-
-    feed_dir = str(tmp_path / "feedp")
-    snap = str(tmp_path / "snapp")
-    mv = str(tmp_path / "mvp")
-    parts = str(tmp_path / "partsp")
-    ckpt = str(tmp_path / "ckptp")
-    cols = {"id": "bigint", "grp": "string", "v": "bigint"}
-
-    base = spark.createDataFrame(
-        [(1, "a", 10), (2, "a", 20), (3, "b", 30), (4, "c", 40),
-         (100, "c", 400)],
-        "id bigint, grp string, v bigint",
-    )
-    write_banded_snapshot(base, snap, "id", n_bands=32)  # width 4
-
-    def aggs():
-        return [
-            F.count(F.lit(1)).cast("bigint").alias("n"),
-            F.sum("v").cast("bigint").alias("sv"),
-        ]
-
-    def merges():
-        return [
-            F.sum("n").cast("bigint").alias("n"),
-            F.sum("sv").cast("bigint").alias("sv"),
-        ]
-
-    seed_band_partials(spark, snap, "grp", aggs, parts)
-    base.groupBy("grp").agg(*aggs()).write.parquet(mv)
-
-    batches = [
-        [_mv_chg("update", 1, "a", 11), _mv_chg("insert", 5, "b", 50)],
-        [_mv_chg("delete", 3), _mv_chg("update", 5, "d", 55)],
-    ]
-    _write_batches(feed_dir, batches)
-
-    untouched_band = os.path.join(snap, "band=25")
-    before = {
-        p: os.path.getmtime(os.path.join(untouched_band, p))
-        for p in os.listdir(untouched_band)
-    }
-
-    q = start_matview_query_banded(
-        _mv_stream(spark, feed_dir), snap, mv, ckpt, "id", cols,
-        "grp", aggs, available_now=True,
-        merge_cols_fn=merges, partials_dir=parts,
-    )
-    q.processAllAvailable()
-    q.stop()
-
-    after = {
-        p: os.path.getmtime(os.path.join(untouched_band, p))
-        for p in os.listdir(untouched_band)
-    }
-    assert after == before  # band 25 physically untouched
-
-    final = read_banded_snapshot(spark, snap)
-    got_snap = {
-        (r["id"], r["grp"], r["v"]) for r in final.collect()
-    }
-    assert got_snap == {
-        (1, "a", 11), (2, "a", 20), (4, "c", 40), (5, "d", 55),
-        (100, "c", 400),
-    }
-    got_mv = {
-        r["grp"]: (r["n"], r["sv"])
-        for r in spark.read.parquet(mv).collect()
-    }
-    full = {
-        r["grp"]: (r["n"], r["sv"])
-        for r in final.groupBy("grp").agg(*aggs()).collect()
-    }
-    assert got_mv == full == {
-        "a": (2, 31), "c": (2, 440), "d": (1, 55),
-    }, (got_mv, full)
-    # partials state equals a per-band recompute of the final snapshot
-    got_parts = {
-        (r["band"], r["grp"]): (r["n"], r["sv"])
-        for r in spark.read.parquet(parts).collect()
-    }
-    want_parts = {
-        (r["band"], r["grp"]): (r["n"], r["sv"])
-        for r in spark.read.parquet(snap)
-        .groupBy("band", "grp").agg(*aggs()).collect()
-    }
-    assert got_parts == want_parts
+    ] + [[_mv_chg("delete", i) for i in range(48, 61)]]
+    for layout in ("plain", "banded"):
+        root = str(tmp_path / layout)
+        if layout == "plain":
+            base.repartition(2).write.parquet(f"{root}/snap")
+        else:  # width 16: bands 0-3; the inserts land in bands 6 and 7
+            write_banded_snapshot(base, f"{root}/snap", "id", n_bands=4)
+        # 'c' is never touched, so the view's kept rows are never empty
+        base.groupBy("grp").agg(*_mv_aggs()).repartition(2).write.parquet(
+            f"{root}/mv"
+        )
+        seeded = files(f"{root}/snap"), files(f"{root}/mv")
+        _write_batches(f"{root}/feed", batches)
+        q = start_matview_query(
+            _mv_stream(spark, f"{root}/feed"), f"{root}/snap",
+            f"{root}/mv", f"{root}/ck", "id", _MV_COLS, "grp", _mv_aggs,
+            available_now=True,
+        )
+        q.awaitTermination()
+        assert len(q.recentProgress) >= 21
+        if layout == "plain":
+            assert files(f"{root}/snap") <= seeded[0]
+        else:
+            bands = [e for e in os.listdir(f"{root}/snap")
+                     if e.startswith("band=")]
+            assert sorted(bands) == [f"band={b}" for b in (0, 1, 2, 6, 7)]
+            assert all(files(f"{root}/snap/{b}") == 1 for b in bands)
+        assert files(f"{root}/mv") <= seeded[1]
+        assert spark.read.parquet(f"{root}/snap").count() == 67
+        assert _view(spark, f"{root}/mv") == _recomputed_view(
+            spark, f"{root}/snap"
+        )
 
 
 def test_scd2_banded_state_parity(spark, sf_dir, tmp_path):
