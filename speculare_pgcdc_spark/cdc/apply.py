@@ -582,9 +582,11 @@ def start_matview_query(
     ``agg_cols_fn`` all None the query keeps only the snapshot
     (``Engine.watch_snapshot``); passing some of the three but not all
     raises ``ValueError``. ``agg_cols_fn`` is a zero-arg callable
-    returning the aliased aggregate expressions (Column objects aren't
-    reusable across microbatch plans, so the view definition is
-    re-built per batch).
+    returning the aliased aggregate expressions; the query calls it
+    for each batch's view plan. (Unresolved Column objects can be
+    reused across plans, as the fan-out query reuses its routing
+    Column, so a callable that returns the same Columns every call is
+    fine.)
 
     **The layout on disk decides banding.** A ``snapshot_dir`` holding
     the ``_band_width`` marker of :func:`write_banded_snapshot` is

@@ -20,6 +20,9 @@ Mapping (pure column arithmetic — reproducible in SQL on both engines):
 
 from __future__ import annotations
 
+import os
+import time
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -233,7 +236,12 @@ def write_feed(
     keys). The banded IVM consumer's rewrite confinement is
     proportional to exactly this locality; the default round-robin
     split is kept for cross-round comparability of the dispatch
-    numbers."""
+    numbers.
+
+    Spark writes the part files in parallel tasks, and the file source
+    takes them in mtime order, so each part file then gets its own
+    second, in part-name order: which messages share a microbatch is
+    the same in every process."""
     feed = feed_messages(spark, sf_dir)
     if contiguous:
         # txn order == the first change's event_id when present (the
@@ -251,4 +259,8 @@ def write_feed(
     else:
         feed = feed.repartition(num_files)
     feed.write.mode("overwrite").text(out_dir)
+    parts = sorted(n for n in os.listdir(out_dir) if n.startswith("part-"))
+    base = int(time.time()) - len(parts)
+    for i, n in enumerate(parts):
+        os.utime(os.path.join(out_dir, n), (base + i, base + i))
     return out_dir

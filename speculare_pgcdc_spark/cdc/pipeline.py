@@ -21,6 +21,7 @@ LOOKUP_INLINE_MAX_ROWS fall back to a broadcast join).
 from __future__ import annotations
 
 import json
+from typing import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -402,11 +403,14 @@ def subscriptions_df(spark, subs, tables):
     exactly like the reference returns HTTP 400.
 
     The frame is built from a pyarrow.Table, which Spark plans as a
-    LocalRelation: the rows live in the JVM-side plan, and route()
+    LocalRelation: the rows live in the JVM-side plan, and router()
     collects them without running a Spark job. A row list would be a
-    parallelized LogicalRDD; start_fanout_query rebuilds this frame
-    every microbatch, and building + collecting it took ~300 ms from
-    a list against tens of ms from Arrow (4-core local session).
+    parallelized LogicalRDD, and building + collecting it took ~300 ms
+    against tens of ms from Arrow (4-core local session). A live
+    registry pays this once per registry change, not per microbatch:
+    Engine.subscriptions() returns the same frame until a subscribe or
+    unsubscribe, and start_fanout_query compiles a router only when
+    the frame changes.
     """
     import pyarrow as pa
 
@@ -468,30 +472,32 @@ _SUB_FIELDS = [
 _REGISTRY_TYPE = MapType(StringType(), ArrayType(StructType(_SUB_FIELDS)))
 
 
-def route(changes: DataFrame, subscriptions: DataFrame) -> DataFrame:
-    """Routing + per-subscription filtering (R13 + R14; forwarder
-    mod.rs:105-127 and send_message :44-72).
+def router(subscriptions: DataFrame) -> Callable[[DataFrame], DataFrame]:
+    """Compile the routing side once per registry (R13 + R14; forwarder
+    mod.rs:105-127 and send_message :44-72): the returned function
+    routes one changes frame, and can route any number of them.
 
     ``subscriptions`` columns: sub_id, change_table, change_flag,
     filter_col (nullable), filter_op ('eq'|'in', nullable), filter_vals
     (array<string>, nullable). It is the engine's ServerState. The
-    reference's three HashMap<table, HashSet<id>> indexes become one
-    lookup, the same model-to-data move as normalize_hypertables: the
-    registry is collected at plan-build time (subscriptions_df builds
-    a LocalRelation, so the collect runs no Spark job) and rides the
-    plan as ONE literal map of table -> array of subscriptions. Each
-    change looks up its table, keeps the subscriptions whose kind mask
-    and filter match, and explodes one row per match: no join, no
-    exchange, one narrow stage. The literal is one JSON string parsed
-    by ``from_json`` (constant-folded at optimization), so filter
-    values, which come from WebSocket clients, are data and never SQL
-    text, and building it costs one JVM call however many
-    subscriptions there are. Registries over LOOKUP_INLINE_MAX_ROWS
-    keep the broadcast hash join on table name, so the plan never
-    embeds an unbounded literal.
+    reference builds its index when a client subscribes and only looks
+    it up per message (forwarder/mod.rs:75-143); here the bounded
+    collect and the routing Column are built once, on this call
+    (subscriptions_df builds a LocalRelation, so the collect runs no
+    Spark job). The reference's three HashMap<table, HashSet<id>>
+    indexes become one lookup, the same model-to-data move as
+    normalize_hypertables: the registry rides each routed plan as ONE
+    literal map of table -> array of subscriptions. Each change looks
+    up its table, keeps the subscriptions whose kind mask and filter
+    match, and explodes one row per match: no join, no exchange, one
+    narrow stage. The literal is one JSON string parsed by
+    ``from_json`` (constant-folded at optimization), so filter values,
+    which come from WebSocket clients, are data and never SQL text.
+    Registries over LOOKUP_INLINE_MAX_ROWS keep the broadcast hash join
+    on table name, so the plan never embeds an unbounded literal.
 
-    Returns one row per (change, matching subscription): the change's
-    columns plus ``sub_id``.
+    The routed frame is one row per (change, matching subscription):
+    the change's columns plus ``sub_id``.
     """
     names = [f.name for f in _SUB_FIELDS]
     rows = (
@@ -513,10 +519,10 @@ def route(changes: DataFrame, subscriptions: DataFrame) -> DataFrame:
         cond = (F.col("table_name") == F.col("_s_table")) & _kind_ok(
             F.col("_s_flag")
         )
-        return (
+        match = _filter_ok(F.col("_s_col"), F.col("_s_op"), F.col("_s_vals"))
+        return lambda changes: (
             changes.join(subs, cond, "inner")
-            .filter(_filter_ok(F.col("_s_col"), F.col("_s_op"),
-                               F.col("_s_vals")))
+            .filter(match)
             .drop("_s_table", "_s_flag", "_s_col", "_s_op", "_s_vals")
         )
     registry: dict[str, list] = {}
@@ -537,9 +543,15 @@ def route(changes: DataFrame, subscriptions: DataFrame) -> DataFrame:
             s["filter_col"], s["filter_op"], s["filter_vals"]
         )
 
-    return changes.select(
-        "*",
-        F.explode(
-            F.transform(F.filter(subs, matches), lambda s: s["sub_id"])
-        ).alias("sub_id"),
-    )
+    sub_ids = F.explode(
+        F.transform(F.filter(subs, matches), lambda s: s["sub_id"])
+    ).alias("sub_id")
+    return lambda changes: changes.select("*", sub_ids)
+
+
+def route(changes: DataFrame, subscriptions: DataFrame) -> DataFrame:
+    """Route one changes frame against ``subscriptions``: one row per
+    (change, matching subscription), the change's columns plus
+    ``sub_id``. A one-shot :func:`router`; a caller that routes many
+    frames against one registry compiles it once with ``router``."""
+    return router(subscriptions)(changes)

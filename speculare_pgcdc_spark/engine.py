@@ -60,6 +60,10 @@ class Engine:
         #: analog — reference loads it once at startup, cdc/mod.rs:30-47)
         self.tables = list(tables) if tables is not None else list(TABLES)
         self._subs: dict[int, str] = {}  # sub_id -> DSL
+        #: bumped by every registry change; subscriptions() rebuilds
+        #: its frame when the version it was built at is stale
+        self._subs_version = 0
+        self._subs_frame: Optional[tuple[int, DataFrame]] = None
         self._views_registered = False
 
     # -- batch analytics surface -------------------------------------
@@ -95,10 +99,11 @@ class Engine:
 
         A subscription registered (or removed) while a watch()/
         watch_db() query is running takes effect on that query's NEXT
-        microbatch — the routing side is re-read from this registry at
-        the top of every batch (the reference's live-forwarder
-        semantics: new WebSocket subscriptions apply immediately,
-        api/ws_handler.rs:79-143; pinned in tests/test_streaming.py::
+        microbatch — the query reads this registry at the top of every
+        batch and recompiles its routing only when it has changed (the
+        reference's live-forwarder semantics: new WebSocket
+        subscriptions apply immediately, api/ws_handler.rs:79-143;
+        pinned in tests/test_streaming.py::
         test_subscription_applies_mid_stream)."""
         watch = parse_ws_query(dsl_query, self.tables)
         if auth is not None:
@@ -106,17 +111,34 @@ class Engine:
                 raise ValueError("auth requires an authorizer")
             authorizer.restrict(auth, watch)
         self._subs[sub_id] = dsl_query
+        self._subs_version += 1
         return watch
 
     def unsubscribe(self, sub_id: int) -> None:
-        self._subs.pop(sub_id, None)
+        if self._subs.pop(sub_id, None) is not None:
+            self._subs_version += 1
 
     def subscriptions(self) -> DataFrame:
         """The registry as the subscriptions frame route() inlines into
-        the routing plan (ServerState analog, ws_utils.rs:23-29)."""
-        return subscriptions_df(
-            self.spark, list(self._subs.items()), self.tables
-        )
+        the routing plan (ServerState analog, ws_utils.rs:23-29).
+
+        Returns the SAME frame object until subscribe()/unsubscribe()
+        changes the registry, so a running watch() compiles its router
+        once per registry change (streaming.fanout.start_fanout_query
+        keys on frame identity). Those calls may come from another
+        thread (WsSidecar.for_engine runs on its asyncio loop): each
+        writes the registry before bumping the version, and this reads
+        the version before the registry, so a frame built across a
+        concurrent change is tagged with the older version and rebuilt
+        on the next call, never served stale."""
+        version = self._subs_version
+        cached = self._subs_frame
+        if cached is None or cached[0] != version:
+            frame = subscriptions_df(
+                self.spark, list(self._subs.items()), self.tables
+            )
+            cached = self._subs_frame = (version, frame)
+        return cached[1]
 
     # -- CDC dispatch (EP2 + EP3) --------------------------------------
 
@@ -197,10 +219,11 @@ class Engine:
         (idempotent per batch with ``exactly_once``). Each microbatch
         picks its delivery path by size (streaming.fanout.fanout_auto).
 
-        Subscription semantics are LIVE: the registry is re-read at
-        the top of every microbatch, so subscribe()/unsubscribe()
-        while the query runs applies on the next batch — matching the
-        reference's immediate WebSocket-subscription application
+        Subscription semantics are LIVE: the registry is read at the
+        top of every microbatch (its routing recompiled only when it
+        changed), so subscribe()/unsubscribe() while the query runs
+        applies on the next batch — matching the reference's
+        immediate WebSocket-subscription application
         (api/ws_handler.rs:79-143; pinned in tests/test_streaming.py::
         test_subscription_applies_mid_stream).
 

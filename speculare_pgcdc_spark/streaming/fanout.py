@@ -276,16 +276,17 @@ def start_fanout_query(
 
     ``subscriptions`` is either a static DataFrame (registry snapshot,
     fixed for the query's lifetime) or a ZERO-ARG CALLABLE returning
-    one — re-evaluated at the top of EVERY microbatch, so subscribe/
+    one — called at the top of EVERY microbatch, so subscribe/
     unsubscribe on a live registry applies on the next batch without a
     restart: the reference's live-forwarder semantics (new WebSocket
     subscriptions take effect immediately, api/ws_handler.rs:79-143).
-    The frame is registry-sized, and route() inlines it into the
-    batch's plan as one literal; subscriptions_df builds it as a
-    LocalRelation from Arrow, so the per-batch rebuild and collect cost
-    tens of ms and no Spark job, not the ~300 ms of a parallelized row
-    list. A small batch then runs one Spark job, the bounded collect
-    of fanout_auto.
+    The routing side is compiled (cdc.pipeline.router: the registry's
+    bounded collect plus the literal or the broadcast side) only when
+    the callable returns a different frame object than the batch
+    before, so a callable that returns the same frame until the
+    registry changes (Engine.subscriptions) pays it once per registry
+    change, and a static frame once. A small batch then runs one Spark
+    job, the bounded collect of fanout_auto.
 
     Every microbatch goes through :func:`fanout_auto`, which picks the
     path from the batch's routed row count: up to
@@ -300,11 +301,16 @@ def start_fanout_query(
     then terminate — the scheduled-backfill shape; the checkpoint makes
     consecutive drains resume where the last one stopped."""
     from speculare_pgcdc_spark.cdc.commit import start_foreach_batch
-    from speculare_pgcdc_spark.cdc.pipeline import route
+    from speculare_pgcdc_spark.cdc.pipeline import router
+
+    # (frame, its router); the frame is held, so identity stays valid
+    compiled: list = [None, None]
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         subs = subscriptions() if callable(subscriptions) else subscriptions
-        fanout_auto(route(batch_df, subs), deliver, batch_id)
+        if subs is not compiled[0]:
+            compiled[:] = [subs, router(subs)]
+        fanout_auto(compiled[1](batch_df), deliver, batch_id)
 
     return start_foreach_batch(
         changes_stream, process, checkpoint_dir, query_name, available_now

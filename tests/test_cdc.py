@@ -240,6 +240,23 @@ def test_route_empty_registry_both_paths(spark, monkeypatch):
     assert _routed_both_ways(changes, empty, monkeypatch) == [set(), set()]
 
 
+def test_write_feed_part_mtimes_follow_part_names(spark, sf_dir, tmp_path):
+    """The file source takes feed files in mtime order, and Spark's
+    parallel write tasks finish in any order: write_feed gives each
+    part file its own second in name order, so every process cuts the
+    same microbatches from one feed."""
+    import os
+
+    from speculare_pgcdc_spark.cdc.feedgen import write_feed
+
+    feed = str(tmp_path / "feed")
+    write_feed(spark, sf_dir, feed, num_files=4, contiguous=True)
+    parts = sorted(n for n in os.listdir(feed) if n.startswith("part-"))
+    mtimes = [os.stat(os.path.join(feed, n)).st_mtime for n in parts]
+    assert len(parts) == 4
+    assert all(a < b for a, b in zip(mtimes, mtimes[1:])), mtimes
+
+
 def test_filter_predicate_null_semantics(spark):
     # filter column compiled alone behaves per match_filter
     w = parse_ws_query("insert:test_table0:name.eq.W1", TABLES)

@@ -12,7 +12,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from speculare_pgcdc_spark.cdc.feedgen import FEED_TABLES, lookup_df
-from speculare_pgcdc_spark.dsl import DslError, parse_ws_query
+from speculare_pgcdc_spark.dsl import DELETE, DslError, parse_ws_query
 from speculare_pgcdc_spark.engine import Engine
 
 
@@ -38,6 +38,46 @@ def test_subscribe_validates_like_reference(eng):
     with pytest.raises(DslError):
         eng.subscribe(3, "bogus_type:events")
     eng.unsubscribe(1)
+
+
+def test_subscriptions_frame_cached_until_registry_changes(
+    spark, monkeypatch
+):
+    """Engine.subscriptions() returns the same frame until the registry
+    changes, and a new one after each subscribe, unsubscribe and
+    re-subscribe of an id with another DSL. A subscribe that lands
+    while a frame is being built is served on the next call."""
+    from speculare_pgcdc_spark import engine as engine_mod
+
+    eng = Engine(spark, tables=FEED_TABLES)
+    eng.subscribe(1, "insert:events_a")
+    seen = [eng.subscriptions()]
+    assert eng.subscriptions() is seen[-1]
+    for change in (
+        lambda: eng.subscribe(2, "*:events_b"),
+        lambda: eng.subscribe(2, "delete:events_b"),
+        lambda: eng.unsubscribe(1),
+    ):
+        change()
+        seen.append(eng.subscriptions())
+        assert all(seen[-1] is not f for f in seen[:-1])
+        assert eng.subscriptions() is seen[-1]
+    eng.unsubscribe(1)  # no longer registered: nothing changes
+    assert eng.subscriptions() is seen[-1]
+    assert [tuple(r) for r in seen[-1].select(
+        "sub_id", "change_flag").collect()] == [(2, DELETE)]
+
+    real = engine_mod.subscriptions_df
+
+    def racing(*a):
+        eng.subscribe(3, "*:events_a")  # after the registry was read
+        return real(*a)
+
+    monkeypatch.setattr(engine_mod, "subscriptions_df", racing)
+    eng.subscribe(4, "*:events_a")
+    assert {r.sub_id for r in eng.subscriptions().collect()} == {2, 4}
+    monkeypatch.undo()
+    assert {r.sub_id for r in eng.subscriptions().collect()} == {2, 3, 4}
 
 
 def test_end_to_end_watch(spark, tmp_path):

@@ -562,6 +562,121 @@ def test_subscription_applies_mid_stream(spark, tmp_path):
     assert len(outbox_lines(2)) == 1
 
 
+def _count_router(monkeypatch):
+    """Count the routers start_fanout_query compiles: the list of the
+    frames each was compiled from, and of the routers themselves."""
+    from speculare_pgcdc_spark.cdc import pipeline as pl
+
+    compiled, real = [], pl.router
+
+    def counting(subs):
+        compiled.append(real(subs))
+        return compiled[-1]
+
+    monkeypatch.setattr(pl, "router", counting)
+    return compiled
+
+
+def test_watch_compiles_router_once_per_registry_change(
+    spark, tmp_path, monkeypatch
+):
+    """A watch of three batches with one subscribe between batches 2
+    and 3: a steady batch builds neither the subscriptions frame nor
+    the router, and the registry change is routed from the very next
+    batch. The new subscriber receives batch 3 only."""
+    from speculare_pgcdc_spark import engine as engine_mod
+    from speculare_pgcdc_spark.engine import Engine
+    from speculare_pgcdc_spark.streaming.fanout import read_outbox
+
+    compiled = _count_router(monkeypatch)
+    frames, real_df = [], engine_mod.subscriptions_df
+    monkeypatch.setattr(
+        engine_mod, "subscriptions_df",
+        lambda *a: frames.append(real_df(*a)) or frames[-1],
+    )
+    feed, out = str(tmp_path / "feed"), str(tmp_path / "out")
+    os.makedirs(feed)
+    eng = Engine(spark=spark, tables=FEED_TABLES)
+    eng.subscribe(1, "insert:events_a")
+    q = eng.watch(feed, out, str(tmp_path / "ckpt"), exactly_once=True)
+    builds = []
+    try:
+        for i in range(3):
+            if i == 2:
+                eng.subscribe(2, "*:events_a")
+            # publish whole: the file source skips dot files
+            tmp = f"{feed}/.f{i}"
+            with open(tmp, "w") as f:
+                f.write(json.dumps(
+                    _wal2json_line("insert", "events_a", ["id"], [i])
+                ) + "\n")
+            os.utime(tmp, (1_700_000_000 + i, 1_700_000_000 + i))
+            os.replace(tmp, f"{feed}/f{i}.json")
+            q.processAllAvailable()
+            builds.append((len(frames), len(compiled)))
+    finally:
+        q.stop()
+    assert builds == [(1, 1), (1, 1), (2, 2)]
+    ids = lambda sid: [  # noqa: E731
+        json.loads(ln)["columnvalues"][0] for ln in read_outbox(out, sid)
+    ]
+    assert ids(1) == [0, 1, 2]
+    assert ids(2) == [2]
+    assert os.listdir(f"{out}/2") == ["batch-2.jsonl"]
+
+
+def test_watch_join_path_compiles_once(spark, tmp_path, monkeypatch):
+    """A registry over LOOKUP_INLINE_MAX_ROWS routes through the
+    broadcast join: a watch over three batches pays the registry's
+    sizing collect once, not once per batch, and every batch's outbox
+    equals the literal path's."""
+    from speculare_pgcdc_spark.cdc import pipeline as pl
+    from speculare_pgcdc_spark.engine import Engine
+    from speculare_pgcdc_spark.plans import plan_string
+
+    feed = str(tmp_path / "feed")
+    _write_batches(feed, [
+        [_wal2json_line("insert", "events_a", ["id", "v"], [str(i), "x"]),
+         _wal2json_line("update", "events_a", ["id", "v"], [str(i), "y"]),
+         _wal2json_line("delete", "events_b", ["id"], [str(i)])]
+        for i in range(3)
+    ])
+    probe = parse_wal2json(spark.createDataFrame(
+        [(json.dumps(_wal2json_line("insert", "events_a", ["id"], ["1"])),)],
+        "payload string",
+    )).withColumnRenamed("table", "table_name")
+
+    def run(name, bound):
+        monkeypatch.setattr(pl, "LOOKUP_INLINE_MAX_ROWS", bound)
+        compiled = _count_router(monkeypatch)
+        eng = Engine(spark=spark, tables=FEED_TABLES)
+        eng.subscribe(1, "insert:events_a")
+        eng.subscribe(2, "*:events_a:id.eq.1")
+        eng.subscribe(3, "delete,update:events_b")
+        out = tmp_path / name
+        q = eng.watch(feed, str(out), str(tmp_path / f"ckpt-{name}"),
+                      exactly_once=True, available_now=True)
+        try:
+            q.awaitTermination(120)
+        finally:
+            q.stop()
+        monkeypatch.undo()
+        assert len(compiled) == 1
+        literal = "explode(transform(filter(" in plan_string(
+            compiled[0](probe))
+        assert literal == (bound > 1)
+        return {
+            (d.name, b.name): b.read_text()
+            for d in out.iterdir() for b in d.iterdir()
+        }
+
+    join = run("join", 1)
+    assert join == run("literal", pl.LOOKUP_INLINE_MAX_ROWS)
+    assert {b for _, b in join} == {
+        "batch-0.jsonl", "batch-1.jsonl", "batch-2.jsonl"}
+    assert {d for d, _ in join} == {"1", "2", "3"}
+
+
 def test_wal_poll_source_end_to_end(spark, tmp_path):
     """R1-R7 realized as a Python Data Source: poll-with-cursor source
     feeds the CDC pipeline; new rows appear in later microbatches; the
